@@ -17,6 +17,7 @@ Hash-sensitive design choices:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 # importable regardless of the harness's working directory
@@ -1432,6 +1433,7 @@ def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency; the heavy tail (a part in MANY orders) lands on the
     downstream (src,dst) distinct exchange exactly as before."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    # relies on NOT NULL l_orderkey: NULL keys would form one basket; the old self-join dropped them
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("_ps")
     )
@@ -14577,386 +14579,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_revenue_by_region": q02_revenue_by_region,
-        "q03_top_orders": q03_top_orders,
-        "q04_priority_semijoin": q04_priority_semijoin,
-        "q05_customers_no_orders": q05_customers_no_orders,
-        "q06_revenue_filter": q06_revenue_filter,
-        "q07_topk_parts_per_brand": q07_topk_parts_per_brand,
-        "q08_setops_nations": q08_setops_nations,
-        "q09_rollup_lineitem": q09_rollup_lineitem,
-        "q10_distinct_customers": q10_distinct_customers,
-        "q11_events_daily": q11_events_daily,
-        "q12_events_json": q12_events_json,
-        "q13_part_type_stats": q13_part_type_stats,
-        "q14_asof_click_purchase": q14_asof_click_purchase,
-        "q15_acctbal_above_nation_avg": q15_acctbal_above_nation_avg,
-        "q16_cube_orders": q16_cube_orders,
-        "q17_running_totals": q17_running_totals,
-        "q18_range_join_bands": q18_range_join_bands,
-        "q19_disjunctive_pred_join": q19_disjunctive_pred_join,
-        "q20_exact_dedup": q20_exact_dedup,
-        "q21_ngram_jaccard_pairs": q21_ngram_jaccard_pairs,
-        "q22_minhash_signatures": q22_minhash_signatures,
-        "q23_minhash_lsh_pairs": q23_minhash_lsh_pairs,
-        "q24_cosine_topk": q24_cosine_topk,
-        "q25_embedding_neardup": q25_embedding_neardup,
-        "q26_text_quality_by_lang": q26_text_quality_by_lang,
-        "q27_lang_guess_counts": q27_lang_guess_counts,
-        "q28_fingerprint_dedup": q28_fingerprint_dedup,
-        "q29_tumbling_windows": q29_tumbling_windows,
-        "q30_sliding_windows": q30_sliding_windows,
-        "q31_session_counts": q31_session_counts,
-        "q32_binary_bytes_by_source": q32_binary_bytes_by_source,
-        "q33_simhash_fingerprints": q33_simhash_fingerprints,
-        "q34_token_counts": q34_token_counts,
-        "q35_chargram_fingerprint": q35_chargram_fingerprint,
-        "q36_lsh_cosine_topk": q36_lsh_cosine_topk,
-        "q37_simhash_neardup": q37_simhash_neardup,
-        "q38_approx_distinct_users": q38_approx_distinct_users,
-        "q39_pivot_linestatus": q39_pivot_linestatus,
-        "q40_quantiles": q40_quantiles,
-        "q41_corr_stats": q41_corr_stats,
-        "q42_multimodal_features": q42_multimodal_features,
-        "q43_embedding_component_stats": q43_embedding_component_stats,
-        "q44_frame_sample_counts": q44_frame_sample_counts,
-        "q45_dedup_clusters": q45_dedup_clusters,
-        "q46_winnowing_fingerprints": q46_winnowing_fingerprints,
-        "q47_winnow_overlap_pairs": q47_winnow_overlap_pairs,
-        "q48_ivf_cosine_topk": q48_ivf_cosine_topk,
-        "q49_curation_funnel": q49_curation_funnel,
-        "q50_session_durations": q50_session_durations,
-        "q51_stratified_sample": q51_stratified_sample,
-        "q52_tfidf_top_terms": q52_tfidf_top_terms,
-        "q53_lone_late_supplier": q53_lone_late_supplier,
-        "q54_full_outer_reconcile": q54_full_outer_reconcile,
-        "q55_extreme_customer_per_nation": q55_extreme_customer_per_nation,
-        "q56_moving_avg_range_frame": q56_moving_avg_range_frame,
-        "q57_grouping_sets": q57_grouping_sets,
-        "q58_chunked_docs": q58_chunked_docs,
-        "q59_sql_scalar_subquery": q59_sql_scalar_subquery,
-        "q60_distribution_windows": q60_distribution_windows,
-        "q61_schema_evolution_union": q61_schema_evolution_union,
-        "q62_repetition_scores": q62_repetition_scores,
-        "q63_date_spine_densify": q63_date_spine_densify,
-        "q64_unpivot_part_metrics": q64_unpivot_part_metrics,
-        "q65_kmeans_update_step": q65_kmeans_update_step,
-        "q66_order_count_distribution": q66_order_count_distribution,
-        "q67_small_quantity_revenue": q67_small_quantity_revenue,
-        "q68_rich_inactive_customers": q68_rich_inactive_customers,
-        "q69_excess_inventory_shippers": q69_excess_inventory_shippers,
-        "q70_bm25_search": q70_bm25_search,
-        "q71_pmi_collocations": q71_pmi_collocations,
-        "q72_part_pagerank": q72_part_pagerank,
-        "q73_correlated_avg_subquery": q73_correlated_avg_subquery,
-        "q74_variant_props": q74_variant_props,
-        "q75_quality_gate": q75_quality_gate,
-        "q76_binational_volume": q76_binational_volume,
-        "q77_market_share": q77_market_share,
-        "q78_frame_navigation": q78_frame_navigation,
-        "q79_vector_hof_stats": q79_vector_hof_stats,
-        "q80_event_funnel": q80_event_funnel,
-        "q81_trimmed_mean_prices": q81_trimmed_mean_prices,
-        "q82_fuzzy_name_pairs": q82_fuzzy_name_pairs,
-        "q83_profile_orders": q83_profile_orders,
-        "q84_snapshot_diff": q84_snapshot_diff,
-        "q85_lateral_top_line": q85_lateral_top_line,
-        "q86_multiset_setops": q86_multiset_setops,
-        "q87_null_safe_join": q87_null_safe_join,
-        "q88_revenue_share": q88_revenue_share,
-        "q89_returned_item_customers": q89_returned_item_customers,
-        "q90_shipmode_priority": q90_shipmode_priority,
-        "q91_local_supplier_volume": q91_local_supplier_volume,
-        "q92_try_arithmetic": q92_try_arithmetic,
-        "q93_decimal_exact_revenue": q93_decimal_exact_revenue,
-        "q94_status_count_map": q94_status_count_map,
-        "q95_top_customer_roster": q95_top_customer_roster,
-        "q96_array_set_ops": q96_array_set_ops,
-        "q97_temporal_functions": q97_temporal_functions,
-        "q98_forward_fill": q98_forward_fill,
-        "q99_mad_outliers": q99_mad_outliers,
-        "q100_cohort_retention": q100_cohort_retention,
-        "q101_dataset_split": q101_dataset_split,
-        "q102_decontamination": q102_decontamination,
-        "q103_weighted_allocation": q103_weighted_allocation,
-        "q104_semantic_dedup": q104_semantic_dedup,
-        "q105_fk_audit": q105_fk_audit,
-        "q106_price_histogram": q106_price_histogram,
-        "q107_scd2_priority_history": q107_scd2_priority_history,
-        "q108_embedding_quantization": q108_embedding_quantization,
-        "q109_hll_union_users": q109_hll_union_users,
-        "q110_binned_range_join": q110_binned_range_join,
-        "q111_promo_revenue_share": q111_promo_revenue_share,
-        "q112_top_supplier": q112_top_supplier,
-        "q113_big_orders": q113_big_orders,
-        "q114_unigram_logprob": q114_unigram_logprob,
-        "q115_sequence_packing": q115_sequence_packing,
-        "q116_key_skew_profile": q116_key_skew_profile,
-        "q117_mom_revenue_growth": q117_mom_revenue_growth,
-        "q118_status_transitions": q118_status_transitions,
-        "q119_copurchase_lift": q119_copurchase_lift,
-        "q120_lsh_multitable_topk": q120_lsh_multitable_topk,
-        "q121_dup_ngram_fraction": q121_dup_ngram_fraction,
-        "q122_gopher_quality_rules": q122_gopher_quality_rules,
-        "q123_top_bigrams_per_lang": q123_top_bigrams_per_lang,
-        "q124_split_leakage": q124_split_leakage,
-        "q125_price_moments": q125_price_moments,
-        "q126_chunk_dedup": q126_chunk_dedup,
-        "q127_perplexity_buckets": q127_perplexity_buckets,
-        "q128_domain_caps": q128_domain_caps,
-        "q129_token_budget_mix": q129_token_budget_mix,
-        "q130_product_profit": q130_product_profit,
-        "q131_pq_recon_error": q131_pq_recon_error,
-        "q132_pq_adc_topk": q132_pq_adc_topk,
-        "q133_partition_completeness": q133_partition_completeness,
-        "q134_part_supplier_stats": q134_part_supplier_stats,
-        "q135_cumulative_distinct_users": q135_cumulative_distinct_users,
-        "q136_weighted_median": q136_weighted_median,
-        "q137_brand_triangles": q137_brand_triangles,
-        "q138_split_drift": q138_split_drift,
-        "q139_winsorized_stats": q139_winsorized_stats,
-        "q140_grouping_sets": q140_grouping_sets,
-        "q141_merged_intervals": q141_merged_intervals,
-        "q142_brand_mode_type": q142_brand_mode_type,
-        "q143_event_entropy": q143_event_entropy,
-        "q144_revenue_trend": q144_revenue_trend,
-        "q145_attribution": q145_attribution,
-        "q146_rolling_7d_users": q146_rolling_7d_users,
-        "q147_interpolate_gaps": q147_interpolate_gaps,
-        "q148_price_position": q148_price_position,
-        "q149_consensus_pairs": q149_consensus_pairs,
-        "q150_recursive_reach": q150_recursive_reach,
-        "q151_quality_model": q151_quality_model,
-        "q152_random_projection": q152_random_projection,
-        "q153_notin_null_semantics": q153_notin_null_semantics,
-        "q154_event_anomaly_zscore": q154_event_anomaly_zscore,
-        "q155_lang_margin": q155_lang_margin,
-        "q156_merge_changeset": q156_merge_changeset,
-        "q157_packing_capacity_sweep": q157_packing_capacity_sweep,
-        "q158_prefix_filter_jaccard": q158_prefix_filter_jaccard,
-        "q159_embedding_covariance": q159_embedding_covariance,
-        "q160_mahalanobis_outliers": q160_mahalanobis_outliers,
-        "q161_ivf_list_balance": q161_ivf_list_balance,
-        "q162_bitmap_distinct_users": q162_bitmap_distinct_users,
-        "q163_interval_join_batch_twin": q163_interval_join_batch_twin,
-        "q164_events_since_purchase": q164_events_since_purchase,
-        "q165_zipf_slope": q165_zipf_slope,
-        "q166_vocab_overlap": q166_vocab_overlap,
-        "q167_two_stage_rerank": q167_two_stage_rerank,
-        "q168_salted_agg_equivalence": q168_salted_agg_equivalence,
-        "q169_dominant_component": q169_dominant_component,
-        "q170_quantile_binning": q170_quantile_binning,
-        "q171_weekly_churn": q171_weekly_churn,
-        "q172_decayed_engagement": q172_decayed_engagement,
-        "q173_capped_running_balance": q173_capped_running_balance,
-        "q174_top_session_paths": q174_top_session_paths,
-        "q175_ivf_recall_audit": q175_ivf_recall_audit,
-        "q176_above_nation_p90": q176_above_nation_p90,
-        "q177_token_concentration": q177_token_concentration,
-        "q178_click_abandonment": q178_click_abandonment,
-        "q179_value_range_frame": q179_value_range_frame,
-        "q180_revenue_bridge": q180_revenue_bridge,
-        "q181_weighted_sample": q181_weighted_sample,
-        "q182_rank_with_ties": q182_rank_with_ties,
-        "q183_filtered_aggregates": q183_filtered_aggregates,
-        "q184_tokenizer_fertility": q184_tokenizer_fertility,
-        "q185_trigram_search": q185_trigram_search,
-        "q186_pareto_skyline": q186_pareto_skyline,
-        "q187_struct_in_subquery": q187_struct_in_subquery,
-        "q188_minhash_estimate_error": q188_minhash_estimate_error,
-        "q189_nearest_event_join": q189_nearest_event_join,
-        "q190_largest_remainder": q190_largest_remainder,
-        "q191_width_bucket_histogram": q191_width_bucket_histogram,
-        "q192_psi_drift": q192_psi_drift,
-        "q193_degree_distribution": q193_degree_distribution,
-        "q194_star_components": q194_star_components,
-        "q195_power_iteration_pca": q195_power_iteration_pca,
-        "q196_hierarchy_share": q196_hierarchy_share,
-        "q197_longest_streak": q197_longest_streak,
-        "q198_cluster_survivorship": q198_cluster_survivorship,
-        "q199_dedup_method_yield": q199_dedup_method_yield,
-        "q200_catalog_rowcounts": q200_catalog_rowcounts,
-        "q201_window_aligned_conversion": q201_window_aligned_conversion,
-        "q202_cluster_size_distribution": q202_cluster_size_distribution,
-        "q203_banding_sensitivity": q203_banding_sensitivity,
-        "q204_pareto_concentration": q204_pareto_concentration,
-        "q205_null_aggregate_semantics": q205_null_aggregate_semantics,
-        "q206_group_quantiles_scalable": q206_group_quantiles_scalable,
-        "q207_approx_decile_audit": q207_approx_decile_audit,
-        "q208_rag_chunking": q208_rag_chunking,
-        "q209_mixture_weights": q209_mixture_weights,
-        "q210_ngram_decontamination": q210_ngram_decontamination,
-        "q211_centroid_confusion": q211_centroid_confusion,
-        "q212_containment_pairs": q212_containment_pairs,
-        "q213_spearman_length_ttr": q213_spearman_length_ttr,
-        "q214_ks_drift": q214_ks_drift,
-        "q215_vocab_gini": q215_vocab_gini,
-        "q216_pii_redaction_audit": q216_pii_redaction_audit,
-        "q217_shard_assignment": q217_shard_assignment,
-        "q218_embedding_outliers": q218_embedding_outliers,
-        "q219_dsir_importance": q219_dsir_importance,
-        "q220_scalable_row_number": q220_scalable_row_number,
-        "q221_decayed_engagement": q221_decayed_engagement,
-        "q222_brand_price_regression": q222_brand_price_regression,
-        "q223_symspell_name_pairs": q223_symspell_name_pairs,
-        "q224_segment_nation_mi": q224_segment_nation_mi,
-        "q225_benford_audit": q225_benford_audit,
-        "q226_event_transition_matrix": q226_event_transition_matrix,
-        "q227_heavy_hitter_tokens": q227_heavy_hitter_tokens,
-        "q228_incremental_lsh_dedup": q228_incremental_lsh_dedup,
-        "q229_logreg_gradient": q229_logreg_gradient,
-        "q230_welch_ab_test": q230_welch_ab_test,
-        "q231_twap_by_type": q231_twap_by_type,
-        "q232_cusum_changepoint": q232_cusum_changepoint,
-        "q233_feature_hashing": q233_feature_hashing,
-        "q234_roc_auc_daily": q234_roc_auc_daily,
-        "q235_calibration_ece": q235_calibration_ece,
-        "q236_bfs_reach": q236_bfs_reach,
-        "q237_kaplan_meier": q237_kaplan_meier,
-        "q238_acf_daily_orders": q238_acf_daily_orders,
-        "q239_qq_decile_drift": q239_qq_decile_drift,
-        "q240_neyman_allocation": q240_neyman_allocation,
-        "q241_seasonal_dow_index": q241_seasonal_dow_index,
-        "q242_robust_trend": q242_robust_trend,
-        "q243_best_split_stump": q243_best_split_stump,
-        "q244_gain_lift_table": q244_gain_lift_table,
-        "q245_fellegi_sunter": q245_fellegi_sunter,
-        "q246_conformal_intervals": q246_conformal_intervals,
-        "q247_simpson_audit": q247_simpson_audit,
-        "q248_graph_modularity": q248_graph_modularity,
-        "q249_kcore_peel": q249_kcore_peel,
-        "q250_backtest_folds": q250_backtest_folds,
-        "q251_hits_bipartite": q251_hits_bipartite,
-        "q252_label_propagation": q252_label_propagation,
-        "q253_degree_assortativity": q253_degree_assortativity,
-        "q254_readability_proxy": q254_readability_proxy,
-        "q255_doc_token_entropy": q255_doc_token_entropy,
-        "q256_classifier_eval": q256_classifier_eval,
-        "q257_time_to_conversion": q257_time_to_conversion,
-        "q258_burstiness": q258_burstiness,
-        "q259_feature_ig_ranking": q259_feature_ig_ranking,
-        "q260_negative_sampling": q260_negative_sampling,
-        "q261_map_hof_token_stats": q261_map_hof_token_stats,
-        "q262_file_provenance": q262_file_provenance,
-        "q263_table_checksums": q263_table_checksums,
-        "q264_referential_integrity": q264_referential_integrity,
-        "q265_bpe_pair_counts": q265_bpe_pair_counts,
-        "q266_poisson_bootstrap_ci": q266_poisson_bootstrap_ci,
-        "q267_adamic_adar": q267_adamic_adar,
-        "q268_zorder_pruning_audit": q268_zorder_pruning_audit,
-        "q269_nb_token_logodds": q269_nb_token_logodds,
-        "q270_rrf_fusion": q270_rrf_fusion,
-        "q271_ndcg_mrr": q271_ndcg_mrr,
-        "q272_holt_linear": q272_holt_linear,
-        "q273_ann_knn_eval": q273_ann_knn_eval,
-        "q274_cdc_chunking": q274_cdc_chunking,
-        "q275_bloom_semijoin_audit": q275_bloom_semijoin_audit,
-        "q276_watermark_lateness_audit": q276_watermark_lateness_audit,
-        "q277_ucb1_arm_scores": q277_ucb1_arm_scores,
-        "q278_diff_in_diff": q278_diff_in_diff,
-        "q279_sparse_cosine_pairs": q279_sparse_cosine_pairs,
-        "q280_rfm_segments": q280_rfm_segments,
-        "q281_column_stats_collection": q281_column_stats_collection,
-        "q282_ab_power_analysis": q282_ab_power_analysis,
-        "q283_dq_scorecard": q283_dq_scorecard,
-        "q284_topk_plus_other": q284_topk_plus_other,
-        "q285_hist2d_grouping_sets": q285_hist2d_grouping_sets,
-        "q286_wilson_ranking": q286_wilson_ranking,
-        "q287_forecast_accuracy": q287_forecast_accuracy,
-        "q288_late_dim_unknown_member": q288_late_dim_unknown_member,
-        "q289_partial_agg_merge": q289_partial_agg_merge,
-        "q290_median_ci_order_stats": q290_median_ci_order_stats,
-        "q291_target_encoding_loo": q291_target_encoding_loo,
-        "q292_stream_state_sizing": q292_stream_state_sizing,
-        "q293_srm_guardrail": q293_srm_guardrail,
-        "q294_schema_contract_audit": q294_schema_contract_audit,
-        "q295_cbo_estimation_audit": q295_cbo_estimation_audit,
-        "q296_audience_overlap": q296_audience_overlap,
-        "q297_k_anonymity_audit": q297_k_anonymity_audit,
-        "q298_dp_noisy_counts": q298_dp_noisy_counts,
-        "q299_lsh_scurve_planner": q299_lsh_scurve_planner,
-        "q300_feature_store_materialization": q300_feature_store_materialization,
-        "q301_dataset_card": q301_dataset_card,
-        "q302_hard_negative_mining": q302_hard_negative_mining,
-        "q303_dedup_method_overlap": q303_dedup_method_overlap,
-        "q304_seasonal_adjusted_anomalies": q304_seasonal_adjusted_anomalies,
-        "q305_decile_migration": q305_decile_migration,
-        "q306_cuped_adjustment": q306_cuped_adjustment,
-        "q307_ipw_treatment_effect": q307_ipw_treatment_effect,
-        "q308_l_diversity_audit": q308_l_diversity_audit,
-        "q309_blocking_quality_audit": q309_blocking_quality_audit,
-        "q310_bigram_backoff_logprob": q310_bigram_backoff_logprob,
-        "q311_ann_hubness_audit": q311_ann_hubness_audit,
-        "q312_attribution_model_compare": q312_attribution_model_compare,
-        "q313_mmr_diversified_topk": q313_mmr_diversified_topk,
-        "q314_obf_sequential_audit": q314_obf_sequential_audit,
-        "q315_ecod_outliers": q315_ecod_outliers,
-        "q316_partial_topk_merge_audit": q316_partial_topk_merge_audit,
-        "q317_fd_discovery_audit": q317_fd_discovery_audit,
-        "q318_quantile_normalization": q318_quantile_normalization,
-        "q319_mann_whitney_by_type": q319_mann_whitney_by_type,
-        "q320_equi_depth_histogram_audit": q320_equi_depth_histogram_audit,
-        "q321_markov_next_event_accuracy": q321_markov_next_event_accuracy,
-        "q322_ngram_novelty_rate": q322_ngram_novelty_rate,
-        "q323_boilerplate_ngrams": q323_boilerplate_ngrams,
-        "q324_weighted_jaccard_pairs": q324_weighted_jaccard_pairs,
-        "q325_hodges_lehmann_shift": q325_hodges_lehmann_shift,
-        "q326_meta_analysis": q326_meta_analysis,
-        "q327_mutual_knn_rate": q327_mutual_knn_rate,
-        "q328_countmin_audit": q328_countmin_audit,
-        "q329_overdispersion_index": q329_overdispersion_index,
-        "q330_dedup_threshold_pr_curve": q330_dedup_threshold_pr_curve,
-        "q331_item_item_cf": q331_item_item_cf,
-        "q332_t_closeness_audit": q332_t_closeness_audit,
-        "q333_importance_weight_ess": q333_importance_weight_ess,
-        "q334_clustering_coefficient": q334_clustering_coefficient,
-        "q335_knapsack_data_selection": q335_knapsack_data_selection,
-        "q336_source_distribution_similarity": q336_source_distribution_similarity,
-        "q337_temporal_motifs": q337_temporal_motifs,
-        "q338_ols_residual_outliers": q338_ols_residual_outliers,
-        "q339_transition_entropy": q339_transition_entropy,
-        "q340_bh_fdr_audit": q340_bh_fdr_audit,
-        "q341_shard_rebalance_audit": q341_shard_rebalance_audit,
-        "q342_ttl_cache_hit_audit": q342_ttl_cache_hit_audit,
-        "q343_competing_risks_cif": q343_competing_risks_cif,
-        "q344_retention_decay_fit": q344_retention_decay_fit,
-        "q345_moore_lewis_selection": q345_moore_lewis_selection,
-        "q346_error_retry_rate": q346_error_retry_rate,
-        "q347_window_funnel_levels": q347_window_funnel_levels,
-        "q348_seasonality_strength": q348_seasonality_strength,
-        "q349_partition_layout_planner": q349_partition_layout_planner,
-        "q350_encoding_planner": q350_encoding_planner,
-        "q351_peak_detection": q351_peak_detection,
-        "q352_variance_reduction_methods": q352_variance_reduction_methods,
-        "q353_cf_holdout_hitrate": q353_cf_holdout_hitrate,
-        "q354_bpe_merge_steps": q354_bpe_merge_steps,
-        "q355_three_itemset_rules": q355_three_itemset_rules,
-        "q356_growth_accounting": q356_growth_accounting,
-        "q357_conversion_regression_detector": q357_conversion_regression_detector,
-        "q358_depth_conversion_monotonicity": q358_depth_conversion_monotonicity,
-        "q359_ewma_control_chart": q359_ewma_control_chart,
-        "q360_sample_fidelity_audit": q360_sample_fidelity_audit,
-        "q361_kendall_tau_daily": q361_kendall_tau_daily,
-        "q362_hill_tail_index": q362_hill_tail_index,
-        "q363_rolling_correlation": q363_rolling_correlation,
-        "q364_bayes_ab_normal_approx": q364_bayes_ab_normal_approx,
-        "q365_rec_novelty_coverage": q365_rec_novelty_coverage,
-        "q366_dedup_storage_savings": q366_dedup_storage_savings,
-        "q367_cohort_ltv_curve": q367_cohort_ltv_curve,
-        "q368_ljung_box_residuals": q368_ljung_box_residuals,
-        "q369_pinball_quantile_backtest": q369_pinball_quantile_backtest,
-        "q370_ranker_agreement": q370_ranker_agreement,
-        "q371_bloom_size_planner": q371_bloom_size_planner,
-        "q372_erasure_impact_audit": q372_erasure_impact_audit,
-        "q373_price_indices": q373_price_indices,
-        "q374_peak_concurrency": q374_peak_concurrency,
-        "q375_order_reconciliation": q375_order_reconciliation,
-        "q376_entry_bounce_rate": q376_entry_bounce_rate,
-        "q377_capture_recapture": q377_capture_recapture,
-        "q378_asof_feature_matrix": q378_asof_feature_matrix,
-    }
+    """Every module-level ``q<NNN>_...`` query function, in query-number order."""
+    found = (
+        (int(m.group(1)), name, fn)
+        for name, fn in globals().items()
+        if callable(fn) and (m := re.fullmatch(r"q(\d+)_\w+", name))
+    )
+    return {name: fn for _, name, fn in sorted(found)}
 
 
 # --- oracle SQL builders (kept in sync with the library operators) -----------

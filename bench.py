@@ -102,30 +102,60 @@ MASS_MOVER_GATE = 25
 QUIET_START_GATE = 4.0
 QUIET_START_MAX_WAIT = 720.0
 
+#: compact stdout line: at most COMPACT_BUDGET chars (only the tail of
+#: stdout is kept by its reader). The committed prior's stable key prefix
+#: may fill at most STABLE_SHARE of the room left for per-query entries, so
+#: the current slowest queries outside that prefix always get the rest.
+COMPACT_BUDGET = 1700
+STABLE_SHARE = 0.75
+
 
 def _load_prior() -> tuple[dict, str]:
     """Committed artifact of record: HEAD's BENCH.json (full document, so
     callers can read both per-query medians and the emitted compact-line
     key set), overridable via SPARK_GRAFT_BENCH_PRIOR for demonstration
-    runs. Returns ({}, source) when no prior exists (first run)."""
+    runs. Returns ({}, source) when no prior exists (first run).
+
+    A malformed prior must not lose a finished run: `queries` is always a
+    dict of numbers and `compact_keys` a list of names in the result,
+    anything else reads as empty."""
     import subprocess
 
     override = os.environ.get("SPARK_GRAFT_BENCH_PRIOR")
     if override:
         try:
             with open(override) as f:
-                return json.load(f), override
+                doc, src = json.load(f), override
         except (OSError, ValueError):
             return {}, f"unreadable:{override}"
-    try:
-        out = subprocess.run(
-            ["git", "show", "HEAD:BENCH.json"],
-            capture_output=True, text=True, check=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        ).stdout
-        return json.loads(out), "git:HEAD:BENCH.json"
-    except Exception:  # noqa: BLE001 - no git / no committed artifact yet
-        return {}, "none"
+    else:
+        try:
+            out = subprocess.run(
+                ["git", "show", "HEAD:BENCH.json"],
+                capture_output=True, text=True, check=True,
+                cwd=os.path.dirname(os.path.abspath(__file__)),
+            ).stdout
+            doc, src = json.loads(out), "git:HEAD:BENCH.json"
+        except Exception:  # noqa: BLE001 - no git / no committed artifact yet
+            return {}, "none"
+    if not isinstance(doc, dict):
+        return {}, src
+    q, keys = doc.get("queries"), doc.get("compact_keys")
+    q = q if isinstance(q, dict) else {}
+    doc["queries"] = {k: v for k, v in q.items() if isinstance(v, (int, float))}
+    doc["compact_keys"] = [k for k in keys if isinstance(k, str)] if isinstance(keys, list) else []
+    return doc, src
+
+
+def _stable_keys(timings: dict[str, float], prior_doc: dict) -> list[str]:
+    """The prior's emitted compact-line keys still present in this run, in
+    the prior's order. A prior without `compact_keys` emitted its slowest
+    ~40 queries, so that prefix reproduces the set it emitted."""
+    prior_keys = prior_doc.get("compact_keys")
+    if not prior_keys:
+        pq = prior_doc.get("queries", {})
+        prior_keys = sorted(pq, key=pq.get, reverse=True)[:40]
+    return [k for k in prior_keys if k in timings]
 
 
 def _compact_fill_order(
@@ -137,27 +167,37 @@ def _compact_fill_order(
     an unchanged 378-query surface, turning its per-query diff into a
     losers' bracket).
 
-    Order: every key the COMMITTED prior emitted in ITS compact line
-    (still present in this run), in the prior's order, THEN the current
+    Order: the prior's stable keys (`_stable_keys`), THEN the current
     run's remaining queries slowest-first. The budget-limited greedy fill
-    downstream therefore keeps the prior's key set intact before admitting
-    new entries — the driver's common set stops churning while genuinely
-    new slow queries still surface. Priors that predate the
-    `compact_keys` field fall back to the prior's slowest-first order,
-    which reproduces what its compact line emitted."""
-    prior_keys = prior_doc.get("compact_keys")
-    if not prior_keys:
-        # prior predates the field: its compact line emitted its slowest
-        # ~40 entries, so that prefix reproduces the set the driver saw
-        pq = prior_doc.get("queries", {})
-        prior_keys = sorted(pq, key=pq.get, reverse=True)[:40]
-    stable = [k for k in prior_keys if k in timings]
+    (`_fill_compact`) therefore keeps the prior's key set intact before
+    admitting new entries — the compared key set stops churning while
+    genuinely new slow queries still surface."""
+    stable = _stable_keys(timings, prior_doc)
+    kept = set(stable)
     rest = sorted(
-        (k for k in timings if k not in set(stable)),
-        key=timings.get,
-        reverse=True,
+        (k for k in timings if k not in kept), key=timings.get, reverse=True
     )
     return stable + rest
+
+
+def _fill_compact(
+    compact: dict, timings: dict[str, float], prior_doc: dict
+) -> None:
+    """Greedy-fill ``compact["queries"]`` in `_compact_fill_order` within
+    COMPACT_BUDGET chars, the stable prefix within STABLE_SHARE of them."""
+    order = _compact_fill_order(timings, prior_doc)
+    n_stable = len(_stable_keys(timings, prior_doc))
+    base = len(json.dumps(compact))
+    stable_cap = base + STABLE_SHARE * (COMPACT_BUDGET - base)
+    for names, cap in (
+        (order[:n_stable], stable_cap),
+        (order[n_stable:], COMPACT_BUDGET),
+    ):
+        for name in names:
+            compact["queries"][name] = timings[name]
+            if len(json.dumps(compact)) > cap:
+                del compact["queries"][name]
+                break
 
 
 def _wait_quiet_start(
@@ -277,7 +317,7 @@ def main() -> None:
     # at completion, before the post-run load snapshot so `load` still
     # brackets everything timed.
     prior_doc, prior_src = _load_prior()
-    prior = prior_doc.get("queries", {}) if isinstance(prior_doc, dict) else {}
+    prior = prior_doc.get("queries", {})
     movers: dict[str, dict] = {}
     flagged = _flag_movers(timings, prior)
     started_loaded = load_pre[0] >= LOAD_GATE
@@ -350,11 +390,12 @@ def main() -> None:
     # parse (BENCH_r01-r04 all recorded "parsed": null). So a second,
     # compact line is emitted LAST — same contract fields, per-query map
     # trimmed to fit the tail budget. r14 (verdict item 2): the fill order
-    # is KEY-STABLE — the committed prior's emitted keys first, then
-    # current slowest — so the driver's round-over-round per-query diff
-    # compares a fixed set instead of churning with the weather; the
-    # emitted key set is recorded in the full artifact as `compact_keys`
-    # (the next run's stable prefix). Full timings stay in BENCH.json.
+    # is KEY-STABLE — the committed prior's emitted keys first (capped at
+    # STABLE_SHARE of the room), then current slowest — so the
+    # round-over-round per-query diff compares a mostly fixed set instead
+    # of churning with the weather; the emitted key set is recorded in the
+    # full artifact as `compact_keys` (the next run's stable prefix). Full
+    # timings stay in BENCH.json.
     compact = {
         "metric": result["metric"],
         "value": result["value"],
@@ -377,12 +418,7 @@ def main() -> None:
         "queries_full": "BENCH_partial.json" if only else "BENCH.json",
         "queries": {},
     }
-    budget = 1700
-    for name in _compact_fill_order(timings, prior_doc if isinstance(prior_doc, dict) else {}):
-        compact["queries"][name] = timings[name]
-        if len(json.dumps(compact)) > budget:
-            del compact["queries"][name]
-            break
+    _fill_compact(compact, timings, prior_doc)
     result["compact_keys"] = list(compact["queries"])
     # Spark/Ivy banners share stdout with the JSON line, so the driver's
     # tail-capture can miss it; also persist a clean machine-readable copy.

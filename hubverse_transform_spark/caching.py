@@ -30,8 +30,6 @@ keep plain persist and document the trade instead.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -39,16 +37,7 @@ def compute_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Materialize ``result`` once (eager localCheckpoint: one AQE-planned
     job during which the ``cached`` persisted intermediates fill and serve
     every plan branch), then unpersist each intermediate. Returns the
-    checkpointed result frame.
-
-    ``SPARK_GRAFT_EXPLAIN_LAZY`` (diagnostic only): return ``result``
-    un-checkpointed so plan-dump tooling can capture the operator DAG
-    behind the checkpoint boundary (InMemoryTableScan branches show the
-    persist reuse). The intermediates stay registered and are NOT
-    released — acceptable only in a dump process that exits; never set
-    for bench, oracle, or test runs."""
-    if os.environ.get("SPARK_GRAFT_EXPLAIN_LAZY"):
-        return result
+    checkpointed result frame."""
     out = result.localCheckpoint(eager=True)
     for df in cached:
         df.unpersist()

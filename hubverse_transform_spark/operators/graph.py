@@ -63,10 +63,8 @@ def pagerank(
     executing. Short runs (the declared 3-iteration q72 path) never hit a
     truncation point, so their plan and bit-exact output are unchanged.
 
-    ``symmetric=True`` (r14, guide §1.2/§2.4) declares that the caller's
-    edge list is symmetrized (every (a,b) has (b,a); no NULL endpoints) —
-    callers like q72 build exactly that. The declaration licenses three
-    exact plan cuts the general path cannot make:
+    ``symmetric=True`` (r14, guide §1.2/§2.4) licenses three exact plan
+    cuts the general path cannot make (see Args for the contract):
 
     - the node set is just the adjacency keys (``distinct(src)`` ==
       ``distinct(src ∪ dst)``), deleting the union+distinct exchange;
@@ -86,6 +84,13 @@ def pagerank(
     futures and the nodes-join barriers — on a graph whose rank vector is
     a few hundred KB; the 8-core cell matched the 32-core cell because the
     job CHAIN, not compute, was the wall.
+
+    Args:
+        symmetric: the caller guarantees the edge list is symmetrized —
+            every ``(a, b)`` has its ``(b, a)`` — and has no NULL
+            endpoints (q72's basket edges are built that way). Ranks then
+            equal the general path's exactly. The contract is NOT checked:
+            an edge list that breaks it yields wrong ranks with no error.
     """
     if symmetric:
         return _pagerank_symmetric(

@@ -37,37 +37,23 @@ def get_spark(app_name: str = "hubverse-transform-spark", cpus: int | None = Non
         # core. AQE's byte heuristic is blind to CPU-per-row; a lower floor
         # keeps such stages parallel at ANY scale and is inert where
         # partitions are large (the 100 TB case: data stages dwarf 64k, the
-        # floor never binds). Byte-based, not core-count-based — env override
-        # for cluster tuning. Measured r13: heavy-16 subset 83.7→68.3 s.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # floor never binds). Measured r13: heavy-16 subset 83.7→68.3 s.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # join strategy (r13, guide §3.1/§9): let the planner pick shuffled-
         # hash over sort-merge when its size conditions hold (skips two
         # sorts), and let AQE rewrite SMJ→SHJ at runtime when every post-
         # shuffle partition is under 64 MB (default 0 = never). Spills
         # gracefully beyond that; 64 MB/partition is cluster-safe. Measured
         # r13: heavy-16 subset 68.3→58.5 s stacked on the AQE floor.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # driver-side py4j overhead (r13, guide §1/§4 — the Python boundary
         # includes the DRIVER): PySpark 4's DataFrame-debugging decorator
         # wraps every DataFrame/Column API call in ~5 py4j round trips
         # (getActiveSession + conf.get + origin set/clear) plus a Python
         # stack walk, purely to enrich error messages with call sites. On a
         # 378-query surface that is minutes of driver latency per bench run.
-        # Off by default here; flip on when debugging a query.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # --- broadcast: dims (region/nation/supplier at test SF) go map-side ---
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- Arrow for pandas UDF / toPandas exchange ---

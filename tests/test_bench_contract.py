@@ -168,3 +168,47 @@ def test_committed_bench_json_carries_compact_keys():
     load = data["load"]
     assert "quiet_wait_sec" in load and "loadavg_first" in load
     assert load["quiet_gate"] > 0
+
+
+def _empty_compact() -> dict:
+    return {"metric": "total_query_wall_sec", "value": 1.0, "queries": {}}
+
+
+def test_malformed_prior_still_builds_the_compact_line(tmp_path, monkeypatch):
+    """A prior whose `queries` is a list and whose `compact_keys` is not a
+    list reads as empty, so the compact line still builds (slowest-first)
+    instead of crashing after all timing is done."""
+    p = tmp_path / "prior.json"
+    p.write_text(json.dumps({"queries": ["qa", 1.0], "compact_keys": "qa"}))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PRIOR", str(p))
+    doc, src = bench_mod._load_prior()
+    assert src == str(p)
+    assert doc["queries"] == {} and doc["compact_keys"] == []
+    timings = {"qa": 1.0, "qb": 3.0}
+    assert bench_mod._flag_movers(timings, doc["queries"]) == []
+    compact = _empty_compact()
+    bench_mod._fill_compact(compact, timings, doc)
+    assert list(compact["queries"]) == ["qb", "qa"]
+    # malformed entries inside well-typed fields are dropped one by one
+    p.write_text(json.dumps(
+        {"queries": {"qa": "slow", "qb": 2.0}, "compact_keys": ["qa", ["qb"]]}
+    ))
+    doc, _ = bench_mod._load_prior()
+    assert doc["queries"] == {"qb": 2.0} and doc["compact_keys"] == ["qa"]
+    # a prior document that is not an object at all reads as no prior
+    p.write_text(json.dumps([1, 2, 3]))
+    assert bench_mod._load_prior() == ({}, str(p))
+
+
+def test_compact_line_surfaces_new_slow_query_past_a_full_prior():
+    """A stable prefix long enough to fill the whole budget is capped, so a
+    new slow query not in the prior still appears in the compact line."""
+    stable = [f"q{i:03d}_stable_query_with_a_long_name" for i in range(200)]
+    timings = {k: 1.0 for k in stable} | {"q999_new_slow_query": 99.0}
+    compact = _empty_compact()
+    bench_mod._fill_compact(compact, timings, {"compact_keys": stable})
+    assert "q999_new_slow_query" in compact["queries"]
+    assert len(json.dumps(compact)) <= bench_mod.COMPACT_BUDGET
+    emitted = list(compact["queries"])
+    # the stable prefix still leads, in the prior's order
+    assert emitted[:-1] == stable[: len(emitted) - 1]

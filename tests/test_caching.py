@@ -1,5 +1,4 @@
-"""compute_release contract: eager checkpoint + deterministic release,
-and the r13 diagnostic escape hatch used by plan-dump tooling."""
+"""compute_release contract: eager checkpoint + deterministic release."""
 
 from __future__ import annotations
 
@@ -24,21 +23,3 @@ def test_compute_release_checkpoints_and_unpersists(spark):
     # values intact
     assert released.count() == 10
 
-
-def test_explain_lazy_escape_returns_uncheckpointed_plan(spark, monkeypatch):
-    """SPARK_GRAFT_EXPLAIN_LAZY (diagnostic only): dump tooling needs the
-    operator DAG behind the checkpoint boundary; with the flag set the
-    result comes back lazy (no LogicalRDD) and the persists deliberately
-    stay registered for the dump process to inspect."""
-    monkeypatch.setenv("SPARK_GRAFT_EXPLAIN_LAZY", "1")
-    base = spark.range(50).withColumn("v", F.col("id") + 1).persist()
-    out = base.agg(F.sum("v").alias("s"))
-    lazy = compute_release(out, base)
-    assert not _is_checkpoint_scan(lazy)
-    assert base.storageLevel.useMemory is True  # NOT released under the flag
-    base.unpersist()
-    monkeypatch.delenv("SPARK_GRAFT_EXPLAIN_LAZY")
-    # flag off: normal behaviour restored
-    base2 = spark.range(5).persist()
-    out2 = compute_release(base2.agg(F.count(F.lit(1)).alias("n")), base2)
-    assert _is_checkpoint_scan(out2)

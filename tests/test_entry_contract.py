@@ -24,6 +24,16 @@ def test_rows_only_queries_are_the_known_set():
     }
 
 
+def test_queries_are_the_module_functions_in_number_order():
+    # the surface is frozen at 378; queries() is derived from the module's
+    # q<NNN>_ functions, so a new or renamed function changes it
+    qs = entry.queries()
+    assert len(qs) == 378
+    assert all(fn is getattr(entry, name) for name, fn in qs.items())
+    nums = [int(name[1:].split("_")[0]) for name in qs]
+    assert nums == sorted(nums) and len(set(nums)) == len(nums)
+
+
 def test_query_names_are_well_formed_and_documented():
     import re
 

@@ -194,3 +194,24 @@ def test_bfs_hops_seed_dedup_and_multi_seed(spark):
     got = {r.node: r.hop for r in out.collect()}
     assert got == {1: 0, 3: 0, 2: 1, 4: 2}
     assert out.count() == 4
+
+
+def test_pagerank_symmetric_fast_path_equals_general_path(spark):
+    """The ``symmetric=True`` fast path only deletes operators that are
+    inert on a symmetrized, NULL-free edge list, so its ranks must equal
+    the general path's exactly."""
+    import random
+
+    rng = random.Random(20261017)
+    pairs = set()
+    while len(pairs) < 150:
+        a, b = rng.randrange(60), rng.randrange(60)
+        if a != b:
+            pairs.add((min(a, b), max(a, b)))
+    sym = sorted(pairs | {(b, a) for a, b in pairs})
+    df = spark.createDataFrame(sym, "src long, dst long").repartition(4)
+
+    general = sorted(pagerank(df, iterations=3).collect())
+    fast = sorted(pagerank(df, iterations=3, symmetric=True).collect())
+    assert len(general) == len({n for e in pairs for n in e})
+    assert fast == general

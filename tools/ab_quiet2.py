@@ -1,6 +1,7 @@
 """Order-balanced quiet-window interleaved A/B driver.
 
-Like tools/ab_quiet.py but alternates WITHIN-pair order (A,B / B,A / ...)
+Waits for the 1-min loadavg to drop below the gate before each pair of
+tools/ab_bench.py passes, and alternates WITHIN-pair order (A,B / B,A / ...)
 so the systematic bias of one tree always getting the post-gate quiet slot
 — visible in evidence/ab_r13c_exp{2,3}.jsonl where the second pass of each
 pair consistently ran into rising load — cancels across pairs.

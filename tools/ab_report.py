@@ -1,10 +1,10 @@
-"""Summarize an interleaved A/B bench log (tools/ab_drive.sh output) into a
+"""Summarize an interleaved A/B bench log (tools/ab_quiet2.py output) into a
 per-query attribution table: for each query, the min and median across ALL
-A-passes vs ALL B-passes, the A/B ratio of minima (the load-robust
-estimator — minima approximate the unloaded cost), and the recorded r9/r10
-numbers for context.
+A-passes vs ALL B-passes, and the B/A ratio of minima (the load-robust
+estimator — minima approximate the unloaded cost). B is the tree whose
+passes are labelled ``head``; every other label counts as A.
 
-Usage: python tools/ab_report.py .scratch/ab_r9_r10.jsonl
+Usage: python tools/ab_report.py evidence/ab_r9_r10.jsonl
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ def main() -> None:
     for p in passes:
         print("  " + p)
     print()
-    print(f"{'query':42s} {'A=r9tip min/med':>18s} {'B=head min/med':>18s} {'B/A min':>8s}")
+    print(f"{'query':42s} {'A min/med':>18s} {'B=head min/med':>18s} {'B/A min':>8s}")
     tot_a = tot_b = 0.0
     for q in sorted(a_runs):
         amin, amed = min(a_runs[q]), statistics.median(a_runs[q])
@@ -40,7 +40,7 @@ def main() -> None:
         tot_a += amin
         tot_b += bmin
         print(f"{q:42s} {amin:8.2f}/{amed:8.2f} {bmin:8.2f}/{bmed:8.2f} {bmin / amin:8.2f}")
-    print(f"\nsum of minima: A(r9tip) {tot_a:.2f}s  B(head) {tot_b:.2f}s  ratio {tot_b / tot_a:.3f}")
+    print(f"\nsum of minima: A {tot_a:.2f}s  B(head) {tot_b:.2f}s  ratio {tot_b / tot_a:.3f}")
 
 
 if __name__ == "__main__":

@@ -96,8 +96,8 @@ def backfill_hub_dataset(
     """Reprocess every raw submission file in one distributed pass.
 
     One schema-enforced glob read (files must share a header layout per
-    format), provenance derived per-row from the source file name, one
-    partitioned write. Returns the transformed DataFrame (already written).
+    format; checked for CSV), provenance derived per-row from the source file
+    name, one partitioned write. Returns the transformed DataFrame (written).
     """
     tasks = read_tasks(hub_path)
     if not tasks:

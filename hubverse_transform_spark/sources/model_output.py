@@ -45,9 +45,10 @@ def read_model_output_csv(spark: SparkSession, path: str, schema: StructType) ->
 
     Spark's ``nullValue`` is single-valued, so the file is read all-string
     (quotes already stripped by the parser — covering the quoted ""/" " cases)
-    and nulls + casts are applied as one projection.
+    and nulls + casts are applied as one projection; a glob read fails on a
+    header unlike the first file's (``enforceSchema=false``).
     """
-    raw = spark.read.option("header", "true").csv(path)  # all columns -> string
+    raw = spark.read.option("header", "true").option("enforceSchema", "false").csv(path)
     types = {f.name: f.dataType for f in schema.fields}
     cols = []
     for name in raw.columns:

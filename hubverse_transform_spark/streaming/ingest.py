@@ -1,65 +1,71 @@
-"""Event-driven ingestion parity (Layer A: A13/A14).
+"""Event-driven ingestion parity (Layer A: A13).
 
 The reference's "streaming" is an AWS Lambda fired per S3 object event
 (ref faas/lambda_function.py:22-62): ObjectCreated -> transform+write,
 ObjectRemoved -> delete, anything else skipped; UserWarnings are swallowed,
 other exceptions logged and suppressed (a failed file just never appears).
 
-Spark mapping:
+Spark mapping, both under that one failure policy (``_lambda_failure_policy``):
 - :func:`dispatch_object_event` — the driver-side event consumer with the
   exact Lambda dispatch semantics (deletes have no streaming-source analog,
   SURVEY.md §7.5);
-- :func:`stream_model_outputs` — Structured Streaming file source over a
-  ``raw/`` directory + ``foreachBatch`` running the transform per discovered
-  file; new files are picked up incrementally with checkpointed progress.
-  This is also the bulk-backfill path (A14): point it at a directory with
-  history and every file streams through once, no per-object metadata
-  touching needed.
+- :func:`stream_model_outputs` — a Structured Streaming file listing over a
+  ``raw/`` directory + ``foreachBatch`` running the per-file transform; new
+  files are picked up incrementally with checkpointed progress.
+
+Bulk backfill (A14) is one glob read instead: ``sinks.backfill_hub_dataset``.
 """
 
 from __future__ import annotations
 
 import logging
 import posixpath
+from contextlib import contextmanager
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from hubverse_transform_spark.paths import SUPPORTED_EXTENSIONS
 from hubverse_transform_spark.transform import ModelOutputPipeline
 
 logger = logging.getLogger(__name__)
 
+# the binaryFile source's fixed schema, which a stream source must declare
+_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+
+@contextmanager
+def _lambda_failure_policy(what: str):
+    """A UserWarning (invalid input) is logged as a warning and the file
+    skipped; any other exception is logged and suppressed."""
+    try:
+        yield
+    except UserWarning as w:
+        logger.warning(f"Skipping invalid file {what}: {w}")
+    except Exception:
+        logger.exception(f"Error handling {what}")
+
 
 def dispatch_object_event(spark: SparkSession, event: dict) -> str | None:
-    """Route one S3-style object event; returns the written/deleted URI.
+    """Route one S3-style object event; returns the written URI, else None.
 
     Mirrors ref faas/lambda_function.py:22-62 exactly: URL-unquoted key,
-    substring dispatch on event name, UserWarning swallowed, other
-    exceptions logged and suppressed.
+    substring dispatch on event name, the Lambda's failure policy.
     """
-    try:
+    with _lambda_failure_policy("object event"):
         record = event["Records"][0]
         event_name = record["eventName"]
         bucket = record["s3"]["bucket"]["name"]
         key = unquote(record["s3"]["object"]["key"], encoding="utf-8")
 
         if "objectcreated" in event_name.lower():
-            mo = ModelOutputPipeline.from_s3(spark, bucket, key)
-            return mo.add_model_output()
+            return ModelOutputPipeline.from_s3(spark, bucket, key).add_model_output()
         if "objectremoved" in event_name.lower():
-            mo = ModelOutputPipeline.from_s3(spark, bucket, key)
-            mo.delete_model_output()
-            return None
-        logger.info(f"Event {event_name} is not supported; skipping")
-        return None
-    except UserWarning as w:
-        logger.warning(f"Skipping invalid file: {w}")
-        return None
-    except Exception:
-        logger.exception("Error handling object event")
-        return None
+            ModelOutputPipeline.from_s3(spark, bucket, key).delete_model_output()
+        else:
+            logger.info(f"Event {event_name} is not supported; skipping")
+    return None
 
 
 def stream_model_outputs(
@@ -69,43 +75,36 @@ def stream_model_outputs(
     raw_dir: str = "raw",
     output_dir: str = "out",
     checkpoint_dir: str,
-    file_format: str = "csv",
 ) -> StreamingQuery:
     """Incrementally transform every model-output file landing under
     ``<hub_path>/<raw_dir>/``.
 
-    File-source streaming tracks seen files in the checkpoint; foreachBatch
-    extracts the distinct source file names of each micro-batch and runs the
-    per-file pipeline (idempotent by deterministic output name, so replays
-    after failure are safe — effectively exactly-once at the sink).
+    Discovery lists files and never reads them: the ``binaryFile`` source
+    with only ``path`` selected leaves ``content`` unread, so a micro-batch
+    is one row per file. The glob keeps every supported extension
+    (``*.{csv,parquet,pqt}``) and each file's reader follows from its suffix,
+    so one stream lands CSV and Parquet alike. The checkpoint tracks seen
+    files; foreachBatch runs the per-file pipeline (idempotent by
+    deterministic output name, so replays after failure are safe —
+    effectively exactly-once at the sink).
     """
-    src_glob = posixpath.join(str(hub_path), raw_dir)
-
+    extensions = ",".join(ext.removeprefix(".") for ext in SUPPORTED_EXTENSIONS)
     stream = (
-        spark.readStream.format("text")
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
         .option("maxFilesPerTrigger", 16)
-        .option("pathGlobFilter", "*.csv" if file_format == "csv" else "*.parquet")
-        .load(src_glob)
-        .select(F.input_file_name().alias("_file"))
+        .option("pathGlobFilter", f"*.{{{extensions}}}")
+        .load(posixpath.join(hub_path, raw_dir))
+        .select("path")
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        files = [r["_file"] for r in batch_df.select("_file").distinct().collect()]
-        for uri in sorted(files):
-            rel = uri.removeprefix("file:")
-            name = posixpath.basename(rel)
-            try:
-                mo = ModelOutputPipeline(
-                    spark,
-                    str(hub_path),
-                    posixpath.join(raw_dir, name),
-                    posixpath.join(str(hub_path), output_dir),
-                )
-                mo.add_model_output()
-            except UserWarning as w:
-                logger.warning(f"Skipping invalid file {name}: {w}")
-            except Exception:
-                logger.exception(f"Error transforming {name}")
+        for uri in sorted(r["path"] for r in batch_df.collect()):
+            name = posixpath.basename(uri)
+            with _lambda_failure_policy(name):
+                mo_path = posixpath.join(raw_dir, name)
+                out = posixpath.join(hub_path, output_dir)
+                ModelOutputPipeline(spark, hub_path, mo_path, out).add_model_output()
 
     return (
         stream.writeStream.foreachBatch(process_batch)

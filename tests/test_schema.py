@@ -1,6 +1,7 @@
 """Schema-compiler tests (SURVEY.md §1.3 typing policy) — pure driver-side."""
 
 import json
+from pathlib import Path
 
 from pyspark.sql.types import DateType, DoubleType, LongType, StringType, StructType
 
@@ -36,6 +37,22 @@ def test_hub_schema_real_reference_config():
     with open("/root/reference/test/integration/data/flu-metrocast/hub-config/tasks.json") as f:
         tasks = json.load(f)
     st = hub_schema(tasks)
+    types = {f.name: f.dataType for f in st.fields}
+    assert types["reference_date"] == DateType()
+    assert types["target_end_date"] == DateType()
+    assert types["horizon"] == LongType()
+    assert types["location"] == StringType()
+    assert types["output_type_id"] == StringType()
+    assert types["value"] == DoubleType()
+    assert types["round_id"] == DateType()  # from_variable: reference_date
+
+
+def test_hub_schema_flu_metrocast_shaped_config():
+    """Same assertions on an in-repo config of the flu-metrocast shape (two
+    model_tasks, date/int/string task ids, nine quantile levels), so the
+    check runs where the reference checkout is absent."""
+    path = Path(__file__).parent / "data" / "flu-metrocast-tasks.json"
+    st = hub_schema(json.loads(path.read_text()))
     types = {f.name: f.dataType for f in st.fields}
     assert types["reference_date"] == DateType()
     assert types["target_end_date"] == DateType()

@@ -62,6 +62,38 @@ def test_backfill_builds_partitioned_lake(spark, hub_dir: Path, csv_numeric_file
     assert one.count() == 6
 
 
+def test_backfill_rejects_reordered_csv_header(spark, hub_dir: Path, csv_numeric_file: Path):
+    """A submission whose header swaps two same-typed columns fails the
+    backfill instead of landing its values in each other's columns; the
+    per-file pipeline still lands it by column name."""
+    import csv
+    import io
+
+    import pytest
+
+    from hubverse_transform_spark.transform import ModelOutputPipeline
+
+    rows = list(csv.reader(io.StringIO(csv_numeric_file.read_text())))
+    swapped = io.StringIO()
+    writer = csv.writer(swapped, quoting=csv.QUOTE_ALL, lineterminator="\n")
+    writer.writerows([r[0], r[3], r[2], r[1], *r[4:]] for r in rows)  # target <-> location
+    (hub_dir / "raw" / "2024-08-01-teamxyz-model.csv").write_text(swapped.getvalue())
+
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        backfill_hub_dataset(spark, str(hub_dir), str(hub_dir / "lake"))
+
+    out = hub_dir / "out"
+    landed = {}
+    for name in (csv_numeric_file.name, "2024-08-01-teamxyz-model.csv"):
+        mo = ModelOutputPipeline(spark, str(hub_dir), f"raw/{name}", str(out))
+        df = spark.read.parquet(mo.add_model_output()).drop("round_id", "model_id")
+        landed[name] = sorted(df.select(*sorted(df.columns)).collect(), key=repr)
+    assert landed[csv_numeric_file.name] == landed["2024-08-01-teamxyz-model.csv"]
+    assert {r["target"] for r in landed[csv_numeric_file.name]} == {
+        "wk inc flu hosp", "wk flu hosp rate change",
+    }
+
+
 def test_bucketed_join_avoids_shuffle(spark, tmp_path: Path):
     import shutil
 

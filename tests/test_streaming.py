@@ -45,6 +45,44 @@ def test_invalid_file_skipped_not_fatal(spark, hub_dir: Path, csv_numeric_file: 
     assert not (hub_dir / "out" / "2024-07-07.parquet").exists()
 
 
+def test_drain_lists_files_without_reading_rows(spark, hub_dir: Path, csv_numeric_file: Path):
+    # discovery is a file listing: one input row per file, not per CSV line
+    for name in ("2024-08-01-teamxyz-model.csv", "2024-08-08-teamxyz-model.csv"):
+        (hub_dir / "raw" / name).write_text(csv_numeric_file.read_text())
+    q = stream_model_outputs(spark, str(hub_dir), checkpoint_dir=str(hub_dir / "ckpt"))
+    q.awaitTermination()
+    assert sum(p.numInputRows for p in q.recentProgress) == 3
+    assert len(list((hub_dir / "out").glob("*.parquet"))) == 3
+
+
+def test_one_stream_lands_csv_and_parquet(
+    spark, hub_dir: Path, csv_numeric_file: Path, parquet_empty_string_file: Path
+):
+    # the format follows each file's suffix; unsupported files are not listed
+    (hub_dir / "raw" / "2024-07-07-teamabc-notes.txt").write_text("not a submission")
+    q = stream_model_outputs(spark, str(hub_dir), checkpoint_dir=str(hub_dir / "ckpt"))
+    q.awaitTermination()
+    assert sorted(p.name for p in (hub_dir / "out").glob("*.parquet")) == [
+        "2024-07-07-teamabc-empty_strings.parquet",
+        "2024-07-07-teamabc-output_type_ids_numeric.parquet",
+    ]
+    rows = spark.read.parquet(str(hub_dir / "out" / "2024-07-07-teamabc-empty_strings.parquet"))
+    assert [r["location"] for r in rows.collect()] == ["", "02"]
+
+
+def test_dispatch_object_event_logs_and_suppresses(spark, caplog):
+    # same failure policy as the stream: a malformed event is logged, not raised
+    from hubverse_transform_spark.streaming.ingest import dispatch_object_event
+
+    restore = {"Records": [{"eventName": "ObjectRestore:Post",
+                            "s3": {"bucket": {"name": "b"}, "object": {"key": "raw/x.csv"}}}]}
+    with caplog.at_level("INFO", logger="hubverse_transform_spark.streaming.ingest"):
+        assert dispatch_object_event(spark, restore) is None
+        assert dispatch_object_event(spark, {"Records": []}) is None
+    assert [r.levelname for r in caplog.records] == ["INFO", "ERROR"]
+    assert "not supported" in caplog.records[0].getMessage()
+
+
 def test_tumbling_window_agg_streaming_with_watermark(spark, tmp_path: Path):
     src = tmp_path / "events_src"
     rows = [

@@ -4,10 +4,9 @@ Driver-side path logic: these operate on per-file scalars (one submission file
 per event), not on data, so they are plain Python feeding the distributed
 readers — exactly the split the reference makes (ref: model_output.py:136-261).
 
-When batch-processing *many* files at once (the backfill path, ref
-faas/lambda_retrigger_model_output_add.py), the same parse is expressed
-columnar over ``input_file_name()`` — see
-``hubverse_transform_spark.transform.with_provenance_from_filename``.
+:func:`submission_name` is the one rule for whether a file is a submission
+and what its ``round_id``/``model_id`` are: the per-file pipeline, the bulk
+backfill and the submission catalog all ask it.
 """
 
 from __future__ import annotations
@@ -19,7 +18,9 @@ from urllib.parse import quote
 
 _ROUND_ID_RE = re.compile(r"^\d{4}-\d{2}-\d{2}")
 
-SUPPORTED_EXTENSIONS = (".csv", ".parquet", ".pqt")
+CSV_EXTENSIONS = (".csv",)
+PARQUET_EXTENSIONS = (".parquet", ".pqt")
+SUPPORTED_EXTENSIONS = CSV_EXTENSIONS + PARQUET_EXTENSIONS
 
 
 def parse_file(file_name: str) -> dict[str, str]:
@@ -113,3 +114,13 @@ def validate_extension(path: str) -> None:
         raise UserWarning("Input file has no extension")
     if suffix not in SUPPORTED_EXTENSIONS:
         raise UserWarning(f"Input file type {suffix} is not supported")
+
+
+def submission_name(path: str) -> tuple[str, str, str]:
+    """``(file_name, round_id, model_id)`` of an unencoded ``path``, its base
+    name sanitized as the pipeline sanitizes its input URI: UserWarning for an
+    unsupported extension, ValueError for a name ``parse_file`` rejects."""
+    name = sanitize_uri(posixpath.basename(path))
+    validate_extension(name)
+    parts = parse_file(file_stem(name))
+    return file_stem(name), parts["round_id"], parts["model_id"]

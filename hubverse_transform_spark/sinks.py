@@ -8,8 +8,8 @@ Spark-native shape is:
 - a Hive-partitioned lake keyed by the two provenance columns the transform
   appends — ``model_id``/``round_id`` — so downstream queries prune partitions
   on the dominant access axes (SURVEY.md §7 "scale posture");
-- backfill as ONE glob read over every raw submission with provenance parsed
-  columnar from the file name (``input_file_name``), instead of a per-object
+- backfill as ONE glob read over every raw submission, each file named by
+  the per-file rule (``paths.submission_name``) instead of a per-object
   driver loop — the scan parallelizes across the cluster and a million raw
   files are one job, not a million Lambda invocations.
 """
@@ -20,6 +20,7 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hubverse_transform_spark.paths import CSV_EXTENSIONS, PARQUET_EXTENSIONS
 from hubverse_transform_spark.schema import hub_schema
 from hubverse_transform_spark.sources.config import read_tasks
 from hubverse_transform_spark.sources.model_output import (
@@ -96,17 +97,18 @@ def backfill_hub_dataset(
     """Reprocess every raw submission file in one distributed pass.
 
     One schema-enforced glob read (files must share a header layout per
-    format; checked for CSV), provenance derived per-row from the source file
-    name, one partitioned write. Returns the transformed DataFrame (written).
+    format; checked for CSV), provenance as the per-file pipeline names each
+    file (a mis-named file is skipped with a warning), one partitioned write.
+    Returns the transformed DataFrame (written).
     """
     tasks = read_tasks(hub_path)
     if not tasks:
         raise FileNotFoundError(f"could not read tasks.json for hub_path={hub_path!r}")
     schema = hub_schema(tasks)
     glob = posixpath.join(str(hub_path), raw_dir, f"*.{file_format}")
-    if file_format == "csv":
+    if f".{file_format}" in CSV_EXTENSIONS:
         df = read_model_output_csv(spark, glob, schema)
-    elif file_format in ("parquet", "pqt"):
+    elif f".{file_format}" in PARQUET_EXTENSIONS:
         df = read_model_output_parquet(spark, glob, schema)
     else:
         raise ValueError(f"Unsupported backfill format {file_format!r}")

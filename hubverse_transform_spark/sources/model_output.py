@@ -27,15 +27,15 @@ from pyspark.sql.types import StringType, StructType
 
 from hubverse_transform_spark.functions.casts import cast_to
 from hubverse_transform_spark.functions.nulls import normalize_null_tokens
-from hubverse_transform_spark.paths import file_suffix
+from hubverse_transform_spark.paths import CSV_EXTENSIONS, PARQUET_EXTENSIONS, file_suffix
 
 
 def read_model_output(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Format-dispatching read (ref model_output.py:263-277)."""
-    suffix = file_suffix(path).lower()
-    if suffix == ".csv":
+    suffix = file_suffix(path)
+    if suffix in CSV_EXTENSIONS:
         return read_model_output_csv(spark, path, schema)
-    if suffix in (".parquet", ".pqt"):
+    if suffix in PARQUET_EXTENSIONS:
         return read_model_output_parquet(spark, path, schema)
     raise ValueError(f"Unsupported file type {suffix} for {path}")
 

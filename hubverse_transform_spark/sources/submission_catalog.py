@@ -13,9 +13,9 @@ be the slow path; content reads stay on Spark's native, vectorized CSV/
 Parquet readers (sources/model_output.py). The catalog is the small side.
 
 Scale shape: listing partitions are file-batches, so a million-object
-directory lists in parallel across executors; each task re-derives
-provenance with self-contained logic (no package import needed on the
-worker path).
+directory lists in parallel across executors; each task names its files with
+``paths.submission_name``, the per-file pipeline's own rule. Workers need the
+package importable: the DataSource classes are pickled by reference.
 """
 
 from __future__ import annotations
@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from hubverse_transform_spark.paths import file_suffix, submission_name
 
 CATALOG_SCHEMA = StructType(
     [
@@ -75,35 +77,17 @@ class SubmissionCatalogReader(DataSourceReader):
         return [_FileBatch(b) for b in batches] or [_FileBatch([])]
 
     def read(self, partition):
-        # self-contained: runs on executor Python workers that may not have
-        # the package importable; mirrors paths.parse_file (ref
-        # model_output.py:236-261) and the extension check (ref :112-122)
+        # valid exactly when the per-file pipeline would accept the file
         import os
-        import re
 
         for p in partition.paths:
+            try:
+                _, round_id, model_id = submission_name(p)
+            except (UserWarning, ValueError):
+                round_id = model_id = None
             name = os.path.basename(p)
-            stem, dot, ext = name.rpartition(".")
-            extension = ext.lower() if dot else None
-            base = stem if dot else name
-            m = re.match(r"^(\d{4}-\d{2}-\d{2})", base)
-            round_id = m.group(1) if m else None
-            model_id = None
-            if m:
-                rest = re.sub(r"^[-_]+", "", base[m.end() :]).strip()
-                model_id = rest or None
-            valid = bool(
-                extension in ("csv", "parquet", "pqt") and round_id and model_id
-            )
-            yield (
-                p,
-                name,
-                extension,
-                round_id,
-                model_id,
-                valid,
-                os.path.getsize(p),
-            )
+            extension = file_suffix(name).removeprefix(".") or None
+            yield (p, name, extension, round_id, model_id, round_id is not None, os.path.getsize(p))
 
 
 class SubmissionCatalogDataSource(DataSource):

@@ -12,27 +12,20 @@ action is the sink write.
 
 For BULK backfill (ref faas/lambda_retrigger_model_output_add.py re-fires one
 Lambda per object), the Spark-native form is one glob read over thousands of
-files with provenance parsed columnar from ``input_file_name()`` — see
-:func:`with_provenance_from_filename`; no per-file driver loop.
+files, each named by the per-file rule ``paths.submission_name`` — see
+:func:`with_provenance_from_filename`; no per-file driver loop over data.
 """
 
 from __future__ import annotations
 
 import logging
 import posixpath
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hubverse_transform_spark.paths import (
-    S3Route,
-    file_stem,
-    file_suffix,
-    parse_file,
-    route_s3_key,
-    sanitize_uri,
-    validate_extension,
-)
+from hubverse_transform_spark.paths import S3Route, route_s3_key, sanitize_uri, submission_name
 from hubverse_transform_spark.schema import hub_schema
 from hubverse_transform_spark.sources.config import read_tasks
 from hubverse_transform_spark.sources.model_output import read_model_output
@@ -52,17 +45,32 @@ def add_provenance_columns(df: DataFrame, round_id: str, model_id: str) -> DataF
 
 
 def with_provenance_from_filename(df: DataFrame) -> DataFrame:
-    """Columnar provenance for bulk/glob reads (A9 batch form, A14).
+    """Provenance for a read spanning many submission files (A9 batch form, A14).
 
-    Parses round_id/model_id from each row's source file name — the
-    distributed equivalent of per-file ``parse_file`` when one read spans many
-    submission files.
+    ``submission_name`` names each file of ``df.inputFiles()`` (metadata, no
+    job) as the per-file pipeline would; the per-file table is built on the
+    JVM side and broadcast-joined on ``input_file_name()``. A file the rule
+    rejects is logged and lands no rows, as its Lambda would; ValueError if
+    none passes.
     """
-    fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    stem = F.regexp_replace(fname, r"\.[A-Za-z0-9]+$", "")
-    round_id = F.regexp_extract(stem, r"^(\d{4}-\d{2}-\d{2})", 1)
-    model_id = F.trim(F.regexp_replace(stem, r"^\d{4}-\d{2}-\d{2}[-_]*", ""))
-    return df.withColumn("round_id", round_id).withColumn("model_id", model_id)
+    uris, files = df.inputFiles(), []
+    for uri in uris:
+        name = unquote(posixpath.basename(uri))
+        try:
+            _, round_id, model_id = submission_name(name)
+        except (UserWarning, ValueError) as exc:
+            logger.warning(f"Skipping mis-named file {name}: {exc}")
+            continue
+        files.append(F.struct(F.lit(uri), F.lit(round_id), F.lit(model_id)))
+    if not files:
+        raise ValueError(f"no submission file among {uris}")
+    names = df.sparkSession.range(1).select(F.inline(F.array(*files))).toDF("_file", "_round_id", "_model_id")
+    return (
+        df.withColumn("_file", F.input_file_name())
+        .join(F.broadcast(names), "_file")
+        .withColumns({"round_id": F.col("_round_id"), "model_id": F.col("_model_id")})
+        .drop("_file", "_round_id", "_model_id")
+    )
 
 
 class ModelOutputPipeline:
@@ -70,7 +78,7 @@ class ModelOutputPipeline:
 
     Construction mirrors ref ``__init__`` (model_output.py:65-128): sanitize
     paths, load tasks.json (missing config is fatal — FileNotFoundError),
-    validate the extension (UserWarning channel), parse the file name.
+    name the file with ``paths.submission_name`` (UserWarning / ValueError).
     """
 
     def __init__(self, spark: SparkSession, hub_path: str, mo_path: str, output_path: str):
@@ -83,13 +91,7 @@ class ModelOutputPipeline:
         if not self.tasks:
             raise FileNotFoundError(f"could not read tasks.json for hub_path={self.hub_path!r}")
 
-        self.file_name = file_stem(self.input_file)
-        self.file_type = file_suffix(self.input_file)
-        validate_extension(self.input_file)
-
-        parts = parse_file(self.file_name)
-        self.round_id = parts["round_id"]
-        self.model_id = parts["model_id"]
+        self.file_name, self.round_id, self.model_id = submission_name(str(mo_path))
 
     @classmethod
     def from_s3(

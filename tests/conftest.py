@@ -192,6 +192,19 @@ def csv_numeric_file(hub_dir: Path) -> Path:
     return p
 
 
+#: submission names every Layer-A path must treat alike: the first four need
+#: percent-encoding (or a ``_`` separator), the last three are mis-named
+SUBMISSION_NAME_CASES = [
+    "2024-07-14-team a.csv",
+    "2024-07-14_team-b.csv",
+    "2024-07-14-team+c.csv",
+    "2024-07-14-équipe.csv",
+    "2024-01-01-team-2024-01-01.csv",
+    "2024-01-01.csv",
+    "bad-team.csv",
+]
+
+
 # --- F2: CSV with mixed output_type_ids (12 rows -> 8 nulls) ----------------
 
 CSV_MIXED = """\

@@ -94,6 +94,63 @@ def test_backfill_rejects_reordered_csv_header(spark, hub_dir: Path, csv_numeric
     }
 
 
+def test_backfill_lands_what_the_per_file_pipeline_lands(
+    spark, hub_dir: Path, csv_numeric_file: Path, caplog
+):
+    """Backfill is the per-object Lambda re-fired over raw/ (A14): for every
+    file ModelOutputPipeline accepts, the lake holds its rows under the
+    pipeline's (model_id, round_id); a file the pipeline rejects lands no
+    rows and logs one warning."""
+    import logging
+    import os
+
+    import pytest
+
+    from hubverse_transform_spark.schema import hub_schema
+    from hubverse_transform_spark.sources.model_output import read_model_output
+    from hubverse_transform_spark.transform import ModelOutputPipeline
+    from tests.conftest import SUBMISSION_NAME_CASES
+
+    raw = hub_dir / "raw"
+    for name in SUBMISSION_NAME_CASES:
+        (raw / name).write_text(csv_numeric_file.read_text())
+    lake = hub_dir / "lake"
+    with caplog.at_level(logging.WARNING, logger="hubverse_transform_spark.transform"):
+        backfill_hub_dataset(spark, str(hub_dir), str(lake))
+
+    def rows(df):
+        out: dict = {}
+        for r in df.collect():
+            out.setdefault((r["model_id"], r["round_id"]), []).append(repr(sorted(r.asDict().items())))
+        return {k: sorted(v) for k, v in out.items()}
+
+    want, rejected = {}, []
+    for name in [csv_numeric_file.name, *SUBMISSION_NAME_CASES]:
+        try:
+            mo = ModelOutputPipeline(spark, str(hub_dir), f"raw/{name}", str(hub_dir / "out"))
+        except ValueError:
+            rejected.append(name)
+            continue
+        # the pipeline reads its percent-encoded input URI, which names no
+        # local file once encoding changed the name: read the file itself
+        # and apply the pipeline's own provenance stage
+        df = mo.add_columns(read_model_output(spark, str(raw / name), hub_schema(mo.tasks)))
+        want |= rows(df)
+    assert len(want) == 5 and len(rejected) == 3
+
+    for name in rejected:
+        assert sum(f" {name}:" in r.getMessage() for r in caplog.records) == 1, name
+    assert not any("__HIVE_DEFAULT_PARTITION__" in d for d, _, _ in os.walk(lake))
+    back = spark.read.parquet(str(lake)).withColumn("round_id", F.col("round_id").cast("string"))
+    assert rows(back) == want
+
+    (hub_dir / "misnamed").mkdir()
+    for name in rejected:
+        (raw / name).rename(hub_dir / "misnamed" / name)
+    with pytest.raises(ValueError, match="no submission file"):
+        backfill_hub_dataset(spark, str(hub_dir), str(lake), raw_dir="misnamed")
+
+
 def test_bucketed_join_avoids_shuffle(spark, tmp_path: Path):
     import shutil
 

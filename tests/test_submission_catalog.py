@@ -45,6 +45,29 @@ def test_submission_catalog_joins_with_pipeline(spark, tmp_path: Path):
     assert valid_paths == [str(raw / "2024-06-01-m1.csv")]
 
 
+def test_submission_catalog_agrees_with_per_file_path(spark, hub_dir: Path):
+    """The catalog's (round_id, model_id, valid) is what ModelOutputPipeline
+    yields for the same file, or (None, None, False) where it refuses it."""
+    from hubverse_transform_spark.transform import ModelOutputPipeline
+    from tests.conftest import SUBMISSION_NAME_CASES
+
+    names = [*SUBMISSION_NAME_CASES, "2024-07-14-team.CSV"]
+    for name in names:
+        (hub_dir / "raw" / name).write_text("a\n1\n")
+    want = {}
+    for name in names:
+        try:
+            mo = ModelOutputPipeline(spark, str(hub_dir), f"raw/{name}", str(hub_dir / "out"))
+            want[name] = (mo.round_id, mo.model_id, True)
+        except (UserWarning, ValueError):
+            want[name] = (None, None, False)
+    assert sum(v[2] for v in want.values()) == 4
+
+    register(spark)
+    df = spark.read.format("hubverse_submissions").load(str(hub_dir / "raw"))
+    assert {r.file_name: (r.round_id, r.model_id, r.valid) for r in df.collect()} == want
+
+
 def test_streaming_catalog_incremental_discovery(spark, tmp_path):
     """Two availableNow runs over one checkpoint: batch 2 emits only files
     added after batch 1. Runs under the DEFAULT offset mode — bounded

@@ -10,7 +10,7 @@ a constant-folded codegen expression, no UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: exact token set from ref model_output.py:270-273 — matched verbatim, NOT
@@ -21,18 +21,3 @@ NULL_TOKENS: tuple[str, ...] = ("na", "NA", "", " ", "null", "Null", "NaN", "nan
 def normalize_null_tokens(col: Column) -> Column:
     """Null out the reference's CSV null-token set in a string column."""
     return F.when(col.isin(*NULL_TOKENS), F.lit(None)).otherwise(col)
-
-
-def normalize_all_columns(df: DataFrame) -> DataFrame:
-    """Apply token normalization to every string column of ``df``.
-
-    Single ``select`` projection so Catalyst folds it into the scan stage.
-    """
-    return df.select(
-        *[
-            normalize_null_tokens(F.col(f.name)).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in df.schema.fields
-        ]
-    )

@@ -64,11 +64,6 @@ def content_hash_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def tokens_expr(text: Column) -> Column:
-    """Lowercased whitespace tokens."""
-    return F.split(F.lower(F.trim(text)), r"\s+")
-
-
 def shingle_ngrams(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of ``text`` as an array column.
 

@@ -64,15 +64,6 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _fake_decode(payload: bytes | None, modality: str) -> str:
-    """Deterministic stand-in for a real decode: stable digest of the bytes."""
-    import hashlib
-
-    if payload is None:
-        return "empty"
-    return f"{modality}:{hashlib.md5(payload).hexdigest()[:12]}"
-
-
 def decode_features(
     assets: DataFrame,
     *,

@@ -155,67 +155,3 @@ def per_group_cap(
         .filter(F.col("_rank") <= cap)
         .drop("_rank")
     )
-
-
-def dsir_log_weights(
-    df: DataFrame,
-    target_pred,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 1024,
-) -> DataFrame:
-    """DSIR-style importance weights [EXT] (Xie et al. 2023, "Data Selection
-    for Language Models via Importance Resampling"): score every document by
-    how much more likely its tokens are under a TARGET distribution (rows
-    matching ``target_pred``) than under the RAW corpus distribution, using
-    hashed unigram features — the standard cheap proxy for "select raw data
-    that looks like the target domain" before pretraining.
-
-    Both distributions are add-one-smoothed over ``num_buckets`` md5-hashed
-    buckets (cross-engine deterministic — no RNG, no engine hash). Per doc:
-    avg_token_logratio = (Σ_tokens ln(p_target(b)/p_raw(b))) / n_tokens —
-    length-normalized so long documents don't dominate the resampling key.
-
-    Scale shape: one token explode → bucket counts (B rows, broadcast back),
-    then the token stream joins the B-row ratio table map-side and folds per
-    document. Two data-sized hash aggregations, zero windows, zero UDFs; the
-    bucket table is O(num_buckets) regardless of corpus size.
-    """
-    toks = df.select(
-        F.col(id_col),
-        target_pred.alias("_is_target"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("_w"),
-    ).filter(F.col("_w") != "")
-    bucketed = toks.select(
-        id_col,
-        "_is_target",
-        (
-            F.conv(F.substring(F.md5("_w"), 1, 4), 16, 10).cast("long")
-            % num_buckets
-        ).alias("_b"),
-    )
-    counts = bucketed.groupBy("_b").agg(
-        F.count(F.lit(1)).alias("_r"),
-        F.count(F.when(F.col("_is_target"), 1)).alias("_t"),
-    )
-    totals = counts.agg(
-        F.sum("_r").alias("_R"), F.sum("_t").alias("_T")
-    )
-    ratios = counts.crossJoin(F.broadcast(totals)).select(
-        "_b",
-        (
-            F.log((F.col("_t") + 1.0) / (F.col("_T") + F.lit(float(num_buckets))))
-            - F.log((F.col("_r") + 1.0) / (F.col("_R") + F.lit(float(num_buckets))))
-        ).alias("_lr"),
-    )
-    return (
-        bucketed.join(F.broadcast(ratios), "_b")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            (F.sum("_lr") / F.count(F.lit(1))).alias("avg_token_logratio"),
-        )
-    )

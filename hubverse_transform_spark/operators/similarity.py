@@ -871,47 +871,3 @@ def hard_negative_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "rank")
     )
-
-
-def truncation_recall_audit(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_dims: int = 16,
-    k: int = 5,
-) -> DataFrame:
-    """Matryoshka-style truncation audit [EXT]: per query, how many of the
-    exact top-k cosine neighbors survive when vectors are truncated to the
-    first ``keep_dims`` components (the cheap-retrieval trade every
-    embedding pipeline weighs before storing short vectors).
-
-    Both rankings are exact brute force over the same broadcast query set;
-    the overlap joins two k-row-per-query frames on (query, neighbor) —
-    every post-scoring frame is bounded by |queries|·k, so the audit adds
-    no data-sized shuffle beyond the two scoring passes. Truncated vectors
-    are re-scored with plain cosine on the slice (equivalent to
-    renormalizing the prefix).
-    """
-    full = cosine_brute_force_topk(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=k
-    )
-    cut = lambda df: df.select(  # noqa: E731
-        F.col(id_col), F.slice(F.col(vec_col), 1, keep_dims).alias(vec_col)
-    )
-    trunc = cosine_brute_force_topk(
-        cut(corpus), cut(queries), id_col=id_col, vec_col=vec_col, k=k
-    )
-    hit = full.join(
-        trunc.select("query_id", "neighbor_id", F.lit(1).alias("_hit")),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return hit.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("preserved"),
-        F.round(
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))) / F.count(F.lit(1)), 6
-        ).alias("overlap_at_k"),
-    )

@@ -48,40 +48,6 @@ def annotate_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def corpus_quality_summary(df: DataFrame, text_col: str = "text", group_col: str = "lang") -> DataFrame:
-    """Per-group corpus statistics (the 'is this slice worth training on'
-    query): doc counts, token totals, mean quality."""
-    annotated = annotate_documents(df, text_col)
-    return (
-        annotated.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("ws_tokens").alias("total_tokens"),
-            # engine-stable half-up over exact-integer numerators (chars are
-            # ints; quality is a per-row round(x,4) output on the 1e-4 grid)
-            # — see __spark_entry__._half_up for the divergence class
-            (
-                F.floor(
-                    F.sum("char_count").cast("double") * 1e4
-                    / F.count(F.lit(1))
-                    + 0.5
-                )
-                / 1e4
-            ).alias("avg_chars"),
-            (
-                F.floor(
-                    F.sum(F.round(F.col("quality") * 10000).cast("long")).cast(
-                        "double"
-                    )
-                    / F.count(F.lit(1))
-                    + 0.5
-                )
-                / 1e4
-            ).alias("avg_quality"),
-        )
-    )
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -572,58 +538,6 @@ def perplexity_bucket_thresholds(
                 / F.lit(1e6)
             ).alias("avg_score"),
         )
-    )
-
-
-def char_entropy_stats(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "lang",
-    low: float = 2.0,
-    high: float = 6.0,
-) -> DataFrame:
-    """Per-document Shannon character entropy [EXT], summarized per group —
-    the classic gibberish screen: natural text sits in a band (~3.5-4.5
-    bits/char for English), while key-mash / base64 blobs spike high and
-    repeated-character padding collapses low. CCNet/RefinedWeb-family
-    pipelines gate on exactly this signal before anything model-based.
-
-    H(doc) = log2(n) - (Σ c_i·log2(c_i)) / n over per-character counts —
-    the algebraic form needs only Σ c·log2(c) and n, so the whole statistic
-    is two hash aggregations: explode characters → count per (doc, char) →
-    fold per doc. The (doc, char) frame is the data-sized shuffle (same
-    shape as every token explode in this module); nothing is per-row Python
-    and no window runs anywhere. Flags docs outside [low, high] bits/char.
-    """
-    chars = df.select(
-        F.col(id_col), F.col(group_col),
-        F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit("."), 0)
-        ).alias("_ch"),
-    )
-    per_char = chars.groupBy(id_col, group_col, "_ch").agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    per_doc = per_char.groupBy(id_col, group_col).agg(
-        F.sum("_c").alias("_n"),
-        F.sum(F.col("_c") * F.log2("_c")).alias("_clogc"),
-    ).select(
-        id_col,
-        group_col,
-        (F.log2("_n") - F.col("_clogc") / F.col("_n")).alias("_h"),
-    )
-    return per_doc.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        # half-safe: _h is log2-based Shannon entropy (irrational except
-        # degenerate docs) — a d=6 half-boundary hit has measure zero
-        F.round(F.avg("_h"), 6).alias("avg_entropy"),
-        F.round(F.min("_h"), 6).alias("min_entropy"),
-        F.round(F.max("_h"), 6).alias("max_entropy"),
-        F.count(F.when((F.col("_h") < low) | (F.col("_h") > high), 1)).alias(
-            "n_flagged"
-        ),
     )
 
 

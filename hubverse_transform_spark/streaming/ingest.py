@@ -27,12 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from hubverse_transform_spark.paths import SUPPORTED_EXTENSIONS
+from hubverse_transform_spark.sources.submission_catalog import BINARY_FILE_SCHEMA
 from hubverse_transform_spark.transform import ModelOutputPipeline
 
 logger = logging.getLogger(__name__)
-
-# the binaryFile source's fixed schema, which a stream source must declare
-_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
 
 @contextmanager
@@ -91,7 +89,7 @@ def stream_model_outputs(
     extensions = ",".join(ext.removeprefix(".") for ext in SUPPORTED_EXTENSIONS)
     stream = (
         spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
+        .schema(BINARY_FILE_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .option("pathGlobFilter", f"*.{{{extensions}}}")
         .load(posixpath.join(hub_path, raw_dir))

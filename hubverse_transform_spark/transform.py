@@ -114,9 +114,14 @@ class ModelOutputPipeline:
     # --- pipeline stages -------------------------------------------------
 
     def read_file(self) -> DataFrame:
-        """Schema-enforced read of the submission file (A1/A2)."""
+        """Schema-enforced read of the submission file (A1/A2).
+
+        Hadoop takes ``%XX`` literally, so the sanitized URI is decoded back
+        to the stripped path, as the reference's ``FileSystem.from_uri``
+        decodes it (ref model_output.py:97-103).
+        """
         schema = hub_schema(self.tasks)
-        return read_model_output(self.spark, self.input_file, schema)
+        return read_model_output(self.spark, unquote(self.input_file), schema)
 
     def add_columns(self, df: DataFrame) -> DataFrame:
         """Provenance columns from the parsed file name (A5)."""

@@ -106,8 +106,6 @@ def test_backfill_lands_what_the_per_file_pipeline_lands(
 
     import pytest
 
-    from hubverse_transform_spark.schema import hub_schema
-    from hubverse_transform_spark.sources.model_output import read_model_output
     from hubverse_transform_spark.transform import ModelOutputPipeline
     from tests.conftest import SUBMISSION_NAME_CASES
 
@@ -131,11 +129,7 @@ def test_backfill_lands_what_the_per_file_pipeline_lands(
         except ValueError:
             rejected.append(name)
             continue
-        # the pipeline reads its percent-encoded input URI, which names no
-        # local file once encoding changed the name: read the file itself
-        # and apply the pipeline's own provenance stage
-        df = mo.add_columns(read_model_output(spark, str(raw / name), hub_schema(mo.tasks)))
-        want |= rows(df)
+        want |= rows(mo.add_columns(mo.read_file()))
     assert len(want) == 5 and len(rejected) == 3
 
     for name in rejected:

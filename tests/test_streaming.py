@@ -70,6 +70,23 @@ def test_one_stream_lands_csv_and_parquet(
     assert [r["location"] for r in rows.collect()] == ["", "02"]
 
 
+def test_stream_lands_names_that_percent_encoding_changes(spark, hub_dir: Path):
+    # each accepted name lands under its sanitized stem, as its Lambda would
+    from tests.conftest import CSV_NUMERIC, SUBMISSION_NAME_CASES
+
+    for name in SUBMISSION_NAME_CASES:
+        (hub_dir / "raw" / name).write_text(CSV_NUMERIC)
+    q = stream_model_outputs(spark, str(hub_dir), checkpoint_dir=str(hub_dir / "ckpt"))
+    q.awaitTermination()
+    assert sorted(p.name for p in (hub_dir / "out").glob("*.parquet")) == [
+        "2024-07-14-%C3%A9quipe.parquet",
+        "2024-07-14-team%20a.parquet",
+        "2024-07-14-team%2Bc.parquet",
+        "2024-07-14_team-b.parquet",
+    ]
+    assert spark.read.parquet(str(hub_dir / "out")).count() == 4 * (len(CSV_NUMERIC.splitlines()) - 1)
+
+
 def test_dispatch_object_event_logs_and_suppresses(spark, caplog):
     # same failure policy as the stream: a malformed event is logged, not raised
     from hubverse_transform_spark.streaming.ingest import dispatch_object_event

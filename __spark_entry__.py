@@ -8216,8 +8216,8 @@ def q268_zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: file assignment is pure map-side arithmetic (the top
     bits of the cell code — no global sort, no window); zone maps are one
-    groupBy over layout×file (64 keys). This mirrors how
-    ``sinks.write_zordered`` lays files out, as an auditable query."""
+    groupBy over layout×file (64 keys) — the Morton file layout a
+    lakehouse optimizer writes, as an auditable query."""
     li = _t(spark, sf_dir, "lineitem").select(
         (F.col("l_partkey") % 16).alias("bx"), (F.col("l_suppkey") % 16).alias("by")
     )
@@ -9188,8 +9188,7 @@ def q289_partial_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: raw data is touched once (daily pre-agg); the fold runs
     over ≤|days| structs per series via the aggregate() HOF — pure JVM,
-    bounded state. Cites the same pattern as sinks' incremental matview
-    (streaming/matview.py)."""
+    bounded state."""
     ev = _t(spark, sf_dir, "events")
     day = (
         ev.groupBy("event_type", F.date_trunc("day", "ts").alias("_day"))

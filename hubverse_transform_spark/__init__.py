@@ -15,14 +15,19 @@ Layer A (reference parity):
     - ``paths``       filename parse / URI sanitize / S3 key routing
                       (ref model_output.py:136-261)
     - ``streaming``   event-driven ingest (ref faas/lambda_function.py:22-62)
+    - ``sinks``       partitioned hub lake + one-pass backfill
+                      (ref faas/lambda_retrigger_model_output_add.py)
 
-Layer B (extensions, not in the reference — SURVEY.md §2.3):
-    - ``operators``   joins/aggs/windows/top-k/set-ops, dedup family
-                      (exact, MinHash-LSH, SimHash, n-gram Jaccard, embedding),
-                      similarity search (brute-force + LSH-bucketed ANN),
-                      text analysis, multimodal column plumbing, as-of join
+Layer B (extensions, not in the reference — SURVEY.md §2.3), the library
+behind the query surface in ``__spark_entry__``:
+    - ``operators``   joins/aggs/windows/top-k/sampling, dedup family
+                      (content hash, MinHash-LSH, SimHash, n-gram Jaccard,
+                      winnowing, embedding), similarity search (brute-force,
+                      LSH, IVF), text analysis, multimodal decode, as-of join
     - ``functions``   column-level helpers (null-token normalization,
                       arrow-style casts, vector math, text metrics)
+    - ``streaming``   windowed aggregations and interval joins over events
+    - ``plans``       plan text for the dump tools, the curation funnel
 """
 
 from hubverse_transform_spark.session import get_spark

@@ -113,13 +113,6 @@ def chargram_min_fingerprint(text: Column, k: int = 8) -> Column:
     return F.coalesce(F.array_min(F.transform(grams, F.md5)), F.md5(norm))
 
 
-def doc_fingerprint(text: Column) -> Column:
-    """Deterministic content fingerprint: md5 over whitespace-collapsed,
-    lowercased text. md5 (not xxhash64) so a SQL oracle can reproduce it."""
-    normalized = F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
-    return F.md5(normalized)
-
-
 #: pattern set for PII scrubbing; each entry is (label, java-regex). The
 #: patterns deliberately stick to syntax shared by Java regex and RE2 so a
 #: SQL engine can replay the scrub (no backrefs, no possessive quantifiers).

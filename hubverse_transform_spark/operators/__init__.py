@@ -1,15 +1,15 @@
 """Layer-B analytic + LLM-pipeline operators [EXT] (SURVEY.md §2.3).
 
 Not present in the reference (it has no joins/aggregations/windows anywhere —
-verified by grep, SURVEY.md §2.2); mandated by the driver's north star. Each
-operator is designed shuffle-first: broadcast the small side, partial-aggregate
+verified by grep, SURVEY.md §2.2). Every operator here is reached from a
+query, the bench or a tool (tests/test_reachability.py holds that).
+Each is designed shuffle-first: broadcast the small side, partial-aggregate
 before exchange, never collect to the driver.
 """
 
 from hubverse_transform_spark.operators.asof import asof_join
 from hubverse_transform_spark.operators.dedup import (
     content_hash_dedup,
-    exact_dedup,
     minhash_lsh_pairs,
     minhash_signature,
     ngram_containment,
@@ -30,7 +30,6 @@ from hubverse_transform_spark.operators.similarity import (
 from hubverse_transform_spark.operators.clusters import dedup_clusters
 from hubverse_transform_spark.operators.rangejoin import binned_interval_join
 from hubverse_transform_spark.operators.sampling import (
-    hash_fraction_sample,
     hash_split,
     proportional_allocation_sample,
     stratified_sample_exact,
@@ -41,9 +40,7 @@ from hubverse_transform_spark.operators.diff import snapshot_diff
 from hubverse_transform_spark.operators.graph import pagerank
 from hubverse_transform_spark.operators.profiling import profile_columns
 from hubverse_transform_spark.operators.quality import (
-    observe_expectations,
     referential_integrity_audit,
-    split_by_expectations,
     with_expectations,
 )
 from hubverse_transform_spark.operators.textstats import (
@@ -51,11 +48,10 @@ from hubverse_transform_spark.operators.textstats import (
     pmi_bigrams,
     tfidf_top_terms,
 )
-from hubverse_transform_spark.operators.topk import top_k_global, top_k_per_group
+from hubverse_transform_spark.operators.topk import top_k_per_group
 
 __all__ = [
     "asof_join",
-    "exact_dedup",
     "content_hash_dedup",
     "shingle_ngrams",
     "minhash_signature",
@@ -66,13 +62,10 @@ __all__ = [
     "cosine_lsh_topk",
     "embedding_near_dup_pairs",
     "top_k_per_group",
-    "top_k_global",
     "pagerank",
     "snapshot_diff",
     "profile_columns",
     "with_expectations",
-    "split_by_expectations",
-    "observe_expectations",
     "bm25_topk",
     "pmi_bigrams",
     "tfidf_top_terms",
@@ -84,7 +77,6 @@ __all__ = [
     "semantic_dedup_reps",
     "dedup_clusters",
     "binned_interval_join",
-    "hash_fraction_sample",
     "hash_split",
     "proportional_allocation_sample",
     "stratified_sample_exact",

@@ -71,64 +71,3 @@ def asof_join(
         ],
     )
     return filled.filter(F.col("_side") == 1).drop("_side", "_ts", *value_cols)
-
-
-def cogrouped_asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """As-of join via ``cogroup().applyInPandas`` — the pandas-native
-    formulation of ``asof_join`` (same backward-inclusive tie semantics,
-    verified equal in tests).
-
-    Both sides shuffle once on the key; each key's two groups meet in one
-    Python worker where ``pandas.merge_asof`` does the per-key merge over
-    Arrow-transferred batches. Same exchange count as the union+window form;
-    the trade is JVM window codegen vs a C-implemented merge — the cogrouped
-    form wins when per-key logic outgrows what window functions express
-    (multi-column nearest-tolerance matches, interpolation), which is
-    exactly the escape hatch this operator demonstrates. Per-key data must
-    fit a worker's memory (the usual applyInPandas bound).
-
-    Determinism: when a key has several right rows at the same timestamp,
-    ``merge_asof`` keeps the LAST one in sort order, and Arrow delivers
-    group rows in arrival order — partition-dependent. The right side is
-    therefore sorted by (ts, value_cols) so the carried row is the same on
-    every run/partitioning (mirroring ``asof_join``'s uniqueness caveat).
-    """
-    import pandas as pd
-
-    lcols = list(left.columns)
-    out_fields = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
-        + [f"`{c}` {dict((f.name, f.dataType.simpleString()) for f in right.schema.fields)[c]}"
-           for c in value_cols]
-    )
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=lcols + value_cols)
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        if rpdf.empty:
-            out = lpdf.copy()
-            for c in value_cols:
-                out[c] = None
-            return out[lcols + value_cols]
-        rpdf = rpdf[[right_ts] + value_cols].sort_values(
-            [right_ts] + value_cols, kind="mergesort"
-        )
-        merged = pd.merge_asof(
-            lpdf, rpdf, left_on=left_ts, right_on=right_ts, direction="backward"
-        )
-        return merged[lcols + value_cols]
-
-    return (
-        left.groupBy(*on)
-        .cogroup(right.groupBy(*on))
-        .applyInPandas(merge, schema=out_fields)
-    )

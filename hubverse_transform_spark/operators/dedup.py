@@ -43,11 +43,6 @@ def _spread_input(fn):
     return wrapped
 
 
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact row dedup on ``cols`` (all columns when None)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def content_hash_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Group rows by sha256(content); keep the smallest id per group.
 

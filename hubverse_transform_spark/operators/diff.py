@@ -9,7 +9,7 @@ columns — one expression per side, so the join carries two narrow columns
 
 Scale shape: both sides shuffle once on the key (co-partitioned full-outer
 sort-merge join); with both snapshots bucketed on the key the exchange
-disappears entirely (see sinks.write_bucketed_table).
+disappears entirely (Spark's ``bucketBy`` at write time).
 """
 
 from __future__ import annotations

@@ -30,10 +30,8 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -266,51 +264,6 @@ def _real_image_decoder():
     return decode
 
 
-def decode_features_arrow(assets: DataFrame, *, fake: bool = False) -> DataFrame:
-    """Arrow-native variant of ``decode_features`` via ``mapInArrow``.
-
-    Skips the Arrow->pandas->Arrow conversion entirely: batches arrive as
-    ``pyarrow.RecordBatch`` and leave as RecordBatch, so binary payloads are
-    never copied into pandas object arrays — the right shape when the UDF is
-    byte-oriented (codecs, hashing, tensor packing) rather than
-    dataframe-oriented. Same output schema and values as ``decode_features``
-    (asserted equal in tests).
-    """
-
-    def run(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        # Pillow when importable, else the builtin PNG kernel — always set
-        real = None if fake else _real_image_decoder()
-
-        for batch in batches:
-            payloads = batch.column("payload").to_pylist()
-            modalities = batch.column("modality").to_pylist()
-            if fake:
-                feats = [
-                    f"{m}:{hashlib.md5(b).hexdigest()[:12]}" if b is not None else "empty"
-                    for b, m in zip(payloads, modalities)
-                ]
-            else:
-                feats = [real(b, m) for b, m in zip(payloads, modalities)]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("asset_id"),
-                    batch.column("modality"),
-                    pa.array(
-                        [len(b) if b is not None else 0 for b in payloads],
-                        type=pa.int64(),
-                    ),
-                    pa.array(feats, type=pa.string()),
-                ],
-                names=["asset_id", "modality", "byte_len", "feature"],
-            )
-
-    return assets.mapInArrow(run, FEATURE_SCHEMA)
-
-
 #: lowercase mode -> (channels, PNG color type) for the stdlib encoder
 _PNG_ENCODE_MODES = {"l": (1, 0), "rgb": (3, 2), "la": (2, 4), "rgba": (4, 6)}
 
@@ -418,32 +371,6 @@ def wav_decode(data: bytes):
     if bits == 8:
         samples = samples - 128  # unsigned storage -> signed amplitude
     return int(sample_rate), int(n_channels), int(bits), samples
-
-
-def wav_encode(samples, *, sample_rate: int, bits: int = 16, n_channels: int = 1) -> bytes:
-    """Minimal stdlib WAV writer: integer-PCM, little-endian, ``samples`` an
-    integer array of interleaved signed amplitudes (length divisible by
-    ``n_channels``). The inverse of ``wav_decode`` (round-trips bit-exactly
-    on the sample side)."""
-    import struct
-
-    import numpy as np
-
-    if bits not in _WAV_PCM_DTYPES:
-        raise ValueError(f"wav_encode supports bits {sorted(_WAV_PCM_DTYPES)}, got {bits}")
-    arr = np.asarray(samples, dtype=np.int64)
-    if arr.size % n_channels != 0:
-        raise ValueError("wav_encode: sample count not divisible by channel count")
-    if bits == 8:
-        arr = arr + 128  # signed amplitude -> unsigned storage
-    pcm = arr.astype(_WAV_PCM_DTYPES[bits]).tobytes()
-    width = bits // 8
-    block_align = n_channels * width
-    fmt = struct.pack("<HHIIHH", 1, n_channels, sample_rate, sample_rate * block_align, block_align, bits)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", len(pcm)) + pcm
-    if len(pcm) & 1:
-        chunks += b"\x00"  # RIFF word alignment pad (not part of data size)
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def avi_decode(data: bytes):
@@ -588,128 +515,6 @@ def avi_decode(data: bytes):
     return int(width), int(height), int(us_per_frame), frames
 
 
-def avi_encode(frames, *, us_per_frame: int, width: int, height: int) -> bytes:
-    """Minimal stdlib AVI writer: single-stream uncompressed 24-bit BI_RGB,
-    ``frames`` a sequence of uint8[height, width*3] top-down RGB arrays.
-    The inverse of ``avi_decode`` (round-trips bit-exactly on the pixel
-    side); stores the standard bottom-up padded BGR DIB rows."""
-    import struct
-
-    import numpy as np
-
-    if us_per_frame < 1:
-        raise ValueError("avi_encode: us_per_frame must be >= 1")
-    stride = ((width * 3 + 3) // 4) * 4
-    frame_chunks = b""
-    for f in frames:
-        arr = np.asarray(f, dtype=np.uint8)
-        if arr.shape != (height, width * 3):
-            raise ValueError(
-                f"avi_encode: frame shape {arr.shape} != ({height}, {width * 3})"
-            )
-        rgb = arr.reshape(height, width, 3)
-        bgr = rgb[:, :, ::-1][::-1]  # RGB top-down -> BGR bottom-up
-        padded = np.zeros((height, stride), dtype=np.uint8)
-        padded[:, : width * 3] = bgr.reshape(height, width * 3)
-        body = padded.tobytes()
-        frame_chunks += b"00db" + struct.pack("<I", len(body)) + body
-
-    n = len(frames)
-    avih = struct.pack(
-        "<10I16x", us_per_frame, 0, 0, 0, n, 0, 1, stride * height, width, height
-    )
-    strh = struct.pack(
-        "<4s4sIHH8I4H",
-        b"vids", b"DIB ", 0, 0, 0, 0,
-        us_per_frame, 1_000_000,  # dwScale/dwRate: rate/scale = fps
-        0, n, stride * height, 0, 0,
-        0, 0, width, height,
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, stride * height, 0, 0, 0, 0
-    )
-
-    def chunk(t: bytes, body: bytes) -> bytes:
-        return t + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    strl = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + strl)
-    movi = lst(b"movi", frame_chunks)
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _decode_pixels(payload: bytes):
-    """(width, height, mode, uint8[h, w*ch]) via Pillow when importable
-    (any format it reads), else the builtin PNG kernel."""
-    try:
-        import io
-
-        import numpy as np
-        from PIL import Image
-
-        with Image.open(io.BytesIO(bytes(payload))) as img:
-            arr = np.asarray(img)
-            mode = img.mode.lower()
-            if arr.ndim == 2:
-                arr = arr.reshape(img.height, img.width)
-                return img.width, img.height, mode, arr.reshape(img.height, -1)
-            return img.width, img.height, mode, arr.reshape(img.height, -1)
-    except ImportError:
-        return png_decode(bytes(payload))
-
-
-def resize_images(assets: DataFrame, *, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Image resize, payload->payload.
-
-    Fake mode passes payloads through and rewrites metadata (deterministic,
-    for plumbing tests). Real mode genuinely resizes: decode to pixels
-    (Pillow when importable, else the builtin PNG kernel), DETERMINISTIC
-    nearest-neighbor sampling (same index math regardless of decode lib —
-    no resampling-filter variance between environments), and re-encode as
-    a filter-0 PNG with the stdlib writer, so the output payload is always
-    a decodable PNG of the target geometry. Palette images (mode 'p')
-    raise ValueError — their PLTE semantics don't survive index
-    resampling; convert upstream."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def resize_one(payload):
-            if payload is None:
-                return None
-            w0, h0, mode, px = _decode_pixels(bytes(payload))
-            if mode not in _PNG_ENCODE_MODES:
-                raise ValueError(
-                    f"real resize supports modes {sorted(_PNG_ENCODE_MODES)}, got {mode!r}"
-                )
-            ch = _PNG_ENCODE_MODES[mode][0]
-            grid = px.reshape(h0, w0, ch)
-            rows = (np.arange(height, dtype=np.int64) * h0) // height
-            cols = (np.arange(width, dtype=np.int64) * w0) // width
-            out = grid[rows][:, cols].reshape(height, width * ch)
-            return bytearray(png_encode(np.ascontiguousarray(out), mode))
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            if not fake:
-                # only image rows are decoded/resized; other modalities
-                # pass through untouched (payload AND geometry metadata)
-                is_img = pdf["modality"] == "image"
-                pdf.loc[is_img, "payload"] = pdf.loc[is_img, "payload"].map(resize_one)
-                pdf.loc[is_img, "width"] = width
-                pdf.loc[is_img, "height"] = height
-            else:
-                pdf["width"] = width
-                pdf["height"] = height
-            yield pdf
-
-    return assets.mapInPandas(run, assets.schema)
-
-
 def frame_sample(assets: DataFrame, *, every_ms: int, fake: bool = False) -> DataFrame:
     """Video frame sampling: one output row per sampled frame (1->N explode
     inside the UDF).
@@ -722,7 +527,7 @@ def frame_sample(assets: DataFrame, *, every_ms: int, fake: bool = False) -> Dat
     ``every_ms`` of video time (the frame whose interval contains the
     sample timestamp, i.e. floor(ts / frame_duration)), and each sampled
     frame is re-encoded as a standalone PNG via the sibling stdlib writer
-    (``png_encode``) — so downstream image operators (``resize_images``,
+    (``png_encode``) — so downstream image operators (``decode_features``,
     the PNG kernel) can consume the ``frame`` payloads directly. Fake mode
     fabricates frame ids from duration metadata with NULL payloads
     (deterministic, for plumbing tests against arbitrary blobs).
@@ -767,86 +572,6 @@ def frame_sample(assets: DataFrame, *, every_ms: int, fake: bool = False) -> Dat
                             "frame_idx": i,
                             "ts_ms": ts,
                             "frame": bytearray(png_encode(frames[src], "rgb")),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return assets.mapInPandas(run, out_schema)
-
-
-def asset_metadata_summary(assets: DataFrame) -> DataFrame:
-    """Metadata-only rollup — projects payload OUT before the shuffle so the
-    exchange moves kilobytes, not blobs."""
-    return (
-        assets.select("modality", F.octet_length("payload").alias("bytes"), "duration_ms")
-        .groupBy("modality")
-        .agg(
-            F.count(F.lit(1)).alias("assets"),
-            F.sum("bytes").alias("total_bytes"),
-            F.avg("bytes").alias("avg_bytes"),
-        )
-    )
-
-
-def audio_window_energy(
-    assets: DataFrame, *, window_bytes: int = 1024, fake: bool = False
-) -> DataFrame:
-    """Audio windowed RMS energy per fixed-size sample window.
-
-    The audio member of the decode trio (image resize / video frame-sample /
-    audio windowing): 1->N like ``frame_sample`` but over the PAYLOAD rather
-    than metadata. Real mode (``fake=False``) genuinely decodes: the payload
-    is parsed by the builtin pure-stdlib WAV kernel (``wav_decode`` — strict
-    RIFF walk, fmt validation, whole-frame data check; corrupt payloads
-    raise ValueError and quarantine the task's row, mirroring the PNG
-    kernel), and windows are cut over the DECODED signed PCM amplitudes:
-    ``window_bytes`` of PCM data per window, i.e.
-    ``window_bytes // (bits/8)`` interleaved sample values. Fake mode
-    treats the raw payload bytes as unsigned 8-bit PCM (deterministic, for
-    plumbing tests against arbitrary blobs).
-
-    Output: (asset_id, window_idx, n_samples, rms) — rms rounded to 6
-    decimals so results are comparable across runs.
-    """
-    import numpy as np
-
-    out_schema = StructType(
-        [
-            StructField("asset_id", LongType(), False),
-            StructField("window_idx", IntegerType(), False),
-            StructField("n_samples", IntegerType(), False),
-            StructField("rms", DoubleType(), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for _, r in pdf.iterrows():
-                payload = r["payload"]
-                if payload is None:
-                    continue
-                if fake:
-                    samples = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.float64)
-                    win = window_bytes
-                else:
-                    _rate, _ch, bits, pcm = wav_decode(bytes(payload))
-                    samples = pcm.astype(np.float64)
-                    # frame-align the window: window_bytes//(bits/8) need
-                    # not be a multiple of the channel count, and a window
-                    # that splits an interleaved frame mixes channels across
-                    # windows (round-10 advice). Round DOWN to whole frames,
-                    # min one frame.
-                    win = max(1, window_bytes // (bits // 8))
-                    win = max(_ch, (win // _ch) * _ch)
-                for i in range(0, len(samples), win):
-                    w = samples[i : i + win]
-                    rows.append(
-                        {
-                            "asset_id": r["asset_id"],
-                            "window_idx": i // win,
-                            "n_samples": len(w),
-                            "rms": round(float(np.sqrt(np.mean(w * w))), 6),
                         }
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])

@@ -1,16 +1,17 @@
-"""Data-quality expectations [EXT]: declarative row-level constraint checks
-with a quarantine channel.
+"""Data-quality expectations [EXT]: declarative row-level constraint checks,
+plus referential-integrity and partition-completeness audits.
 
 Generalizes the reference's file-level error channel (UserWarning on bad
 extensions, ref model_output.py:112-122, 212-221) to the data plane: instead
 of rejecting whole files, every ROW is checked against named predicates and
-routed to the clean output or a quarantine annotated with which checks
-failed — the badRecordsPath pattern for semantic (not parse) errors.
+annotated with which checks failed — the badRecordsPath pattern for
+semantic (not parse) errors; a caller routes rows with one filter on the
+annotation.
 
 Scale shape: all checks evaluate in ONE projection over the scan (an array
 of failed-check names built from ``when`` expressions — pure codegen, no
-UDF); the split is two filters over the same cached/scanned relation, and
-each side's filter is pushable. No shuffle at all unless the caller adds one.
+UDF), and a filter on it is pushable. No shuffle at all unless the caller
+adds one.
 """
 
 from __future__ import annotations
@@ -38,44 +39,6 @@ def with_expectations(df: DataFrame, checks: dict[str, Column]) -> DataFrame:
         VIOLATIONS_COL,
         F.array_compact(F.array(*flags)) if flags else F.array().cast("array<string>"),
     )
-
-
-def split_by_expectations(
-    df: DataFrame, checks: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """Route rows to (clean, quarantine). Quarantine keeps the violations
-    column; clean drops it."""
-    annotated = with_expectations(df, checks)
-    clean = annotated.filter(F.size(VIOLATIONS_COL) == 0).drop(VIOLATIONS_COL)
-    quarantine = annotated.filter(F.size(VIOLATIONS_COL) > 0)
-    return clean, quarantine
-
-
-def observe_expectations(df: DataFrame, checks: dict[str, Column]):
-    """Attach free quality metrics to the pipeline via ``df.observe``.
-
-    Returns ``(annotated_df, observation)``: the metrics — total rows,
-    quarantined rows, and a per-check violation count — are computed by the
-    SAME job that executes whatever action the caller runs on the returned
-    DataFrame (write, count, ...), not by a second scan; after that action,
-    ``observation.get`` yields the dict. This is the monitoring shape for a
-    100 TB ingest: counters ride the ingest job itself.
-    """
-    from pyspark.sql import Observation
-
-    annotated = with_expectations(df, checks)
-    metrics = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((F.size(VIOLATIONS_COL) > 0).cast("long")).alias("n_quarantined"),
-    ]
-    for name in checks:
-        metrics.append(
-            F.sum(F.array_contains(VIOLATIONS_COL, name).cast("long")).alias(
-                f"n_{name}"
-            )
-        )
-    obs = Observation("expectations")
-    return annotated.observe(obs, *metrics), obs
 
 
 def referential_integrity_audit(

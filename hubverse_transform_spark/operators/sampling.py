@@ -1,5 +1,5 @@
-"""Deterministic sampling [EXT] for training-data curation: hash-fraction
-sampling (scale path, pure filter) and exact-k stratified sampling
+"""Deterministic sampling [EXT] for training-data curation: hash-keyed
+splits (scale path, pure projection) and exact-k stratified sampling
 (window path). Both are reproducible across runs and engines — the sample
 is a pure function of the row key, never of RNG state or partitioning,
 which is what makes downstream dedup/eval splits auditable.
@@ -13,26 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# md5 prefix of 8 hex chars -> uniform 32-bit integer
-_HASH_SPACE = float(1 << 32)
-
-
-def hash_uniform(key: F.Column) -> F.Column:
-    """Map an arbitrary string column to a deterministic uniform [0,1) double
-    via the first 8 hex chars of its md5 digest."""
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("double") / F.lit(_HASH_SPACE)
-
-
-def hash_fraction_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by key hash.
-
-    Scale path: a pure filter — no shuffle, no state, pushes through any
-    partitioning, and the same row set survives at any cluster size or data
-    layout. Consistent across tables too: sampling two tables by the same
-    join key keeps referential integrity (the TPC-H-join-preserving trick).
-    """
-    return df.filter(hash_uniform(F.col(key_col).cast("string")) < fraction)
 
 
 def hash_split(
@@ -118,7 +98,7 @@ def stratified_sample_exact(
     by key digest (a reproducible 'random' order).
 
     Window path: one shuffle on the stratum key. For 100 TB corpora with
-    few strata prefer ``hash_fraction_sample`` (no shuffle) unless exact
+    few strata prefer ``hash_split`` (no shuffle) unless exact
     per-stratum counts are required; for heavy strata the sort is the cost
     — rank by digest so the sort key is uncorrelated with ingest order.
     Adds a ``sample_rank`` column (1..k within each stratum).

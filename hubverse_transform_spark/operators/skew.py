@@ -1,70 +1,17 @@
-"""Skew mitigation [EXT]: salted joins for pathological key distributions.
+"""Skew mitigation [EXT]: salted two-phase aggregation for pathological key
+distributions.
 
-AQE's skew-join splitting (enabled in the session factory) handles most skew
-at runtime by splitting oversized partitions, but it only applies to
-sort-merge joins and after-the-fact. Salting is the planned form: spread one
-hot key across ``salt_buckets`` reducers by appending a salt component to the
-join key — the left row's salt is a deterministic hash of the whole row, the
-right side is replicated once per salt value. Cost: right side × buckets;
-win: no single reducer owns a hot key's entire row set.
-
-Use when one side is modest (replication is cheap) and key skew is known
-ahead of time; otherwise let AQE handle it.
+AQE's skew handling (enabled in the session factory) splits oversized
+partitions at runtime, after the fact. Salting is the planned form: spread
+one hot key across ``salt_buckets`` partial aggregates by appending a salt
+component to the grouping key, then merge the partials per key — no single
+reducer owns a hot key's entire row set.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    *,
-    how: str = "inner",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Equi-join on ``on`` with the left side salted and the right side
-    replicated per salt bucket. Result equals ``left.join(right, on, how)``
-    (column order: left's, then right's minus the join key).
-
-    The salt is ``xxhash64`` of the left row (deterministic — repeatable runs
-    and retries produce identical partitioning, unlike ``rand()`` salts).
-    """
-    lcols, rcols = left.columns, [c for c in right.columns if c != on]
-    l = left.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in lcols]), F.lit(salt_buckets))
-    )
-    r = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    ).withColumnRenamed(on, "_rkey")
-    joined = l.join(
-        r, (F.col(on) == F.col("_rkey")) & (l["_salt"] == r["_salt"]), how
-    )
-    return joined.select(*lcols, *rcols)
-
-
-def zscore_by_group(
-    df: DataFrame, group_col: str, value_col: str, out_col: str = "zscore"
-) -> DataFrame:
-    """Per-group z-score via grouped-map ``applyInPandas`` (the pattern for
-    group-local logic that needs the whole group in memory — model fitting,
-    quantile normalization). Each group must fit one executor's memory; for
-    purely algebraic normalizations prefer window functions, which stream.
-    """
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = f"{fields}, {out_col} double"
-
-    def normalize(pdf):
-        m = pdf[value_col].mean()
-        sd = pdf[value_col].std(ddof=1)
-        pdf = pdf.copy()
-        pdf[out_col] = 0.0 if (sd != sd or sd == 0) else (pdf[value_col] - m) / sd
-        return pdf
-
-    return df.groupBy(group_col).applyInPandas(normalize, out_schema)
 
 
 def two_phase_agg(
@@ -89,8 +36,6 @@ def two_phase_agg(
     many cases; this is the explicit form for when the skew is known and
     you want the split regardless of runtime stats.)
     """
-    from pyspark.sql import functions as F
-
     _MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
     _FIRST = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
     for fn in aggs.values():

@@ -1,8 +1,9 @@
-"""Document-level text analysis [EXT]: language-ID, quality scoring, token
-counting, fingerprinting — over the ``documents`` table shape
+"""Document-level text analysis [EXT]: term weighting (TF-IDF, BM25),
+collocations (PMI), n-gram statistics, quality rules and perplexity
+buckets — over the ``documents`` table shape
 (doc_id, text, lang, source, n_chars).
 
-All column expressions come from ``functions.text`` (pure built-ins); this
+Column expressions come from ``functions.text`` (pure built-ins); this
 module assembles them into DataFrame operators.
 """
 
@@ -13,39 +14,7 @@ from pyspark.sql import functions as F
 
 from hubverse_transform_spark.functions.numeric import half_up
 
-from hubverse_transform_spark.functions.text import (
-    alpha_ratio,
-    bpe_ish_token_count,
-    doc_fingerprint,
-    lang_id_expr,
-    punct_ratio,
-    quality_score,
-    stopword_ratio,
-    whitespace_token_count,
-)
-
-
-def annotate_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column set to a documents DataFrame.
-
-    One projection — Catalyst fuses all metrics into a single codegen stage
-    over the scan.
-    """
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        F.length(t).alias("char_count"),
-        whitespace_token_count(t).alias("ws_tokens"),
-        bpe_ish_token_count(t).alias("bpe_tokens"),
-        # char/token-count ratios reach exact half boundaries (k/128 at
-        # d=6) — engine-stable floor half-up, not round()
-        half_up(alpha_ratio(t), 6).alias("alpha_ratio"),
-        half_up(punct_ratio(t), 6).alias("punct_ratio"),
-        half_up(stopword_ratio(t), 6).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        lang_id_expr(t).alias("lang_guess"),
-        doc_fingerprint(t).alias("fingerprint"),
-    )
+from hubverse_transform_spark.functions.text import whitespace_token_count
 
 
 def tfidf_top_terms(
@@ -490,53 +459,6 @@ def perplexity_buckets(
             ).alias("avg_score"),
             F.min("avg_neg_logprob").alias("min_score"),
             F.max("avg_neg_logprob").alias("max_score"),
-        )
-    )
-
-
-def perplexity_bucket_thresholds(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    n_buckets: int = 3,
-) -> DataFrame:
-    """The 100 TB-shaped sibling of ``perplexity_buckets``: assign tiers by
-    comparing each score against ``approx_percentile`` cut points (broadcast
-    scalar ship, no global sort). Tier ids match the exact ntile everywhere
-    except documents sitting exactly on a sketch-fuzzy boundary.
-    """
-    scores = unigram_logprob_scores(df, id_col=id_col, text_col=text_col)
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = scores.agg(
-        F.percentile_approx("avg_neg_logprob", qs, 10000).alias("_cuts")
-    )
-    bucket = F.lit(1)
-    for i in range(n_buckets - 1):
-        bucket = bucket + F.when(
-            F.col("avg_neg_logprob") > F.col("_cuts")[i], 1
-        ).otherwise(0)
-    return (
-        scores.crossJoin(F.broadcast(cuts))
-        .withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            # per-doc scores are PRE-ROUNDED to the 1e-6 grid, so the tier
-            # mean is the exact rational S/(1e6·n) and a d=6 half boundary
-            # is genuinely reachable (tiny-tier seed 97531, 6-doc tier).
-            # Exact-integer half-up: S in 1e-6 units, floor(S/n + 0.5)/1e6.
-            (
-                F.floor(
-                    F.sum(
-                        F.round(F.col("avg_neg_logprob") * 1e6).cast("long")
-                    ).cast("double")
-                    / F.count(F.lit(1))
-                    + 0.5
-                )
-                / F.lit(1e6)
-            ).alias("avg_score"),
         )
     )
 

@@ -12,11 +12,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_k_global(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
-    """Global top-k (TakeOrderedAndProject physical plan)."""
-    return df.orderBy(*order_cols).limit(k)
-
-
 def top_k_per_group(
     df: DataFrame,
     group_cols: list[str],

@@ -1,10 +1,6 @@
-"""Physical-plan inspection helpers."""
+"""Plan text and composed query plans: ``explain_str`` (read by the plan and
+shuffle dump tools) and the curation funnel."""
 
-from hubverse_transform_spark.plans.inspect import (
-    explain_str,
-    has_broadcast_join,
-    pushed_filters,
-    scanned_columns,
-)
+from hubverse_transform_spark.plans.inspect import explain_str
 
-__all__ = ["explain_str", "pushed_filters", "scanned_columns", "has_broadcast_join"]
+__all__ = ["explain_str"]

@@ -76,7 +76,7 @@ def get_spark(app_name: str = "hubverse-transform-spark", cpus: int | None = Non
         # output schema policy types it string (ref integration goldens), and
         # silent str->date flips on lake read-back would break that parity
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # managed (bucketed) tables land here, never in the repo working dir
+        # managed tables land here, never in the repo working dir
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_WAREHOUSE_DIR", "/tmp/hubverse-spark-warehouse"))
         .config("spark.ui.showConsoleProgress", "false")

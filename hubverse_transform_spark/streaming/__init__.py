@@ -1,5 +1,6 @@
-"""Streaming surface: event-driven ingest parity (Layer A) + windowed
-stream analytics over `events` (Layer B [EXT])."""
+"""Streaming surface: event-driven ingest parity (Layer A: Spark's file
+source with ``foreachBatch``, plus the per-object Lambda dispatch) and
+windowed aggregations / interval joins over `events` (Layer B [EXT])."""
 
 from hubverse_transform_spark.streaming.ingest import dispatch_object_event, stream_model_outputs
 from hubverse_transform_spark.streaming.windows import (

@@ -65,29 +65,3 @@ def interval_join_streams(
         & (F.col("l_ts") >= F.col("r_ts") - F.expr(f"INTERVAL {horizon_seconds} SECONDS"))
     )
     return l.join(r, cond, how)
-
-
-def enrich_stream_with_dimension(
-    stream: "DataFrame",
-    dim: "DataFrame",
-    *,
-    stream_key: str,
-    dim_key: str,
-    dim_cols: list[str] | None = None,
-) -> "DataFrame":
-    """Stream-static enrichment: join a stream against a batch dimension.
-
-    The third cell of the streaming join matrix (stream-stream in
-    ``interval_join_streams``; batch-batch everywhere else): the static side
-    is re-read per micro-batch (so slowly-changing dimensions pick up
-    updates between batches), needs no watermark, holds no state, and
-    broadcasts when small — the canonical "attach customer attributes to a
-    clickstream" shape.
-    """
-    from pyspark.sql import functions as F
-
-    cols = dim_cols or [c for c in dim.columns if c != dim_key]
-    small = dim.select(dim_key, *cols)
-    return stream.join(
-        F.broadcast(small), stream[stream_key] == small[dim_key], "left"
-    ).drop(dim_key)

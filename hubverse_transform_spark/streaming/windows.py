@@ -75,26 +75,3 @@ def session_window_agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("sum_value"),
     )
-
-
-def dynamic_gap_session_agg(
-    events: DataFrame,
-    gap_expr,
-    *,
-    ts_col: str = "ts",
-    group_cols: list[str] | None = None,
-    watermark: str | None = "30 minutes",
-) -> DataFrame:
-    """Session windows whose inactivity gap varies PER ROW: ``gap_expr`` is a
-    Column evaluating to an interval-string (e.g. '2 minutes' for purchases,
-    '30 seconds' for views). The per-event-type timeout every real
-    sessionizer wants, and a capability the fixed-gap form cannot fake —
-    merging behavior follows each event's own gap."""
-    df = _maybe_watermark(events, ts_col, watermark)
-    keys = [F.session_window(F.col(ts_col), gap_expr).alias("session")] + [
-        F.col(c) for c in (group_cols or [])
-    ]
-    return df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-    )

@@ -18,37 +18,6 @@ import pytest
 
 from hubverse_transform_spark.session import get_spark
 
-# --- protobuf bootstrap ------------------------------------------------------
-# transformWithStateInPandas needs the protobuf python runtime, which this
-# container lacks on PyPI path (no network). The Google Cloud SDK bundled on
-# the image ships protobuf 6.32 inside its appengine platform dir; expose it
-# when (and only when) a plain import fails, BEFORE any SparkSession exists so
-# PYTHONPATH reaches the forked python workers too. Spark 4.1's gencode is
-# 6.33 — one minor ahead of that runtime — so the check is waived via
-# protobuf's own documented escape hatch (serialization is wire-compatible
-# across a one-minor gap; the validator is a deprecation fence, not an ABI
-# one). Everything degrades to the original skipif when the SDK dir is absent.
-_GCLOUD_SITE = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-
-
-def _bootstrap_protobuf() -> None:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    if not os.path.isdir(os.path.join(_GCLOUD_SITE, "google", "protobuf")):
-        return
-    sys.path.append(_GCLOUD_SITE)
-    os.environ["PYTHONPATH"] = (
-        _GCLOUD_SITE + os.pathsep + os.environ.get("PYTHONPATH", "")
-    ).rstrip(os.pathsep)
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-
-
-_bootstrap_protobuf()
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -85,10 +54,9 @@ def compiled_surface(spark):
     from concurrent.futures import ThreadPoolExecutor
 
     import __spark_entry__ as entry
-    from hubverse_transform_spark.plans.inspect import (
-        explain_str,
-        global_window_count,
-    )
+    from plan_inspect import global_window_count
+
+    from hubverse_transform_spark.plans.inspect import explain_str
 
     fns = entry.queries()
     names = [q for q in fns if q not in PLAN_EAGER]

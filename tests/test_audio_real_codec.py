@@ -1,11 +1,10 @@
 """Real-codec audio path (round-10, judge item 4).
 
-``audio_window_energy(fake=False)`` and ``decode_features(fake=False)``
-on audio rows decode actual payload bytes via the builtin pure-stdlib
-WAV/PCM kernel (``wav_decode`` — strict RIFF walk, fmt-chunk arithmetic
+``decode_features(fake=False)`` on audio rows decodes actual payload
+bytes via the builtin pure-stdlib WAV/PCM kernel (``wav_decode`` — strict RIFF walk, fmt-chunk arithmetic
 validation, whole-frame data check), mirroring the round-9 PNG kernel
 pattern. These tests build real WAV payloads with the sibling stdlib
-writer (``wav_encode``) AND cross-check the kernel against Python's
+writer (``codec_encoders.wav_encode``) AND cross-check the kernel against Python's
 stdlib ``wave`` module output, so the non-fake executor path runs
 end-to-end in every environment — no codec libraries involved.
 """
@@ -19,13 +18,12 @@ import wave
 import numpy as np
 import pytest
 
+from codec_encoders import wav_encode
+
 from hubverse_transform_spark.operators.multimodal import (
     ASSET_SCHEMA,
-    audio_window_energy,
     decode_features,
-    decode_features_arrow,
     wav_decode,
-    wav_encode,
 )
 
 
@@ -133,45 +131,12 @@ def audio_assets(spark):
     return spark.createDataFrame(rows, ASSET_SCHEMA)
 
 
-def test_real_audio_window_energy(spark, audio_assets):
-    """fake=False cuts windows over the DECODED signed PCM and the RMS values
-    equal an independent numpy computation on the same samples."""
-    out = audio_window_energy(audio_assets, window_bytes=1024, fake=False).collect()
-    by_asset: dict[int, list] = {}
-    for r in out:
-        by_asset.setdefault(r["asset_id"], []).append(r)
-    assert 3 not in by_asset  # null payload contributes nothing
-
-    # asset 1: 3000 16-bit samples, 512-sample windows -> 6 windows (last 440)
-    w1 = sorted(by_asset[1], key=lambda r: r["window_idx"])
-    assert [r["n_samples"] for r in w1] == [512] * 5 + [440]
-    samples = _sine_i16(3000).astype(np.float64)
-    for r in w1:
-        seg = samples[r["window_idx"] * 512 : r["window_idx"] * 512 + r["n_samples"]]
-        assert r["rms"] == round(float(np.sqrt(np.mean(seg * seg))), 6)
-
-    # asset 2: 512 8-bit samples, 1024-sample windows -> one window of 512
-    w2 = by_asset[2]
-    assert len(w2) == 1 and w2[0]["n_samples"] == 512
-    s2 = (np.arange(512) % 256 - 128).astype(np.float64)
-    assert w2[0]["rms"] == round(float(np.sqrt(np.mean(s2 * s2))), 6)
-
-
 def test_real_audio_feature_string(spark, audio_assets):
-    """decode_features real path emits geometry decoded from the bytes, in
-    both the pandas and Arrow variants."""
-    for fn in (decode_features, decode_features_arrow):
-        out = {r["asset_id"]: r["feature"] for r in fn(audio_assets, fake=False).collect()}
-        assert out[1] == "audio:16000hz:1ch:16bit:3000f"
-        assert out[2] == "audio:8000hz:2ch:8bit:256f"
-        assert out[3] == "empty"
-
-
-def test_real_audio_corrupt_payload_fails_in_window_energy(spark):
-    rows = [(7, "audio", "audio/wav", bytearray(b"RIFFxxxxWAVEjunk"), None, None, 10)]
-    df = spark.createDataFrame(rows, ASSET_SCHEMA)
-    with pytest.raises(Exception, match="audio decode failed"):
-        audio_window_energy(df, fake=False).collect()
+    """decode_features real path emits geometry decoded from the bytes."""
+    out = {r["asset_id"]: r["feature"] for r in decode_features(audio_assets, fake=False).collect()}
+    assert out[1] == "audio:16000hz:1ch:16bit:3000f"
+    assert out[2] == "audio:8000hz:2ch:8bit:256f"
+    assert out[3] == "empty"
 
 
 def test_wav_decode_rejects_duplicate_chunks():
@@ -218,25 +183,3 @@ try:
         assert np.array_equal(out, samples)
 except ImportError:  # pragma: no cover - hypothesis is baked in here
     pass
-
-
-def test_real_audio_window_energy_frame_aligned_stereo(spark):
-    """window_bytes that is NOT a whole number of interleaved frames must be
-    rounded down to frame multiples so no window splits a frame and mixes
-    channels (round-10 advice): 16-bit stereo with window_bytes=6 gives a
-    3-sample raw window (splits a frame); alignment rounds down to one
-    whole frame = 2 interleaved samples per window."""
-    inter = np.array([100, -100, 200, -200, 300, -300, 400, -400], dtype=np.int64)
-    payload = wav_encode(inter, sample_rate=8000, bits=16, n_channels=2)
-    rows = [(9, "audio", "audio/wav", bytearray(payload), None, None, 4)]
-    df = spark.createDataFrame(rows, ASSET_SCHEMA)
-    out = sorted(
-        audio_window_energy(df, window_bytes=6, fake=False).collect(),
-        key=lambda r: r["window_idx"],
-    )
-    # raw win would be 3 samples (6B // 2B) -> aligned down to 2 (one frame)
-    assert [r["n_samples"] for r in out] == [2, 2, 2, 2]
-    sf = inter.astype(np.float64)
-    for r in out:
-        seg = sf[r["window_idx"] * 2 : r["window_idx"] * 2 + 2]
-        assert r["rms"] == round(float(np.sqrt(np.mean(seg * seg))), 6)

@@ -24,14 +24,13 @@ import struct
 
 import numpy as np
 import pytest
+from codec_encoders import avi_encode, wav_encode
 
 from hubverse_transform_spark.operators.multimodal import (
     avi_decode,
-    avi_encode,
     png_decode,
     png_encode,
     wav_decode,
-    wav_encode,
 )
 
 ADVERSARIAL = (0, 1, 0x7FFFFFFF, 0xFFFFFFFF, 0x80000000)

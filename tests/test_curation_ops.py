@@ -1,5 +1,5 @@
 """Unit tests for the round-3 curation operators: chunk-level dedup,
-perplexity bucketing (exact vs approx-threshold agreement), per-domain
+perplexity bucketing, per-domain
 caps, and PQ reconstruction."""
 
 from __future__ import annotations
@@ -11,10 +11,7 @@ SF = "/root/testdata/sf0.001"
 from hubverse_transform_spark.operators.dedup import chunk_dup_stats
 from hubverse_transform_spark.operators.sampling import per_group_cap
 from hubverse_transform_spark.operators.similarity import pq_reconstruction
-from hubverse_transform_spark.operators.textstats import (
-    perplexity_bucket_thresholds,
-    perplexity_buckets,
-)
+from hubverse_transform_spark.operators.textstats import perplexity_buckets
 
 
 def test_chunk_dup_stats_flags_shared_chunks(spark):
@@ -46,25 +43,13 @@ def test_chunk_dup_stats_partial_tail_chunk(spark):
     assert row.n_chunks == 2
 
 
-def test_perplexity_bucket_paths_agree(spark):
+def test_perplexity_buckets_three_tiers(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     exact = {
         r.bucket: r
         for r in perplexity_buckets(docs, n_buckets=3).collect()
     }
-    approx = {
-        r.bucket: r
-        for r in perplexity_bucket_thresholds(docs, n_buckets=3).collect()
-    }
-    assert set(exact) == set(approx) == {1, 2, 3}
-    total_exact = sum(r.n_docs for r in exact.values())
-    total_approx = sum(r.n_docs for r in approx.values())
-    assert total_exact == total_approx
-    # the approx cut points may shift boundary docs by a few, never more
-    for b in exact:
-        assert abs(exact[b].n_docs - approx[b].n_docs) <= max(
-            3, total_exact // 50
-        ), (b, exact[b].n_docs, approx[b].n_docs)
+    assert set(exact) == {1, 2, 3}
 
 
 def test_per_group_cap_keeps_top_rows_deterministically(spark):

@@ -3,8 +3,6 @@ roundtrips preserve schema and values."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 def _frame(spark):
     return spark.createDataFrame(
@@ -30,53 +28,3 @@ def test_jsonl_roundtrip_with_schema(spark, tmp_path):
     back = spark.read.schema(df.schema).json(path)
     assert back.schema == df.schema
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_read_text_corpus_line_per_doc(spark, tmp_path):
-    from hubverse_transform_spark.sources.textfiles import read_text_corpus
-
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "a.txt").write_text("first doc\n\nsecond doc\n")
-    (d / "b.txt").write_text("third doc from b\n")
-    out = read_text_corpus(spark, str(d / "*.txt"))
-    rows = out.collect()
-    assert len(rows) == 3  # blank line dropped
-    assert {r.text for r in rows} == {"first doc", "second doc", "third doc from b"}
-    assert all(r.n_chars == len(r.text) for r in rows)
-    assert all(r.source.endswith((".txt",)) for r in rows)
-    # doc_id deterministic across re-reads and partitioning
-    again = {r.text: r.doc_id for r in read_text_corpus(spark, str(d / "*.txt")).collect()}
-    assert {r.text: r.doc_id for r in rows} == again
-    assert len({r.doc_id for r in rows}) == 3
-
-
-def test_read_text_corpus_whole_file(spark, tmp_path):
-    from hubverse_transform_spark.sources.textfiles import read_text_corpus
-
-    d = tmp_path / "corpus2"
-    d.mkdir()
-    (d / "x.txt").write_text("line one\nline two\n")
-    out = read_text_corpus(spark, str(d / "*.txt"), line_per_doc=False).collect()
-    assert len(out) == 1 and "line one\nline two" in out[0].text
-
-
-def test_audio_window_energy_fake(spark):
-    from pyspark.sql import functions as F
-
-    from hubverse_transform_spark.operators.multimodal import audio_window_energy
-
-    assets = spark.createDataFrame(
-        [(1, bytes(range(256)) * 5), (2, None)], "asset_id long, payload binary"
-    )
-    out = audio_window_energy(assets, window_bytes=512, fake=True).collect()
-    # 1280 bytes -> windows of 512, 512, 256; null payload skipped
-    got = sorted((r.window_idx, r.n_samples) for r in out)
-    assert got == [(0, 512), (1, 512), (2, 256)]
-    assert all(r.asset_id == 1 and r.rms > 0 for r in out)
-    # deterministic: uint8 values 0..255 repeated -> known rms for full windows
-    import numpy as np
-
-    s = np.arange(256, dtype=np.float64)
-    expected = round(float(np.sqrt(np.mean(np.concatenate([s, s]) ** 2))), 6)
-    assert [r.rms for r in out if r.window_idx == 0] == [expected]

@@ -167,69 +167,6 @@ def test_csv_quarantine_isolates_malformed_rows(spark, tmp_path):
     assert bad[0]["_corrupt_record"] == "CA,notanint,9.9"
 
 
-def test_ensemble_operators_on_model_output_shape(spark):
-    from hubverse_transform_spark.operators.ensemble import (
-        mean_ensemble,
-        median_ensemble,
-        task_cell_cols,
-    )
-
-    rows = [
-        # (round_id, model_id, location, output_type, output_type_id, value)
-        ("2024-06-01", "m1", "US", "quantile", "0.5", 10.0),
-        ("2024-06-01", "m2", "US", "quantile", "0.5", 20.0),
-        ("2024-06-01", "m3", "US", "quantile", "0.5", 90.0),
-        ("2024-06-01", "m1", "US", "quantile", "0.9", 30.0),
-        ("2024-06-01", "m2", "US", "quantile", "0.9", 50.0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "round_id string, model_id string, location string, "
-        "output_type string, output_type_id string, value double",
-    )
-    assert task_cell_cols(df) == ["round_id", "location", "output_type", "output_type_id"]
-
-    mean = {(r.output_type_id): r for r in mean_ensemble(df).collect()}
-    assert mean["0.5"].value == 40.0 and mean["0.5"].n_models == 3
-    assert mean["0.9"].value == 40.0 and mean["0.9"].n_models == 2
-
-    med = {(r.output_type_id): r for r in median_ensemble(df).collect()}
-    assert med["0.5"].value == 20.0  # robust to m3's outlier
-
-    weighted = {r.output_type_id: r for r in mean_ensemble(df, {"m1": 3.0, "m2": 1.0}).collect()}
-    # m3 unlisted -> excluded; (10*3 + 20*1) / 4 = 12.5
-    assert weighted["0.5"].value == 12.5 and weighted["0.5"].n_models == 2
-    # ensemble output is lake-shaped: task cells + value (+ n_models)
-    assert set(mean_ensemble(df).columns) == {
-        "round_id", "location", "output_type", "output_type_id", "value", "n_models",
-    }
-
-
-def test_ensemble_zero_weight_cells_and_negative_weights(spark):
-    """All-zero-weight task cells have no defined mean (0/0) and are dropped;
-    negative weights are rejected up front."""
-    import pytest
-
-    from hubverse_transform_spark.operators.ensemble import mean_ensemble
-
-    rows = [
-        ("2024-06-01", "m1", "US", "quantile", "0.5", 10.0),
-        ("2024-06-01", "m2", "US", "quantile", "0.9", 30.0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "round_id string, model_id string, location string, "
-        "output_type string, output_type_id string, value double",
-    )
-    # the 0.5 cell's only listed model has weight 0 -> dropped, not null
-    out = {r.output_type_id: r for r in mean_ensemble(df, {"m1": 0.0, "m2": 2.0}).collect()}
-    assert set(out) == {"0.9"}
-    assert out["0.9"].value == 30.0
-
-    with pytest.raises(ValueError, match="non-negative"):
-        mean_ensemble(df, {"m1": -1.0})
-
-
 def test_write_observation_metrics(spark, hub_dir, csv_numeric_file):
     """write_parquet surfaces row/null metrics from the Observation attached
     to the sink action — one scan, no second pass."""

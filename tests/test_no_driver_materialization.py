@@ -14,7 +14,6 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "hubverse_transform_spark
 #: (file, function) -> why collecting there is bounded and correct
 ALLOWED = {
     ("streaming/ingest.py", "stream_model_outputs"): "file-name list per micro-batch",
-    ("streaming/matview.py", "upsert"): "touched day-partition keys only",
     ("operators/similarity.py", "ivf_cosine_topk"): "n_centroids rows (<=16)",
     ("operators/similarity.py", "_exact_cosine_pairs_blocked"):
         "documented bounded variant: broadcast matrix must fit an executor",
@@ -22,7 +21,6 @@ ALLOWED = {
         "k seed rows + k*dim aggregated component sums per Lloyd step",
     ("operators/similarity.py", "ivf_list_stats"):
         "n_centroids seed rows only (same bounded quantizer load as ivf_cosine_topk)",
-    ("sinks.py", "write_zorder_layout"): "4 scalar min/max bounds",
     ("operators/scd.py", "apply_changeset"):
         "limit(5) sample of duplicate keys for the MERGE-precondition error",
 }
@@ -59,3 +57,16 @@ def test_collect_only_on_the_allowlist():
         "unapproved driver-side materialization (add to ALLOWED only with a "
         "bounded-size justification):\n" + "\n".join(offenders)
     )
+
+
+def test_allowlist_names_only_existing_functions():
+    """A stale entry (its function deleted or renamed) would silently widen
+    the allowlist for whatever later takes that name."""
+    defined = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defined.add((rel, node.name))
+    stale = sorted(set(ALLOWED) - defined)
+    assert not stale, f"ALLOWED entries that name no function: {stale}"

@@ -9,13 +9,14 @@ codegen.
 from __future__ import annotations
 
 import __spark_entry__ as entry
-from hubverse_transform_spark.plans.inspect import (
-    explain_str,
+from plan_inspect import (
     has_broadcast_join,
     pushed_filters,
     scanned_columns,
     whole_stage_codegen_spans,
 )
+
+from hubverse_transform_spark.plans.inspect import explain_str
 
 SF = "/root/testdata/sf0.001"
 

@@ -1,14 +1,11 @@
-"""Row-level expectations: routing, annotation, null-hostile semantics."""
+"""Row-level expectations (annotation, null-hostile semantics), column
+profiling, snapshot diff and covariance operators."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hubverse_transform_spark.operators.quality import (
-    VIOLATIONS_COL,
-    split_by_expectations,
-    with_expectations,
-)
+from hubverse_transform_spark.operators.quality import VIOLATIONS_COL, with_expectations
 
 
 def _df(spark):
@@ -33,31 +30,6 @@ def test_with_expectations_annotates_failures(spark):
     # NULL predicate result counts as a violation (null-hostile)
     assert out[3] == ["amount_positive"]
     assert out[4] == ["tag_present"]
-
-
-def test_split_routes_and_strips(spark):
-    clean, quarantine = split_by_expectations(_df(spark), _checks())
-    assert [r.id for r in clean.collect()] == [1]
-    assert VIOLATIONS_COL not in clean.columns
-    assert sorted(r.id for r in quarantine.collect()) == [2, 3, 4]
-    assert VIOLATIONS_COL in quarantine.columns
-
-
-def test_no_checks_means_all_clean(spark):
-    clean, quarantine = split_by_expectations(_df(spark), {})
-    assert clean.count() == 4 and quarantine.count() == 0
-
-
-def test_observe_expectations_rides_the_action(spark):
-    from hubverse_transform_spark.operators.quality import observe_expectations
-
-    annotated, obs = observe_expectations(_df(spark), _checks())
-    annotated.write.format("noop").mode("overwrite").save()  # one action, no extra scan
-    m = obs.get
-    assert m["n_rows"] == 4
-    assert m["n_quarantined"] == 3
-    assert m["n_amount_positive"] == 2
-    assert m["n_tag_present"] == 1
 
 
 def test_profile_columns_one_pass(spark):

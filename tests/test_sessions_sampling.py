@@ -8,10 +8,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from hubverse_transform_spark.operators.sampling import (
-    hash_fraction_sample,
-    stratified_sample_exact,
-)
+from hubverse_transform_spark.operators.sampling import stratified_sample_exact
 from hubverse_transform_spark.operators.sessions import session_stats, sessionize
 from hubverse_transform_spark.operators.textstats import tfidf_top_terms
 
@@ -74,16 +71,6 @@ def test_stratified_sample_exact_counts_and_determinism(spark):
     # small stratum: returns all rows, rank still 1..n
     tiny = df.filter((F.col("k") < 5) & (F.col("g") == "0"))
     assert stratified_sample_exact(tiny, "g", "k", 10).count() == 2
-
-
-def test_hash_fraction_sample_deterministic_and_unbiased(spark):
-    df = spark.range(2000).select(F.col("id").alias("k"))
-    a = hash_fraction_sample(df, "k", 0.25)
-    n = a.count()
-    assert abs(n - 500) < 100  # binomial 3-sigma ~= 58
-    # repartitioning must not change the selected set
-    b = hash_fraction_sample(df.repartition(13), "k", 0.25)
-    assert sorted(r.k for r in a.collect()) == sorted(r.k for r in b.collect())
 
 
 def test_tfidf_top_terms_tiny_corpus(spark):

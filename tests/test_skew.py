@@ -1,48 +1,8 @@
-"""Salted join correctness (vs plain join) and grouped-map applyInPandas."""
+"""Salted two-phase aggregation equals the direct aggregation."""
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
-
-from hubverse_transform_spark.operators.skew import salted_join, zscore_by_group
-
-
-def test_salted_join_matches_plain_join(spark):
-    # skewed left: one hot key with 500 rows, tail keys with 1 each
-    left = spark.range(0, 500).selectExpr("1 AS k", "id AS lv").unionByName(
-        spark.range(2, 50).selectExpr("id AS k", "id * 10 AS lv")
-    )
-    right = spark.range(0, 60).selectExpr("id AS k", "id + 1000 AS rv")
-
-    plain = left.join(right, "k").select("k", "lv", "rv")
-    salted = salted_join(left, right, "k", salt_buckets=8)
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    left = spark.createDataFrame([(1, "a"), (99, "b")], ["k", "tag"])
-    right = spark.createDataFrame([(1, 10.0)], ["k", "v"])
-    out = {r["tag"]: r["v"] for r in salted_join(left, right, "k", how="left").collect()}
-    assert out == {"a": 10.0, "b": None}
-
-
-def test_zscore_by_group(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 5.0)], ["g", "x"]
-    )
-    got = {(r["g"], r["x"]): r["zscore"] for r in zscore_by_group(df, "g", "x").collect()}
-    assert math.isclose(got[("a", 1.0)], -1.0)
-    assert math.isclose(got[("a", 3.0)], 1.0)
-    assert got[("b", 5.0)] == 0.0  # single-row group: stddev undefined -> 0
-    # invariant: per-group mean of z-scores is ~0
-    chk = (
-        zscore_by_group(df, "g", "x")
-        .groupBy("g").agg(F.round(F.avg("zscore"), 9).alias("m"))
-        .collect()
-    )
-    assert all(r["m"] == 0.0 for r in chk)
 
 
 def test_two_phase_agg_equals_direct(spark):

@@ -60,34 +60,6 @@ def test_interval_join_static_backfill_same_semantics(spark):
     assert [(r.l_value, r.r_value) for r in out.collect()] == [(0.1, 42.0)]
 
 
-def test_stream_static_enrichment(spark, tmp_path: Path):
-    from hubverse_transform_spark.streaming.joins import enrich_stream_with_dimension
-
-    ev_dir = tmp_path / "events"
-    _write(spark, ev_dir, [
-        (1, "2024-01-01 00:01:00", 10.0),
-        (2, "2024-01-01 00:02:00", 20.0),
-        (9, "2024-01-01 00:03:00", 30.0),  # no dimension row -> left join keeps it
-    ])
-    dim = spark.createDataFrame(
-        [(1, "GOLD"), (2, "SILVER")], ["cust_id", "tier"]
-    )
-    stream = spark.readStream.schema("user_id long, ts timestamp, value double").parquet(
-        str(ev_dir)
-    )
-    enriched = enrich_stream_with_dimension(
-        stream, dim, stream_key="user_id", dim_key="cust_id"
-    )
-    assert enriched.isStreaming
-    q = (
-        enriched.writeStream.format("memory").queryName("enriched")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = {r.user_id: r.tier for r in spark.sql("SELECT * FROM enriched").collect()}
-    assert rows == {1: "GOLD", 2: "SILVER", 9: None}
-
-
 def test_interval_left_outer_join_emits_unmatched(spark, tmp_path: Path):
     clicks_dir = tmp_path / "lo_clicks"
     purch_dir = tmp_path / "lo_purch"

@@ -131,35 +131,6 @@ def test_tumbling_window_agg_streaming_with_watermark(spark, tmp_path: Path):
     assert got[(10, "view")] == (1, 4.0)
 
 
-def test_dynamic_gap_sessions(spark):
-    from hubverse_transform_spark.streaming.windows import dynamic_gap_session_agg
-
-    rows = [
-        # user 1, 'view' events (30s gap): 60s apart -> separate sessions
-        (1, "view", "2024-01-01 00:00:00", 1.0),
-        (1, "view", "2024-01-01 00:01:00", 1.0),
-        # user 2, 'purchase' events (5 min gap): 60s apart -> ONE session
-        (2, "purchase", "2024-01-01 00:00:00", 5.0),
-        (2, "purchase", "2024-01-01 00:01:00", 5.0),
-    ]
-    df = spark.createDataFrame(
-        rows, ["user_id", "event_type", "ts_str", "value"]
-    ).select(
-        "user_id", "event_type", F.to_timestamp("ts_str").alias("ts"), "value"
-    )
-    gap = F.when(F.col("event_type") == "purchase", F.lit("5 minutes")).otherwise(
-        F.lit("30 seconds")
-    )
-    out = dynamic_gap_session_agg(
-        df, gap, group_cols=["user_id"], watermark=None
-    ).collect()
-    sessions = {}
-    for r in out:
-        sessions.setdefault(r.user_id, []).append(r.n_events)
-    assert sorted(sessions[1]) == [1, 1]  # 30s gap split the views
-    assert sessions[2] == [2]  # 5 min gap merged the purchases
-
-
 def test_complete_mode_recomputes_totals(spark, tmp_path):
     """outputMode('complete') re-emits the FULL aggregate every batch (vs
     update's changed-rows-only): after two micro-batches the memory sink's
@@ -184,49 +155,3 @@ def test_complete_mode_recomputes_totals(spark, tmp_path):
     q.awaitTermination()
     got = {r.user_id: (r.n, r.s) for r in spark.sql("SELECT * FROM cm_totals").collect()}
     assert got == {1: (2, 15.0), 2: (1, 7.0)}
-
-
-def test_curation_stream_end_to_end(spark, tmp_path):
-    """Two micro-batches of documents through the streaming curation funnel:
-    low-quality docs gated out, a cross-batch duplicate dropped by the
-    watermarked dedup state, survivors landed under split= partitions."""
-    import datetime as dt
-
-    from hubverse_transform_spark.streaming.curation import run_curation_stream
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    good = (
-        "the quick brown fox jumps over the lazy dog and then keeps running "
-        "through the quiet field while the sun is high and the air is warm"
-    )
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    batch1 = [(1, good + " one", t0), (2, "!!!", t0), (3, good + " three", t0)]
-    batch2 = [(4, good + " three", t0), (5, good + " five", t0)]  # 4 dups 3
-    schema = "doc_id long, text string, ingest_ts timestamp"
-    spark.createDataFrame(batch1, schema).write.mode("append").parquet(src)
-
-    def run_once():
-        docs = spark.readStream.schema(
-            "doc_id long, text string, ingest_ts timestamp"
-        ).parquet(src)
-        q = run_curation_stream(docs, out, ckpt)
-        q.awaitTermination(120)
-
-    run_once()
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    run_once()
-
-    got = spark.read.parquet(out)
-    rows = {r.doc_id: r for r in got.collect()}
-    # 2 gated on quality; 4 deduped against 3 (same fingerprint, cross-batch)
-    assert set(rows) == {1, 3, 5}
-    assert all(r.split in ("train", "val", "test") for r in rows.values())
-    assert all(r.quality >= 0.5 for r in rows.values())
-    # split is hash-of-id: stable under replay, and materialized as a
-    # partition directory
-    import os
-
-    split_dirs = {d for d in os.listdir(out) if d.startswith("split=")}
-    assert split_dirs == {f"split={r.split}" for r in rows.values()}

@@ -5,7 +5,7 @@ rows decode actual payload bytes via the builtin pure-stdlib AVI kernel
 (``avi_decode`` — strict RIFF walk, avih/strh/strf cross-checks,
 uncompressed 24-bit BI_RGB frames), completing the kernel trio (PNG round
 9, WAV round 10, AVI round 11). Tests build real AVI payloads with the
-sibling stdlib writer (``avi_encode``); sampled frames come back as
+stdlib writer ``codec_encoders.avi_encode``; sampled frames come back as
 standalone PNGs and are cross-checked pixel-exact through ``png_decode``,
 so the full video -> frame -> image pipeline runs end-to-end in every
 environment — no codec libraries involved.
@@ -18,12 +18,12 @@ import struct
 import numpy as np
 import pytest
 
+from codec_encoders import avi_encode
+
 from hubverse_transform_spark.operators.multimodal import (
     ASSET_SCHEMA,
     avi_decode,
-    avi_encode,
     decode_features,
-    decode_features_arrow,
     frame_sample,
     png_decode,
 )
@@ -183,10 +183,9 @@ def test_real_frame_sample_submillisecond_video_emits_frame_zero(spark):
 
 def test_real_video_feature_string(spark, video_assets):
     assets, _ = video_assets
-    for fn in (decode_features, decode_features_arrow):
-        out = {r["asset_id"]: r["feature"] for r in fn(assets, fake=False).collect()}
-        assert out[1] == "video:5x4:10f:40000us"
-        assert out[2] == "empty"
+    out = {r["asset_id"]: r["feature"] for r in decode_features(assets, fake=False).collect()}
+    assert out[1] == "video:5x4:10f:40000us"
+    assert out[2] == "empty"
 
 
 def test_real_video_corrupt_payload_fails_in_frame_sample(spark):

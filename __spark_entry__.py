@@ -538,12 +538,9 @@ def q25_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs via the hyperplane-LSH bucketed path
     (the scale form: candidate pairs share a deterministic md5-plane bucket,
     so the self-join shuffles on bucket keys, never all-pairs and never a
-    driver-side collect). The exact matmul form is kept as a test-only recall
-    baseline (tests/test_similarity.py)."""
+    driver-side collect)."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_pairs(
-        emb, threshold=0.3, exact=False, num_planes=4, dim=64
-    )
+    pairs = embedding_near_dup_pairs(emb, threshold=0.3, num_planes=4, dim=64)
     return pairs.select("id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim"))
 
 
@@ -1413,9 +1410,8 @@ def q71_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q72's edge build, exposed so the plan test can assert its shape
-    directly: pagerank() eagerly localCheckpoints the fraction-folded
-    edges, which truncates this subplan out of the final frame's explain
-    output.
+    directly: pagerank() returns an eagerly localCheckpointed frame, which
+    truncates this subplan out of the final frame's explain output.
 
     r14 (guide §2.4, remove shuffles outright): the pair stream comes from
     a BASKET build — group lineitem by order, sort the distinct part set,
@@ -1473,11 +1469,10 @@ def q72_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric by construction, so no dangling mass); then the iterative
     two-shuffle join/agg loop in operators/graph.pagerank. The oracle
     unrolls the same three iterations as SQL CTEs."""
+    # the edge build above symmetrizes explicitly, which meets pagerank's
+    # input contract (src set == dst set, no NULL endpoints)
     pairs = _q72_edges(spark, sf_dir)
-    # symmetric=True: the edge build above symmetrizes explicitly, which
-    # licenses pagerank's exact plan cuts (no per-iteration nodes join /
-    # broadcast jobs — see operators/graph.py)
-    pr = pagerank(pairs, iterations=3, damping=0.85, symmetric=True)
+    pr = pagerank(pairs, iterations=3, damping=0.85)
     return pr.select(F.col("node").alias("p_partkey"), F.round("pr", 6).alias("pr"))
 
 
@@ -10252,8 +10247,7 @@ def q311_ann_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: capped probe set (vec_id < 2000) bounds the probe matrix
     (≤2000×64 f64 ≈ 1 MB), collected once and broadcast; the neighbor side
     streams through ``mapInPandas`` and each Arrow batch is scored with ONE
-    BLAS GEMM — the ``similarity._exact_cosine_pairs_blocked`` pattern,
-    ~100× the interpreted ``aggregate(zip_with(...))`` fold it replaces
+    BLAS GEMM, ~100× the interpreted ``aggregate(zip_with(...))`` fold it replaces
     (round-7 verdict item). Each batch emits only its per-query partial
     top-10 (with a 2e-9 slack: |x − round9(x)| ≤ 5e-10, so any row whose
     ROUNDED sim ties the batch's 10th cannot sit below threshold − 1e-9 —
@@ -14734,8 +14728,8 @@ def _lsh_topk_sql(
 
 
 def _lsh_neardup_sql(*, threshold: float, num_planes: int, dim: int) -> str:
-    """Bucketed near-dup oracle: replays embedding_near_dup_pairs' default
-    path — same md5-derived hyperplane bucket assignment (plane components
+    """Bucketed near-dup oracle: replays embedding_near_dup_pairs — same
+    md5-derived hyperplane bucket assignment (plane components
     inlined as array literals), same same-bucket-only candidate join."""
     bucket_terms = []
     for p in range(num_planes):

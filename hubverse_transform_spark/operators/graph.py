@@ -1,4 +1,6 @@
-"""Iterative graph analytics [EXT]: PageRank over an edge DataFrame.
+"""Iterative graph analytics [EXT]: PageRank over an edge DataFrame whose
+``src`` and ``dst`` node sets agree (a symmetrized graph), per-node
+triangle counts, and hop-limited BFS.
 
 The reference has no graph code anywhere (grep over src/, faas/, test/ —
 SURVEY.md §2.2); this is part of the Layer-B analytic surface. Complements
@@ -8,10 +10,14 @@ canonical fixed-point graph computation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hubverse_transform_spark.caching import compute_release
+
+
+#: rounds between lineage cuts of the rank vector (see :func:`pagerank`)
+_TRUNCATE_EVERY = 8
 
 
 def pagerank(
@@ -20,161 +26,45 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    tol: float | None = None,
-    truncate_every: int = 8,
-    symmetric: bool = False,
 ) -> DataFrame:
-    """PageRank over a directed edge list, fixed iteration count with an
-    optional early exit: when ``tol`` is set, iteration stops as soon as
-    the L1 rank delta ``sum(|pr_new - pr_old|)`` falls below it (the delta
-    is one extra co-partitioned join + scalar agg per round — cheap next
-    to the contribution shuffle, and it is what keeps a 20-iteration
-    budget from paying 20 shuffle rounds on a graph that stabilizes in 6).
-    ``tol=None`` (default) runs exactly ``iterations`` rounds, bit-stable
-    for oracle comparison.
+    """PageRank over an edge list, exactly ``iterations`` rounds (bit-stable
+    for oracle comparison). Returns (node, pr).
 
-    Returns (node, pr). Nodes are those appearing in ``edges`` (either end);
-    rank mass from dangling nodes is dropped (callers with undirected graphs
-    symmetrize first, which eliminates danglings entirely).
+    Input contract, NOT checked: the set of ``src`` values equals the set
+    of ``dst`` values and no endpoint is NULL. A symmetrized edge list —
+    every ``(a, b)`` with its ``(b, a)``, as ``_q72_edges`` builds for q72
+    — is one such input. The code relies on it three ways, and an edge
+    list that breaks it yields wrong ranks with no error:
 
-    Scale shape: each iteration is one join of the edge list with the
-    current rank vector on ``src`` (both sides hash-partitioned on the same
-    key, so AQE reuses the exchange) followed by one aggregation on ``dst``
-    — the classic two-shuffle PageRank step, no driver-side collection of
-    nodes or ranks. Out-degrees are folded into the edge list ONCE up front
-    (edges carry pr-mass fraction 1/out_deg), so the per-iteration join is
-    binary, not ternary. The node count rides as a 1-row broadcast.
-    Cache discipline — the cache-compute-release pattern
-    (``caching.compute_release``): nodes, the fraction-folded edges, and
-    each round's rank vector are ``persist()``ed (so the final job fills
-    them once and every consumer reuses them, with full Catalyst/AQE
-    planning — localCheckpointing the intermediates instead freezes the
-    subplans behind LogicalRDD boundaries and measured 12x slower at
-    sf0.1), then ONE eager materialization of the final (node, pr) output
-    runs that job and every intermediate is unpersisted before returning —
-    nothing stays registered, no per-iteration leak.
+    - the node set is the adjacency keys (``distinct(src)``);
+    - every node has an in-edge, so each round's aggregated contributions
+      cover every node, with no join back to a node list;
+    - every node has an out-edge, so no rank mass dangles.
 
-    ``truncate_every`` bounds plan depth for long runs: every K rounds the
-    rank vector is eagerly ``localCheckpoint``ed (exact values, lineage
-    cut) and the chunk's persisted rounds are released. Without this, a
-    30-round chain of unmaterialized persists makes the CacheManager's
-    per-action ``sameResult`` scan quadratic in plan depth — a 30-round
-    run on a 7-node graph spent >7 min of JVM CPU planning, never
-    executing. Short runs (the declared 3-iteration q72 path) never hit a
-    truncation point, so their plan and bit-exact output are unchanged.
+    Scale shape: out-degrees fold via ONE ``collect_list`` aggregation on
+    ``src`` whose keys double as the node list; the node count, taken once
+    from that cached table, enters each round's projection as a LITERAL
+    (Python and JVM doubles are both IEEE-754 binary64, so
+    ``lit((1-d)/n)`` is bit-identical to a broadcast division), so no round
+    runs a broadcast job. Each round is one join of the fraction-folded
+    edges with the rank vector on ``src`` (co-partitioned with the cached
+    adjacency, no re-exchange) and one aggregation on ``dst``; no nodes or
+    ranks are collected to the driver. Cache discipline
+    (``caching.compute_release``): the adjacency and each round's rank
+    vector are ``persist()``ed, ONE eager materialization of the final
+    (node, pr) output runs the job, and every intermediate is unpersisted
+    before returning.
 
-    ``symmetric=True`` (r14, guide §1.2/§2.4) licenses three exact plan
-    cuts the general path cannot make (see Args for the contract):
-
-    - the node set is just the adjacency keys (``distinct(src)`` ==
-      ``distinct(src ∪ dst)``), deleting the union+distinct exchange;
-    - every node has an in-edge, so ``contribs`` already covers ALL nodes
-      and the per-iteration ``nodes LEFT JOIN contribs`` (whose
-      ``coalesce(m, 0)`` provably never fires) is deleted — one join +
-      cache scan per iteration gone;
-    - out-degrees fold via ONE ``collect_list`` aggregation whose keys
-      double as the node list, and the node count is taken once from that
-      cached table and folded into the per-iteration projection as a
-      LITERAL, deleting the per-iteration 1-row crossJoin broadcast jobs
-      (Python and JVM doubles are both IEEE-754 binary64, so
-      ``lit((1-d)/n)`` is bit-identical to the broadcast division).
-
-    The r13 stage readout motivating this: the 3-iteration q72 run
-    executed 33 jobs / ~100 stages — mostly per-iteration broadcast
-    futures and the nodes-join barriers — on a graph whose rank vector is
-    a few hundred KB; the 8-core cell matched the 32-core cell because the
-    job CHAIN, not compute, was the wall.
-
-    Args:
-        symmetric: the caller guarantees the edge list is symmetrized —
-            every ``(a, b)`` has its ``(b, a)`` — and has no NULL
-            endpoints (q72's basket edges are built that way). Ranks then
-            equal the general path's exactly. The contract is NOT checked:
-            an edge list that breaks it yields wrong ranks with no error.
+    Every ``_TRUNCATE_EVERY`` rounds the rank vector is eagerly
+    ``localCheckpoint``ed (exact values, lineage cut) and the chunk's
+    persisted rounds are released. Without this, a 30-round chain of
+    unmaterialized persists makes the CacheManager's per-action
+    ``sameResult`` scan quadratic in plan depth — a 30-round run on a
+    7-node graph spent >7 min of JVM CPU planning, never executing. Short
+    runs (the 3-round q72 path) never reach a truncation point.
     """
-    if symmetric:
-        return _pagerank_symmetric(
-            edges, src, dst, iterations, damping, tol, truncate_every
-        )
-    # the incoming edge frame is often an expensive build (self-joins,
-    # LSH banding); nodes/out-degrees/fraction-folding each scan it, so
-    # cache it too — released with everything else on exit (uncached, the
-    # edge build ran 3x: measured ~2x slower cold at sf0.1 on q72)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))
-    ).distinct().persist()
-    n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    # fold 1/out_deg into the edges once via a count window over the ONE
-    # shuffle on src (vs groupBy+re-join: same exchange, one fewer pass —
-    # measured ~15% faster end-to-end on q72 at sf0.1, bit-identical
-    # ranks). Bonus: the persisted e_frac comes out hash-partitioned on
-    # src, exactly what every iteration's join needs — no re-exchange.
-    w = Window.partitionBy("src")
-    e_frac = e.select(
-        "src", "dst", (F.lit(1.0) / F.count(F.lit(1)).over(w)).alias("frac")
-    ).persist()
-
-    ranks = nodes.crossJoin(F.broadcast(n_df)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("pr")
-    )
-    cached_rounds = []
-    for it in range(iterations):
-        contribs = (
-            e_frac.join(ranks, e_frac.src == ranks.node)
-            .select(F.col("dst").alias("node"), (F.col("pr") * F.col("frac")).alias("m"))
-            .groupBy("node")
-            .agg(F.sum("m").alias("m"))
-        )
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(n_df))
-            .select(
-                "node",
-                (
-                    (1.0 - damping) / F.col("n")
-                    + damping * F.coalesce(F.col("m"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        ).persist()
-        cached_rounds.append(new_ranks)
-        if tol is not None:
-            delta = (
-                new_ranks.select("node", F.col("pr").alias("_new"))
-                .join(ranks.select("node", F.col("pr").alias("_old")), "node")
-                .agg(F.sum(F.abs(F.col("_new") - F.col("_old"))).alias("d"))
-                .first()["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
-        if (it + 1) % truncate_every == 0 and it + 1 < iterations:
-            # cut lineage: exact values, RDD-backed; the chunk's persists
-            # are now fully folded into the checkpoint, release them
-            ranks = ranks.localCheckpoint(eager=True)
-            for c in cached_rounds:
-                c.unpersist()
-            cached_rounds.clear()
-    return compute_release(ranks, e, nodes, e_frac, *cached_rounds)
-
-
-def _pagerank_symmetric(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    iterations: int,
-    damping: float,
-    tol: float | None,
-    truncate_every: int,
-) -> DataFrame:
-    """The ``symmetric=True`` fast path of :func:`pagerank` — see its
-    docstring for the three exact plan cuts and their licenses. Rank
-    values are the same computation (same joins/aggregations over the
-    same rows; only provably-inert operators deleted)."""
     # adjacency build: ONE exchange on src with partial collect_list
-    # combining; keys are the complete node set (symmetric input). The
+    # combining; keys are the complete node set (the input contract). The
     # count() fills the cache eagerly — the one scalar this operator pulls
     # to the driver, replacing 1-row broadcast jobs in every iteration.
     adj = (
@@ -196,7 +86,7 @@ def _pagerank_symmetric(
     base = (1.0 - damping) / n
     cached_rounds: list[DataFrame] = []
     for it in range(iterations):
-        new_ranks = (
+        ranks = (
             e_frac.join(ranks, e_frac.src == ranks.node)
             .select(
                 F.col("dst").alias("node"), (F.col("pr") * F.col("frac")).alias("m")
@@ -207,20 +97,8 @@ def _pagerank_symmetric(
                 "node", (F.lit(base) + damping * F.col("m")).alias("pr")
             )
         ).persist()
-        cached_rounds.append(new_ranks)
-        if tol is not None:
-            delta = (
-                new_ranks.select("node", F.col("pr").alias("_new"))
-                .join(ranks.select("node", F.col("pr").alias("_old")), "node")
-                .agg(F.sum(F.abs(F.col("_new") - F.col("_old"))).alias("d"))
-                .first()["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
-        if (it + 1) % truncate_every == 0 and it + 1 < iterations:
+        cached_rounds.append(ranks)
+        if (it + 1) % _TRUNCATE_EVERY == 0 and it + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=True)
             for c in cached_rounds:
                 c.unpersist()

@@ -13,13 +13,13 @@ quarantine with ValueError); audio via the builtin pure-stdlib WAV/PCM
 kernel (``wav_decode``: strict RIFF walk, fmt validation, data-chunk
 geometry
 check). Corrupt payloads raise ValueError (quarantine) in every real
-path. Everything Spark-side is real and tested: the asset schema,
-Arrow-batched ``mapInPandas`` plumbing, batch shapes, partition-size
-control for large blobs.
+path. Everything Spark-side is real and tested: the Arrow-batched
+``mapInPandas`` plumbing and the batch shapes.
 
-Scale notes: binary payloads dominate row size, so assets are repartitioned
-by byte budget before any UDF stage (`target_partition_bytes`), and metadata
-extraction keeps payloads out of the exchange (select only what moves).
+Scale notes: binary payloads dominate row size, so decoding is a map-side
+``mapInPandas`` stage on the input's own partitioning that emits only the
+small feature columns, and each Arrow batch bounds how many payloads an
+executor holds at once.
 """
 
 from __future__ import annotations
@@ -39,19 +39,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: canonical multimodal asset schema: payload + typed metadata
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("modality", StringType(), False),  # image | audio | video
-        StructField("mime_type", StringType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
@@ -62,14 +49,7 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def decode_features(
-    assets: DataFrame,
-    *,
-    fake: bool = False,
-    batch_hint: int = 64,
-    target_partition_bytes: int = 256 * 1024 * 1024,
-    total_bytes: int | None = None,
-) -> DataFrame:
+def decode_features(assets: DataFrame, *, fake: bool = False) -> DataFrame:
     """Extract per-asset features from binary payloads via ``mapInPandas``.
 
     Arrow streams column batches into pandas; each batch yields one output
@@ -78,13 +58,7 @@ def decode_features(
     builtin PNG kernel), audio via the builtin WAV kernel, and video via
     the builtin AVI kernel; only an unknown modality raises
     NotImplementedError inside the executor.
-
-    ``total_bytes`` (when known, e.g. from table stats) drives a
-    repartition so each task holds ~``target_partition_bytes`` of payload.
     """
-    if total_bytes:
-        parts = max(1, total_bytes // target_partition_bytes)
-        assets = assets.repartition(int(parts))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # fake mode stays self-contained (pandas/hashlib only); the real

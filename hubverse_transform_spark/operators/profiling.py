@@ -3,21 +3,16 @@
 The first query anyone runs against an unfamiliar 100 TB lake: row count,
 null fraction, distinct count, min/max per column.
 
-Two physical shapes, chosen by ``exact``:
-
-- ``exact=True`` (oracle-checkable): one branch per column, each a
-  ``groupBy(col).count()`` followed by a 6-expression rollup, unioned into the
-  long-format result. N exact ``count_distinct``s in a single aggregation
-  would compile to Catalyst's Expand operator — every input row duplicated
-  once per distinct aggregate, an N× shuffle of the whole table, which is the
-  wrong plan at lake scale. The union shape instead scans each column
-  independently (parquet column pruning makes the N scans read the same total
-  bytes as one full scan), map-side partial aggregation collapses each shuffle
-  to ~distinct-values volume, and the branches run concurrently inside one
-  job. Measured 4.5× faster than the Expand plan at sf0.1 on 6 columns.
-- ``exact=False`` (lake scale path): a single aggregation pass where distinct
-  counts are HLL sketches (``approx_count_distinct``) — no Expand is needed
-  for approximate distincts, so one scan computes every column's profile.
+One branch per column, each a ``groupBy(col).count()`` followed by a
+6-expression rollup, unioned into the long-format result. N exact
+``count_distinct``s in a single aggregation would compile to Catalyst's
+Expand operator — every input row duplicated once per distinct aggregate, an
+N× shuffle of the whole table, which is the wrong plan at lake scale. The
+union shape instead scans each column independently (parquet column pruning
+makes the N scans read the same total bytes as one full scan), map-side
+partial aggregation collapses each shuffle to ~distinct-values volume, and
+the branches run concurrently inside one job. Measured 4.5× faster than the
+Expand plan at sf0.1 on 6 columns.
 """
 
 from __future__ import annotations
@@ -28,9 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str] | None = None, *, exact: bool = True
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Profile ``cols`` (default: all columns).
 
     Returns (column, n_rows, n_null, n_distinct, min_value, max_value) with
@@ -39,49 +32,26 @@ def profile_columns(
     semantics); min/max are computed on the native type and cast to string
     afterwards, so numeric columns keep numeric ordering.
     """
-    cols = cols or df.columns
-    if exact:
-        parts = []
-        for c in cols:
-            per_val = (
-                df.select(F.col(c).alias("_v"))
-                .groupBy("_v")
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-            )
-            parts.append(
-                per_val.agg(
-                    F.lit(c).alias("column"),
-                    F.coalesce(F.sum("_cnt"), F.lit(0)).alias("n_rows"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("_v").isNull(), F.col("_cnt"))), F.lit(0)
-                    ).alias("n_null"),
-                    F.count("_v").alias("n_distinct"),
-                    F.min("_v").cast("string").alias("min_value"),
-                    F.max("_v").cast("string").alias("max_value"),
-                )
-            )
-        return reduce(DataFrame.unionAll, parts)
-
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("long")).alias(f"__null_{c}"))
-        aggs.append(F.approx_count_distinct(col).alias(f"__dist_{c}"))
-        aggs.append(F.min(col).cast("string").alias(f"__min_{c}"))
-        aggs.append(F.max(col).cast("string").alias(f"__max_{c}"))
-    wide = df.agg(*aggs)
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__n").alias("n_rows"),
-            F.col(f"__null_{c}").alias("n_null"),
-            F.col(f"__dist_{c}").alias("n_distinct"),
-            F.col(f"__min_{c}").alias("min_value"),
-            F.col(f"__max_{c}").alias("max_value"),
+    parts = []
+    for c in cols or df.columns:
+        per_val = (
+            df.select(F.col(c).alias("_v"))
+            .groupBy("_v")
+            .agg(F.count(F.lit(1)).alias("_cnt"))
         )
-        for c in cols
-    ]
-    return wide.select(F.explode(F.array(*per_col)).alias("p")).select("p.*")
+        parts.append(
+            per_val.agg(
+                F.lit(c).alias("column"),
+                F.coalesce(F.sum("_cnt"), F.lit(0)).alias("n_rows"),
+                F.coalesce(
+                    F.sum(F.when(F.col("_v").isNull(), F.col("_cnt"))), F.lit(0)
+                ).alias("n_null"),
+                F.count("_v").alias("n_distinct"),
+                F.min("_v").cast("string").alias("min_value"),
+                F.max("_v").cast("string").alias("max_value"),
+            )
+        )
+    return reduce(DataFrame.unionAll, parts)
 
 
 def embedding_covariance(

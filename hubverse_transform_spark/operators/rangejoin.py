@@ -1,18 +1,16 @@
-"""Binned interval join [EXT]: the shuffle-scalable range join.
+"""Binned interval join [EXT]: a point-in-interval join on an equi-key.
 
 A point-in-interval join has no equi-key, so Spark's only direct plan is a
-(Broadcast)NestedLoopJoin — fine when one side is tiny (q18's band table),
-catastrophic when both sides are large: at 100 TB the nested loop is a
-cartesian scan. The standard scale-out rewrite is BINNING: quantize the value
-domain into fixed-width bins, replicate each interval into every bin it
-overlaps, and equi-join on the bin id — Catalyst then plans an ordinary
-shuffled hash/sort-merge join that partitions both sides, and the exact
-range predicate filters residual bin-collisions after the match.
+(Broadcast)NestedLoopJoin, which compares every point with every interval.
+The rewrite is BINNING: quantize the value domain into fixed-width bins,
+replicate each interval into every bin it overlaps, and equi-join on the
+bin id — Catalyst then plans a hash join on the bin key with the interval
+side broadcast, so the points stream through it without a shuffle, and the
+exact range predicate filters residual bin-collisions after the match.
 
 Cost model: replication factor is ~(interval_width / bin_width + 1), so pick
 ``bin_width`` near the typical interval width; candidate pairs per bin are
-(points in bin) x (intervals overlapping bin). Degenerate hot bins are
-ordinary join skew — AQE skew-join splitting or salting applies unchanged.
+(points in bin) x (intervals overlapping bin).
 """
 
 from __future__ import annotations
@@ -28,28 +26,21 @@ def binned_interval_join(
     lo_col: str,
     hi_col: str,
     bin_width: float,
-    how: str = "inner",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
-    """Join ``points`` to ``intervals`` where
+    """Inner-join ``points`` to ``intervals`` where
     ``lo_col <= value_col <= hi_col`` (closed interval) via bin equi-keys.
 
     Both inputs keep all their columns (names must not collide). The
     interval side explodes into one row per overlapped bin — keep
     ``bin_width`` of the same order as the interval widths to bound the
-    blow-up. ``how`` supports "inner" and "left_semi" (points that fall
-    inside at least one interval, never duplicated).
+    blow-up.
 
-    ``broadcast_intervals`` pins the build side. It matters: a
-    locally-created interval frame has no stats, so left to itself Catalyst
-    may broadcast the POINTS side instead — silently collecting the fact
-    table to the driver (observed: 2.5x slowdown at sf0.1, an OOM at lake
-    scale). Default True (interval sets are usually the small side); pass
-    False when intervals are themselves fact-sized, which yields the
-    shuffle-hash plan on the bin key.
+    The interval side is always the broadcast build side. That is pinned,
+    not left to Catalyst: a locally-created interval frame has no stats, so
+    left to itself Catalyst may broadcast the POINTS side instead — silently
+    collecting the fact table to the driver (observed: 2.5x slowdown at
+    sf0.1, an OOM at lake scale).
     """
-    if how not in ("inner", "left_semi"):
-        raise ValueError(f"unsupported join type: {how}")
     binned_pts = points.withColumn(
         "_bin_l", F.floor(F.col(value_col) / F.lit(bin_width)).cast("long")
     )
@@ -62,12 +53,10 @@ def binned_interval_join(
             )
         ),
     )
-    rep = F.broadcast(rep) if broadcast_intervals else rep.hint("shuffle_hash")
+    rep = F.broadcast(rep)
     cond = (
         (binned_pts["_bin_l"] == rep["_bin_r"])
         & (binned_pts[value_col] >= rep[lo_col])
         & (binned_pts[value_col] <= rep[hi_col])
     )
-    if how == "left_semi":
-        return binned_pts.join(rep, cond, "left_semi").drop("_bin_l")
     return binned_pts.join(rep, cond, "inner").drop("_bin_l", "_bin_r")

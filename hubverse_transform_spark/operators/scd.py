@@ -63,7 +63,6 @@ def apply_changeset(
     changes: DataFrame,
     key_col: str,
     op_col: str = "op",
-    on_duplicate: str = "error",
 ) -> DataFrame:
     """MERGE INTO semantics without a table format: apply a CDC changeset
     (``op`` in 'U'pdate / 'D'elete / 'I'nsert) to a snapshot in one pass,
@@ -77,19 +76,12 @@ def apply_changeset(
 
     Precondition (the same one Delta/Iceberg MERGE enforces at runtime):
     **at most one change row per key**. Duplicate keys would fan out
-    through the join, silently duplicating matched rows. ``on_duplicate``
-    controls enforcement:
-
-    - ``"error"`` (default) — raise ``ValueError`` naming sample duplicate
-      keys, mirroring Delta's "multiple source rows matched". Costs one
-      count-per-key aggregation on the SAME key the join shuffles on, so
-      at scale it rides the shuffle MERGE already pays.
-    - ``"reduce"`` — deterministically keep one change row per key: the
-      lexicographically greatest ``(op, data columns)`` struct (so 'U'
-      beats 'I' beats 'D', ties broken by column values). Deterministic,
-      not time-ordered — callers with a CDC sequence column should
-      pre-reduce on it instead. Zero extra jobs beyond the reduce's
-      map-side combine.
+    through the join, silently duplicating matched rows, so they raise
+    ``ValueError`` naming sample duplicate keys, mirroring Delta's
+    "multiple source rows matched". The check costs one count-per-key
+    aggregation on the SAME key the join shuffles on, so at scale it rides
+    the shuffle MERGE already pays. Callers with duplicate keys pre-reduce
+    the changeset (e.g. on a CDC sequence column).
 
     Implementation is a single full-outer join on the key — one shuffle,
     both sides co-partitioned, no second pass. This is exactly the shuffle
@@ -98,10 +90,6 @@ def apply_changeset(
     its own. Each side must share the non-key column set; change rows carry
     nulls only where ``op_col`` says they are deletes.
     """
-    if on_duplicate not in ("error", "reduce"):
-        raise ValueError(
-            f"on_duplicate must be 'error' or 'reduce', got {on_duplicate!r}"
-        )
     data_cols = [c for c in base.columns if c != key_col]
     b = base.withColumn("_in_base", F.lit(1))
     ch = changes.select(
@@ -109,35 +97,19 @@ def apply_changeset(
         F.col(op_col).alias("_op"),
         *[F.col(c).alias(f"_ch_{c}") for c in data_cols],
     )
-    if on_duplicate == "error":
-        dupes = (
-            ch.groupBy(key_col)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(5)
-            .collect()
-        )
-        if dupes:
-            sample = [r[key_col] for r in dupes]
-            raise ValueError(
-                "apply_changeset: multiple change rows matched the same key "
-                f"(sample keys: {sample}); MERGE requires at most one source "
-                "row per key — pre-reduce the changeset or pass "
-                "on_duplicate='reduce'"
-            )
-    else:
-        ch = (
-            ch.groupBy(key_col)
-            .agg(
-                F.max(
-                    F.struct(F.col("_op"), *[F.col(f"_ch_{c}") for c in data_cols])
-                ).alias("_r")
-            )
-            .select(
-                F.col(key_col),
-                F.col("_r._op").alias("_op"),
-                *[F.col(f"_r._ch_{c}").alias(f"_ch_{c}") for c in data_cols],
-            )
+    dupes = (
+        ch.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .limit(5)
+        .collect()
+    )
+    if dupes:
+        sample = [r[key_col] for r in dupes]
+        raise ValueError(
+            "apply_changeset: multiple change rows matched the same key "
+            f"(sample keys: {sample}); MERGE requires at most one source "
+            "row per key — pre-reduce the changeset"
         )
     joined = b.join(ch, on=key_col, how="full_outer")
     matched = F.col("_in_base").isNotNull()

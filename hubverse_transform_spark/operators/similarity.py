@@ -9,7 +9,8 @@ Scale path: hyperplane-LSH bucketing — each vector maps to a sign-pattern
 bucket from D deterministic pseudo-random hyperplanes (derived from md5 of
 (plane, dim) so runs are reproducible and oracle-able); candidate generation
 joins on bucket, then exact cosine re-ranks. Probing multiple buckets trades
-recall for cost.
+recall for cost. Near-duplicate pairs (``embedding_near_dup_pairs``) run
+this bucketed form only; there is no all-pairs path.
 """
 
 from __future__ import annotations
@@ -359,62 +360,6 @@ def ivf_cosine_topk(
     )
 
 
-def _exact_cosine_pairs_blocked(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float,
-    max_rows: int = 1_000_000,
-) -> DataFrame:
-    """All-pairs cosine >= threshold via block × broadcast-matrix matmul.
-
-    One side is collected once and broadcast as a dense float64 matrix; the
-    other side streams through ``mapInPandas``, scoring each Arrow batch with
-    a single BLAS GEMM — ~100× the throughput of a pair-at-a-time crossJoin
-    with interpreted array folds. The broadcast matrix bounds this variant
-    (N×dim doubles must fit an executor), so inputs above ``max_rows`` RAISE
-    toward ``embedding_near_dup_pairs``'s hyperplane-LSH default instead of
-    silently attempting a driver collect that would OOM (1M × 64-dim f64 is
-    ~512 MB broadcast — already the ceiling of comfortable). Zero-norm
-    vectors never pair (any positive threshold), matching cosine's null
-    semantics in the HOF form.
-    """
-    import numpy as np
-    import pandas as pd
-
-    narrowed = df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
-    n = narrowed.count()
-    if n > max_rows:
-        raise ValueError(
-            f"exact cosine self-join collects the whole input to the driver: "
-            f"{n} rows > max_rows={max_rows}. Use embedding_near_dup_pairs("
-            f"exact=False) — the hyperplane-LSH path — at this scale."
-        )
-    rows = narrowed.collect()
-    ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    M = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    norms[norms == 0] = np.inf
-    U = M / norms[:, None]
-    sc = df.sparkSession.sparkContext
-    b_ids, b_u = sc.broadcast(ids), sc.broadcast(U)
-
-    def block(batches):
-        all_ids, all_u = b_ids.value, b_u.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.array([list(v) for v in pdf["v"]], dtype=np.float64)
-            an = np.linalg.norm(A, axis=1)
-            an[an == 0] = np.inf
-            A = A / an[:, None]
-            aid = pdf["id"].to_numpy()
-            S = A @ all_u.T
-            ii, jj = np.nonzero((S >= threshold) & (aid[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {"id_a": aid[ii], "id_b": all_ids[jj], "cosine_sim": S[ii, jj]}
-            )
-
-    return narrowed.mapInPandas(block, "id_a long, id_b long, cosine_sim double")
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     *,
@@ -423,17 +368,15 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     num_planes: int = 4,
     dim: int = 64,
-    exact: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= threshold).
 
-    ``exact=True`` runs the full self-join (bounded inputs / oracle only);
-    default buckets by hyperplane signature first — near-identical vectors
-    land in the same bucket with high probability, and the join shuffles on
-    bucket keys instead of exploding quadratically.
+    Buckets by hyperplane signature first — near-identical vectors land in
+    the same bucket with high probability, and the join shuffles on bucket
+    keys instead of exploding quadratically. Pairs split across buckets are
+    missed (recall < 1, not exactness): the SQL oracle replays the same
+    bucketing.
     """
-    if exact:
-        return _exact_cosine_pairs_blocked(df, id_col, vec_col, threshold)
     planes = [_hyperplane(p, dim) for p in range(num_planes)]
     # unit-normalize each vector ONCE (row count) so per-pair scoring is a
     # single dot product instead of dot + two norms: array lambdas run

@@ -1,10 +1,33 @@
 """Stdlib WAV and AVI writers that build test fixtures for the package's
 ``wav_decode`` / ``avi_decode`` kernels (each round-trips bit-exactly
-through its decoder)."""
+through its decoder), and the asset schema the multimodal tests build
+their input frames with."""
 
 from __future__ import annotations
 
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
 from hubverse_transform_spark.operators.multimodal import _WAV_PCM_DTYPES
+
+#: canonical multimodal asset schema: payload + typed metadata
+ASSET_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType(), False),
+        StructField("modality", StringType(), False),  # image | audio | video
+        StructField("mime_type", StringType(), True),
+        StructField("payload", BinaryType(), True),
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("duration_ms", LongType(), True),
+    ]
+)
 
 
 def wav_encode(samples, *, sample_rate: int, bits: int = 16, n_channels: int = 1) -> bytes:

@@ -18,10 +18,9 @@ import wave
 import numpy as np
 import pytest
 
-from codec_encoders import wav_encode
+from codec_encoders import ASSET_SCHEMA, wav_encode
 
 from hubverse_transform_spark.operators.multimodal import (
-    ASSET_SCHEMA,
     decode_features,
     wav_decode,
 )

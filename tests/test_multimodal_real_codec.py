@@ -17,8 +17,9 @@ import zlib
 import numpy as np
 import pytest
 
+from codec_encoders import ASSET_SCHEMA
+
 from hubverse_transform_spark.operators.multimodal import (
-    ASSET_SCHEMA,
     decode_features,
     png_decode,
     png_encode,

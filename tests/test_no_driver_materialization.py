@@ -15,8 +15,6 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "hubverse_transform_spark
 ALLOWED = {
     ("streaming/ingest.py", "stream_model_outputs"): "file-name list per micro-batch",
     ("operators/similarity.py", "ivf_cosine_topk"): "n_centroids rows (<=16)",
-    ("operators/similarity.py", "_exact_cosine_pairs_blocked"):
-        "documented bounded variant: broadcast matrix must fit an executor",
     ("operators/similarity.py", "spherical_kmeans_centroids"):
         "k seed rows + k*dim aggregated component sums per Lloyd step",
     ("operators/similarity.py", "ivf_list_stats"):

@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from codec_encoders import ASSET_SCHEMA
+
 from hubverse_transform_spark.functions.text import (
     bpe_ish_token_count,
     lang_id_expr,
@@ -31,15 +33,10 @@ from hubverse_transform_spark.operators.dedup import (
     winnow_fingerprints,
     winnow_overlap_pairs,
 )
-from hubverse_transform_spark.operators.multimodal import (
-    ASSET_SCHEMA,
-    decode_features,
-    frame_sample,
-)
+from hubverse_transform_spark.operators.multimodal import decode_features, frame_sample
 from hubverse_transform_spark.operators.similarity import (
     cosine_brute_force_topk,
     cosine_lsh_topk,
-    embedding_near_dup_pairs,
     ivf_cosine_topk,
 )
 from hubverse_transform_spark.operators.topk import top_k_per_group
@@ -409,31 +406,6 @@ def test_ivf_single_probe_stays_in_cluster(spark):
     assert out and all(r["neighbor_id"] in cluster_a_ids for r in out)
 
 
-def test_embedding_near_dup_exact(spark, vec_df):
-    out = embedding_near_dup_pairs(vec_df, threshold=0.9, exact=True).collect()
-    assert {(r["id_a"], r["id_b"]) for r in out} == {(0, 1)}
-
-
-def test_exact_cosine_pairs_guard_raises_over_max_rows(spark, vec_df):
-    """The exact path collects to the driver; above max_rows it must refuse
-    and point at the LSH path instead of silently attempting the collect."""
-    import pytest
-
-    from hubverse_transform_spark.operators.similarity import (
-        _exact_cosine_pairs_blocked,
-    )
-
-    with pytest.raises(ValueError, match="embedding_near_dup_pairs"):
-        _exact_cosine_pairs_blocked(
-            vec_df, "vec_id", "embedding", 0.9, max_rows=2
-        )
-    # at/under the bound the path still runs
-    out = _exact_cosine_pairs_blocked(
-        vec_df, "vec_id", "embedding", 0.9, max_rows=vec_df.count()
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in out} == {(0, 1)}
-
-
 # --- as-of join -------------------------------------------------------------
 
 
@@ -605,20 +577,9 @@ def test_binned_interval_join_matches_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     # overlap region matches both intervals
     assert got.filter((F.col("v") == 9.0)).count() == 2
-    semi = binned_interval_join(pts, iv, "v", "lo", "hi", bin_width=7.0, how="left_semi")
-    assert semi.filter(F.col("v") == 9.0).count() == 1  # semi never duplicates
-    assert semi.columns == ["v"]
     # build side is pinned: intervals broadcast (BuildRight), never the
-    # points side; with broadcast_intervals=False the bin key shuffles both
+    # points side
     assert "BuildRight" in plan
-    big = binned_interval_join(
-        pts, iv, "v", "lo", "hi", bin_width=7.0, broadcast_intervals=False
-    )
-    big_plan = explain_str(big)
-    assert "ShuffledHashJoin" in big_plan or "SortMergeJoin" in big_plan
-    assert sorted(map(tuple, big.select("v", "name").collect())) == sorted(
-        map(tuple, naive.select("v", "name").collect())
-    )
 
 
 def test_asof_join_timestamps_and_keys_without_right_rows(spark):

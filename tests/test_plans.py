@@ -73,8 +73,8 @@ def test_q72_edges_basket_build_no_join(spark):
     # distinct part set -> map-side i<j pair explode), NOT a lineitem
     # self-join — one fact exchange instead of two plus a join, and no
     # broadcast of a corpus-sized side anywhere. Asserted on the
-    # edge-build frame — pagerank() localCheckpoints its input eagerly,
-    # so the final frame's explain no longer shows this subplan.
+    # edge-build frame — pagerank() returns an eagerly localCheckpointed
+    # frame, so the final frame's explain no longer shows this subplan.
     plan = explain_str(entry._q72_edges(spark, SF))
     assert "Join" not in plan and "BroadcastExchange" not in plan
     assert "collect_set" in plan and "explode" in plan

@@ -449,30 +449,3 @@ def test_apply_changeset_duplicate_keys_raise(spark):
     with pytest.raises(ValueError, match="multiple change rows"):
         apply_changeset(base, changes, "k").collect()
 
-
-def test_apply_changeset_duplicate_keys_reduce(spark):
-    """on_duplicate='reduce' keeps the lexicographically greatest
-    (op, data) struct per key — deterministic, no fan-out."""
-    from hubverse_transform_spark.operators.scd import apply_changeset
-
-    base = spark.createDataFrame(
-        [(1, "A", 10.0), (2, "B", 20.0)], "k long, status string, amt double"
-    )
-    changes = spark.createDataFrame(
-        [
-            (1, "U", "B", 1.0),
-            (1, "U", "C", 2.0),   # greatest (U, C, 2.0) wins for k=1
-            (2, "D", None, None),
-            (2, "I", None, None),  # U/I > D lexicographically: no delete
-        ],
-        "k long, op string, status string, amt double",
-    )
-    out = {
-        r.k: (r.status, r.amt)
-        for r in apply_changeset(
-            base, changes, "k", on_duplicate="reduce"
-        ).collect()
-    }
-    assert out[1] == ("C", 2.0)
-    assert 2 in out  # 'I' beats 'D' in the struct order; matched+I = no-op
-    assert out[2] == ("B", 20.0)

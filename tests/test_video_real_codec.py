@@ -18,10 +18,9 @@ import struct
 import numpy as np
 import pytest
 
-from codec_encoders import avi_encode
+from codec_encoders import ASSET_SCHEMA, avi_encode
 
 from hubverse_transform_spark.operators.multimodal import (
-    ASSET_SCHEMA,
     avi_decode,
     decode_features,
     frame_sample,

@@ -41,8 +41,9 @@ SHOWCASE = {
         "key (hinted — a corpus-sized side must never broadcast)."
     ),
     "q72_part_pagerank": (
-        "Iterative graph step: per-iteration join/agg pair; edge fractions "
-        "folded in once; InMemoryTableScan shows the persisted rank vector."
+        "Iterative graph step: the per-iteration join/agg loop runs inside "
+        "pagerank's eager checkpoint of the final rank vector, so the plan "
+        "is a Scan ExistingRDD of that checkpoint plus the rounding Project."
     ),
     "q80_event_funnel": (
         "One-shuffle funnel: single hash aggregation collecting sorted event "

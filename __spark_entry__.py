@@ -1427,9 +1427,11 @@ def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Skew bound: the map-side explode is quadratic in BASKET size (parts
     per order — bounded small by the data model, ~7 here), never in part
     frequency; the heavy tail (a part in MANY orders) lands on the
-    downstream (src,dst) distinct exchange exactly as before."""
+    downstream (src,dst) distinct exchange exactly as before.
+    The basket build relies on ``l_orderkey`` being NOT NULL (TPC-H declares
+    it so): grouping would gather NULL-key rows into one basket and emit
+    their pairs, where the old equi-join dropped NULL keys."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # relies on NOT NULL l_orderkey: NULL keys would form one basket; the old self-join dropped them
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("_ps")
     )
@@ -4787,26 +4789,17 @@ def q193_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q194_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q45's duplicate clustering re-run through the alternating
-    large-star/small-star algorithm (clusters.connected_components_star,
-    Kiveris et al.) — the O(log n)-round scale path for large-diameter
-    graphs, where min-label propagation needs O(diameter) rounds. Same
-    SimHash pair graph, same (node, component, cluster_size) answer; the
-    oracle is the recursive-CTE reachability labeling, so the driver
-    verifies the ALGORITHM, not just the plumbing."""
-    from hubverse_transform_spark.operators.clusters import (
-        connected_components_star,
-    )
-
+    """q45's duplicate clustering: connected components
+    (``clusters.dedup_clusters``) over the same 32-bit SimHash pair graph,
+    with per-node component id and cluster size. The query once ran the
+    large-star/small-star variant (Kiveris et al.); that variant is retired,
+    since pointer jumping already converges in O(log diameter) rounds. The
+    oracle is the recursive-CTE reachability labeling."""
     d = _t(spark, sf_dir, "documents")
     pairs = simhash_near_dup_pairs(
         d, "doc_id", "text", bits=32, ngram=2, max_hamming=3
     )
-    cc = connected_components_star(pairs)
-    w = Window.partitionBy("component")
-    return cc.select(
-        "node", "component", F.count(F.lit(1)).over(w).alias("cluster_size")
-    )
+    return dedup_clusters(pairs)
 
 
 def q195_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,9 +28,8 @@ behind the query surface in ``__spark_entry__``:
                       arrow-style casts, vector math, text metrics)
     - ``streaming``   windowed aggregations and interval joins over events
     - ``plans``       plan text for the dump tools, the curation funnel
+
+Import each name from its defining module; no ``__init__`` re-exports.
 """
 
-from hubverse_transform_spark.session import get_spark
-
-__all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -26,6 +26,17 @@ The pattern fits operators whose OUTPUT is much smaller than the
 intermediates (near-dup pairs, rank vectors, fingerprint overlaps). For a
 data-sized output, eager materialization would double-buffer the result —
 keep plain persist and document the trade instead.
+
+Fault tolerance. ``localCheckpoint`` (here, and the per-round state of
+``operators.clusters``, ``operators.graph`` and ``operators.profiling``)
+keeps its blocks in executor block managers with the lineage cut, so
+losing an executor that holds one fails the query instead of recomputing.
+That is acceptable for a small frame that lives no longer than the query
+building it: recovery is re-running that query. It is not acceptable on
+the Layer-A landing path (which has none), for a frame shared across queries
+or micro-batches, or under dynamic allocation, which drops idle executors
+with their blocks (``session.get_spark`` leaves it off; a deployment that
+turns it on needs ``checkpoint()`` to a reliable dir at these sites).
 """
 
 from __future__ import annotations
@@ -37,7 +48,8 @@ def compute_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Materialize ``result`` once (eager localCheckpoint: one AQE-planned
     job during which the ``cached`` persisted intermediates fill and serve
     every plan branch), then unpersist each intermediate. Returns the
-    checkpointed result frame."""
+    checkpointed result frame, which is not fault tolerant (see the module
+    docstring for where that is acceptable)."""
     out = result.localCheckpoint(eager=True)
     for df in cached:
         df.unpersist()

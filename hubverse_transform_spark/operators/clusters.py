@@ -4,14 +4,14 @@ Completes the dedup pipeline: candidate pairs (MinHash-LSH / SimHash) form an
 undirected graph; each connected component is one duplicate cluster, and the
 minimum doc id in a component is its canonical representative.
 
-Algorithm: iterative min-label propagation — every node adopts the smallest
-label among itself and its neighbors until fixpoint. Per iteration: ONE join
-(edges x labels) + ONE groupBy min — both shuffle on node id, so an iteration
-is O(|E|/cluster) per executor with no driver-side graph state. Lineage is
-truncated each round with ``localCheckpoint`` (iterative plans otherwise grow
-exponentially in Catalyst). Near-dup clusters have tiny diameters (pairs,
-triangles, short chains), so convergence takes ~log(diameter) rounds; the
-fixpoint check is a count of changed labels per round.
+Algorithm: min-label propagation with pointer jumping. Each round every
+node adopts the smallest label among itself and its neighbors (one join of
+edges x labels + one groupBy min, both shuffled on node id), then the label
+of its label (one more join), so a path of length L converges in
+O(log L) rounds. No driver-side graph state; the fixpoint check is a count
+of changed labels per round, and running out of rounds raises. Lineage is
+cut each round with ``localCheckpoint`` (iterative plans otherwise grow
+exponentially in Catalyst); ``caching`` records where that trade holds.
 
 Deterministic: the fixpoint labels every node with its component's minimum id
 regardless of execution order.
@@ -114,118 +114,3 @@ def dedup_clusters(
         "node", "component", F.count(F.lit(1)).over(w).alias("cluster_size")
     )
 
-
-def connected_components_star(
-    edges: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round algorithm that survives LARGE-diameter
-    graphs, where plain min-label propagation needs O(diameter) rounds.
-
-    - large-star: every node links each STRICTLY-LARGER neighbor to the
-      minimum of its closed neighborhood;
-    - small-star: every node links each not-larger neighbor (and itself)
-      to that minimum.
-
-    Both rounds are one groupBy-min plus one join on the node id — the
-    same two-shuffle cost as a propagation round, but the star moves whole
-    subtrees per round instead of one hop. Termination: the edge multiset
-    reaches a star forest (every node points at its component minimum);
-    detected by an order-insensitive hash of the edge set. Raises
-    ``RuntimeError`` if ``max_iter`` rounds pass without reaching that
-    fixpoint (labels would be silently wrong otherwise). Returns
-    ``(node, component)`` like ``connected_components``, identical labels
-    (asserted in tests on random graphs) — including nodes whose only
-    edges are self-loops, which come back as ``(node, node)`` singletons.
-    """
-    # the incoming pair frame is usually an expensive near-dup build; both
-    # the node-set scan and the edge canonicalization consume it, so
-    # materialize it once (eager checkpoint: the build job runs with full
-    # AQE planning; stored pair partitions feed both branches, GC-reclaimed)
-    raw = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).localCheckpoint()
-    # Nodes appear in the star rounds only via non-self-loop edges; keep the
-    # full node set so self-loop-only nodes re-enter as singletons at the end.
-    all_nodes = (
-        raw.select(F.col("u").alias("node"))
-        .unionByName(raw.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _edge_sig(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    sig = _edge_sig(e)
-    converged = False
-    for _ in range(max_iter):
-        # large-star over the symmetric adjacency
-        adj = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = adj.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            adj.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = (
-            large.filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # small-star over the (u > v) oriented edges
-        mins2 = e.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            e.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins2.select(F.col("u"), F.col("m").alias("v")))
-        )
-        e = (
-            small.filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = _edge_sig(e)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star: edge set did not reach the star-"
-            f"forest fixpoint within max_iter={max_iter} rounds; labels "
-            "would be incorrect — raise max_iter (rounds needed grow "
-            "O(log n), so 25 covers any realistic graph)"
-        )
-    # star forest: every u points at its component min v; the roots
-    # themselves are members too. Right-join onto the full node set so
-    # self-loop-only (edge-filtered) nodes come back as singletons.
-    labeled = e.select(
-        F.col("u").alias("node"), F.col("v").alias("component")
-    ).unionByName(
-        e.select(F.col("v").alias("node"), F.col("v").alias("component"))
-    ).distinct()
-    return all_nodes.join(labeled, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
-    )

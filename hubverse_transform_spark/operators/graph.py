@@ -61,7 +61,8 @@ def pagerank(
     unmaterialized persists makes the CacheManager's per-action
     ``sameResult`` scan quadratic in plan depth — a 30-round run on a
     7-node graph spent >7 min of JVM CPU planning, never executing. Short
-    runs (the 3-round q72 path) never reach a truncation point.
+    runs (the 3-round q72 path) never reach a truncation point. The
+    checkpoints are not fault tolerant; ``caching`` records where that holds.
     """
     # adjacency build: ONE exchange on src with partial collect_list
     # combining; keys are the complete node set (the input contract). The

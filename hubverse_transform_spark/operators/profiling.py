@@ -167,7 +167,9 @@ def power_iteration_top_eigen(
     output mirrored to a full matrix (dim^2 rows — tiny), each iteration
     is one join + one 64-key aggregation, and the norm is a 1-row
     broadcast. Deterministic up to float addition order (callers round);
-    the uniform start vector fixes the sign.
+    the uniform start vector fixes the sign. C and each round's vector are
+    ``localCheckpoint``ed (lineage cut; ``caching`` records where losing
+    fault tolerance that way holds).
     """
     cov = embedding_covariance(df, vec_col)
     covf = cov.unionByName(

@@ -78,7 +78,7 @@ def backfill_hub_dataset(
     file (a mis-named file is skipped with a warning), one partitioned write.
     Returns the transformed DataFrame (written).
     """
-    tasks = read_tasks(hub_path)
+    tasks = read_tasks(spark, hub_path)
     if not tasks:
         raise FileNotFoundError(f"could not read tasks.json for hub_path={hub_path!r}")
     schema = hub_schema(tasks)

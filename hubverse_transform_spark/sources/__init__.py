@@ -1,15 +1,1 @@
 """Readers: schema-enforced CSV, cast-on-read Parquet, hub config."""
-
-from hubverse_transform_spark.sources.config import read_tasks
-from hubverse_transform_spark.sources.model_output import (
-    read_model_output,
-    read_model_output_csv,
-    read_model_output_parquet,
-)
-
-__all__ = [
-    "read_tasks",
-    "read_model_output",
-    "read_model_output_csv",
-    "read_model_output_parquet",
-]

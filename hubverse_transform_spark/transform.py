@@ -87,7 +87,7 @@ class ModelOutputPipeline:
         self.input_file = sanitize_uri(posixpath.join(str(hub_path), str(mo_path)))
         self.output_path = sanitize_uri(str(output_path))
 
-        self.tasks = read_tasks(self.hub_path)
+        self.tasks = read_tasks(spark, self.hub_path)
         if not self.tasks:
             raise FileNotFoundError(f"could not read tasks.json for hub_path={self.hub_path!r}")
 

@@ -38,16 +38,30 @@ def test_dedup_clusters_sizes(spark):
     assert sorted(survivors) == [1, 8]
 
 
-def test_star_components_equal_label_propagation(spark):
-    """Large-star/small-star converges to the same (node, component-min)
-    labeling as min-label propagation on seeded random graphs, including a
-    long path (the large-diameter case star rounds exist for)."""
-    import random
+def _union_find_components(pairs) -> dict:
+    """Reference labeling: node -> its component's minimum id, by a plain
+    union-find over the pair list (every node of a pair, self-loops too)."""
+    parent: dict = {}
 
-    from hubverse_transform_spark.operators.clusters import (
-        connected_components,
-        connected_components_star,
-    )
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_star_components_equal_label_propagation(spark):
+    """connected_components labels every node with its component's minimum
+    id, as a union-find does, on a seeded random graph and on a long path
+    (diameter 40, the case the retired large-star/small-star variant was
+    added for) beside a triangle."""
+    import random
 
     rng = random.Random(5)
     cases = []
@@ -58,49 +72,25 @@ def test_star_components_equal_label_propagation(spark):
     for pairs in cases:
         pairs = [(a, b) for a, b in pairs if a != b]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        lp = {r.node: r.component for r in connected_components(df).collect()}
-        st = {r.node: r.component for r in connected_components_star(df).collect()}
-        assert st == lp, (sorted(st.items())[:10], sorted(lp.items())[:10])
+        got = {r.node: r.component for r in connected_components(df).collect()}
+        want = _union_find_components(pairs)
+        assert got == want, (sorted(got.items())[:10], sorted(want.items())[:10])
 
 
 def test_star_components_self_loop_only_nodes(spark):
-    """A node whose only edges are self-loops must come back as a
-    (node, node) singleton from BOTH variants — the self-loop filter may
-    not make the node disappear (ADVICE r3)."""
-    from hubverse_transform_spark.operators.clusters import (
-        connected_components,
-        connected_components_star,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (7, 7), (3, 3), (3, 4)], "id_a long, id_b long"
-    )
-    lp = {r.node: r.component for r in connected_components(edges).collect()}
-    st = {r.node: r.component for r in connected_components_star(edges).collect()}
-    assert st == lp
-    assert st[7] == 7  # self-loop-only: singleton survives
-    assert st[3] == 3 and st[4] == 3  # self-loop on a connected node is inert
-
-
-def test_star_components_raises_without_fixpoint(spark):
-    """Exhausting max_iter before the star-forest fixpoint raises instead
-    of returning silently-wrong labels (ADVICE r3)."""
-    import pytest
-
-    from hubverse_transform_spark.operators.clusters import (
-        connected_components_star,
-    )
-
-    # a path of length 8 cannot converge in one star round
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components_star(edges, max_iter=1)
+    """A node whose only edges are self-loops comes back as a (node, node)
+    singleton, and a self-loop on a connected node changes nothing
+    (ADVICE r3)."""
+    pairs = [(1, 2), (7, 7), (3, 3), (3, 4)]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {r.node: r.component for r in connected_components(edges).collect()}
+    assert got == _union_find_components(pairs)
+    assert got[7] == 7  # self-loop-only: singleton survives
+    assert got[3] == 3 and got[4] == 3  # self-loop on a connected node is inert
 
 
 def test_label_propagation_raises_without_fixpoint(spark):
-    """connected_components also refuses to return unconverged labels."""
+    """connected_components refuses to return unconverged labels."""
     import pytest
 
     from hubverse_transform_spark.operators.clusters import connected_components

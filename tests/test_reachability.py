@@ -29,6 +29,12 @@ tests), or it earns a ``KEPT``/``KEPT_OPTIONS`` entry whose reason names the
 parity row or the roadmap item that adopts it. An entry whose def became
 reached or was deleted, or whose option is now set both ways or is gone,
 fails too, so neither dict can go stale.
+
+Re-exports: every name is imported from the module that defines it, so a
+name an import binds in a package ``__init__.py`` must be taken through that
+package (``from <package> import <name>``, or ``<package>.<name>`` after
+``import <package>``) by a root, a test or a package module; otherwise the
+second import path is dead and the binding goes.
 """
 
 from __future__ import annotations
@@ -200,6 +206,50 @@ def unset_option_values() -> set[tuple[str, str, str]]:
     return {k for k, values in passed.items() if values != {True, False}}
 
 
+def _package_of(path: pathlib.Path) -> str:
+    """Dotted name of the package a file's relative imports resolve against."""
+    return ".".join(path.relative_to(ROOT).parts[:-1])
+
+
+def reexports() -> set[tuple[str, str]]:
+    """(package, name) of every name an import binds in a package
+    ``__init__.py``."""
+    out = set()
+    for init in PKG.rglob("__init__.py"):
+        for stmt in ast.parse(init.read_text()).body:
+            if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                continue
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                for alias in stmt.names:
+                    out.add((_package_of(init), (alias.asname or alias.name).split(".")[0]))
+    return out
+
+
+def imported_through_packages() -> set[tuple[str, str]]:
+    """(module, name) a root, a test or a package module takes from a module
+    by name: ``from <module> import <name>``, or ``<module>.<name>``
+    over-approximated as any identifier ``<name>`` in a file that imports
+    ``<module>`` (or a submodule of it)."""
+    files = [*_root_files(), *(ROOT / "tests").glob("*.py"), *PKG.rglob("*.py")]
+    out = set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        imported: set[str] = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                module = node.module or ""
+                if node.level:
+                    base = _package_of(path).rsplit(".", node.level - 1)[0]
+                    module = f"{base}.{module}" if module else base
+                out |= {(module, alias.name) for alias in node.names}
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    parts = alias.name.split(".")
+                    imported |= {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+        out |= {(module, attr) for module in imported for attr in _identifiers(tree)}
+    return out
+
+
 def test_every_package_def_is_reached_or_kept():
     dead_defs, _ = unreached()
     dead = sorted(dead_defs - set(KEPT))
@@ -222,3 +272,11 @@ def test_every_bool_option_is_set_both_ways_or_kept():
         f"(delete the option and the code it selects, or add a KEPT_OPTIONS reason): {dead}"
     )
     assert not stale, f"KEPT_OPTIONS entries now set both ways or no longer present: {stale}"
+
+
+def test_every_reexport_is_imported_through_its_package():
+    unused = sorted(reexports() - imported_through_packages())
+    assert not unused, (
+        "names a package __init__.py imports that nothing takes through the package "
+        f"(import them from their defining module and drop the re-export): {unused}"
+    )

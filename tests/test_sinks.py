@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from hubverse_transform_spark.sinks import (
@@ -69,8 +71,6 @@ def test_backfill_rejects_reordered_csv_header(spark, hub_dir: Path, csv_numeric
     import csv
     import io
 
-    import pytest
-
     from hubverse_transform_spark.transform import ModelOutputPipeline
 
     rows = list(csv.reader(io.StringIO(csv_numeric_file.read_text())))
@@ -94,27 +94,26 @@ def test_backfill_rejects_reordered_csv_header(spark, hub_dir: Path, csv_numeric
     }
 
 
-def test_backfill_lands_what_the_per_file_pipeline_lands(
-    spark, hub_dir: Path, csv_numeric_file: Path, caplog
-):
+@pytest.mark.parametrize("file_format", ["csv", "parquet"])
+def test_backfill_lands_what_the_per_file_pipeline_lands(spark, hub_dir: Path, file_format, request, caplog):
     """Backfill is the per-object Lambda re-fired over raw/ (A14): for every
     file ModelOutputPipeline accepts, the lake holds its rows under the
     pipeline's (model_id, round_id); a file the pipeline rejects lands no
-    rows and logs one warning."""
+    rows and logs one warning. CSV and Parquet alike."""
     import logging
     import os
-
-    import pytest
 
     from hubverse_transform_spark.transform import ModelOutputPipeline
     from tests.conftest import SUBMISSION_NAME_CASES
 
+    source = request.getfixturevalue(f"{file_format}_numeric_file")
+    names = [n.removesuffix(".csv") + f".{file_format}" for n in SUBMISSION_NAME_CASES]
     raw = hub_dir / "raw"
-    for name in SUBMISSION_NAME_CASES:
-        (raw / name).write_text(csv_numeric_file.read_text())
+    for name in names:
+        (raw / name).write_bytes(source.read_bytes())
     lake = hub_dir / "lake"
     with caplog.at_level(logging.WARNING, logger="hubverse_transform_spark.transform"):
-        backfill_hub_dataset(spark, str(hub_dir), str(lake))
+        backfill_hub_dataset(spark, str(hub_dir), str(lake), file_format=file_format)
 
     def rows(df):
         out: dict = {}
@@ -123,7 +122,7 @@ def test_backfill_lands_what_the_per_file_pipeline_lands(
         return {k: sorted(v) for k, v in out.items()}
 
     want, rejected = {}, []
-    for name in [csv_numeric_file.name, *SUBMISSION_NAME_CASES]:
+    for name in [source.name, *names]:
         try:
             mo = ModelOutputPipeline(spark, str(hub_dir), f"raw/{name}", str(hub_dir / "out"))
         except ValueError:
@@ -142,7 +141,7 @@ def test_backfill_lands_what_the_per_file_pipeline_lands(
     for name in rejected:
         (raw / name).rename(hub_dir / "misnamed" / name)
     with pytest.raises(ValueError, match="no submission file"):
-        backfill_hub_dataset(spark, str(hub_dir), str(lake), raw_dir="misnamed")
+        backfill_hub_dataset(spark, str(hub_dir), str(lake), raw_dir="misnamed", file_format=file_format)
 
 
 def test_lake_partition_pruning(spark, tmp_path: Path):

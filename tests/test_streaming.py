@@ -87,6 +87,22 @@ def test_stream_lands_names_that_percent_encoding_changes(spark, hub_dir: Path):
     assert spark.read.parquet(str(hub_dir / "out")).count() == 4 * (len(CSV_NUMERIC.splitlines()) - 1)
 
 
+def test_uri_hub_lands_through_pipeline_and_stream(spark, hub_dir: Path, csv_numeric_file: Path):
+    # tasks.json is read through the Hadoop FileSystem, so a file:// hub (like
+    # the s3a:// one from_s3 builds) loads its config on both paths
+    from hubverse_transform_spark.transform import ModelOutputPipeline
+
+    hub = hub_dir.as_uri()
+    landed = [f"{csv_numeric_file.stem}.parquet"]
+    mo = ModelOutputPipeline(spark, hub, f"raw/{csv_numeric_file.name}", f"{hub}/out")
+    assert spark.read.parquet(mo.add_model_output()).count() == 6
+    assert [p.name for p in (hub_dir / "out").glob("*.parquet")] == landed
+    mo.delete_model_output()
+    q = stream_model_outputs(spark, hub, checkpoint_dir=str(hub_dir / "ckpt"))
+    q.awaitTermination()
+    assert [p.name for p in (hub_dir / "out").glob("*.parquet")] == landed
+
+
 def test_dispatch_object_event_logs_and_suppresses(spark, caplog):
     # same failure policy as the stream: a malformed event is logged, not raised
     from hubverse_transform_spark.streaming.ingest import dispatch_object_event

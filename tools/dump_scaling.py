@@ -50,7 +50,7 @@ HEADLINE = [
     "q170_quantile_binning",    # exact-percentile binning (declared twin: q207)
     "q175_ivf_recall_audit",    # IVF vs exact top-k recall, composed
     "q188_minhash_estimate_error",  # MinHash estimate-vs-exact MAE
-    "q194_star_components",     # large-star/small-star O(log n) components
+    "q194_star_components",     # q45's connected components (star variant retired)
     "q198_cluster_survivorship",   # dedup survivorship composition
     "q199_dedup_method_yield",  # 3 dedup pipelines + union
     "q202_cluster_size_distribution",  # cluster-size histogram composition

@@ -1408,29 +1408,27 @@ def q71_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pmi_bigrams(d, min_count=5, k=20)
 
 
-def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q72's edge build, exposed so the plan test can assert its shape
-    directly: pagerank() returns an eagerly localCheckpointed frame, which
-    truncates this subplan out of the final frame's explain output.
-
-    r14 (guide §2.4, remove shuffles outright): the pair stream comes from
-    a BASKET build — group lineitem by order, sort the distinct part set,
-    and emit every i<j pair MAP-SIDE from the array — instead of the r1-r13
-    lineitem⋈lineitem shuffled-hash self-join. One exchange of the fact
-    table (with partial collect_set combining) replaces two exchanges plus
-    the join; the i<j orientation falls out of the sorted array for free.
-    Exactly the same distinct oriented-pair set: the self-join's a<b filter
-    over row pairs ≡ index-ordered pairs of the per-order distinct sorted
-    part set (duplicate parts within an order collapse in either form —
-    collect_set there, the pair distinct here; proven set-equal vs the old
-    build at sf0.001, and the oracle's brute self-join CTE is unchanged).
+def _part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-order pairs: each distinct (src, dst) with src < dst of
+    two parts in one order, from the BASKET build — group lineitem by
+    order, sort the distinct part set, and emit every i<j pair MAP-SIDE
+    from the array — instead of a lineitem⋈lineitem shuffled-hash
+    self-join (guide §2.4, remove shuffles outright). One exchange of the
+    fact table (with partial collect_set combining) replaces two exchanges
+    plus the join; the i<j orientation falls out of the sorted array for
+    free. Exactly the self-join's pair set: its a<b filter over row pairs
+    ≡ index-ordered pairs of the per-order distinct sorted part set
+    (duplicate parts within an order collapse in either form — collect_set
+    there, the pair distinct here; tests/test_plans.py checks the equality
+    against a self-join at sf0.001 and sf0.01, and the oracles' brute
+    self-join CTEs are unchanged).
     Skew bound: the map-side explode is quadratic in BASKET size (parts
     per order — bounded small by the data model, ~7 here), never in part
     frequency; the heavy tail (a part in MANY orders) lands on the
-    downstream (src,dst) distinct exchange exactly as before.
+    downstream (src,dst) distinct exchange.
     The basket build relies on ``l_orderkey`` being NOT NULL (TPC-H declares
     it so): grouping would gather NULL-key rows into one basket and emit
-    their pairs, where the old equi-join dropped NULL keys."""
+    their pairs, where an equi-join drops NULL keys."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("_ps")
@@ -1446,11 +1444,22 @@ def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    half = (
+    return (
         baskets.select(F.explode(pairs).alias("_e"))
         .select("_e.src", "_e.dst")
         .distinct()
     )
+
+
+def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetrized part co-order graph (both orientations of every
+    ``_part_pairs`` pair) that q72's pagerank and the q236/q248/q249/q252/
+    q253 graph queries consume. Split from ``_part_pairs`` because q334
+    needs only the oriented half, which it persists; kept as its own
+    function so the plan test can assert the basket shape directly:
+    pagerank() returns an eagerly localCheckpointed frame, which truncates
+    this subplan out of the final frame's explain output."""
+    half = _part_pairs(spark, sf_dir)
     # both orientations in ONE map-side explode over the deduped half (a
     # two-branch union would re-derive the basket build per branch - the
     # r13 zero-exchange-reuse finding)
@@ -1466,12 +1475,12 @@ def _q72_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q72_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 iterations, d=0.85) over the part co-occurrence graph:
-    parts are linked when they appear in the same order. Edge build is a
-    self-join of lineitem on l_orderkey (distinct, self-pairs removed —
+    parts are linked when they appear in the same order. Edge build is
+    ``_q72_edges`` (per-order part pairs, distinct, self-pairs removed —
     symmetric by construction, so no dangling mass); then the iterative
     two-shuffle join/agg loop in operators/graph.pagerank. The oracle
     unrolls the same three iterations as SQL CTEs."""
-    # the edge build above symmetrizes explicitly, which meets pagerank's
+    # the edge build symmetrizes explicitly, which meets pagerank's
     # input contract (src set == dst set, no NULL endpoints)
     pairs = _q72_edges(spark, sf_dir)
     pr = pagerank(pairs, iterations=3, damping=0.85)
@@ -2996,12 +3005,10 @@ def q136_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q137_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count (graph.triangle_count) on the brand co-purchase graph:
-    brands are linked when they co-occur in >= 5 orders (the q119 basket
-    self-join, thresholded); ordered two-join finds each triangle once.
-    Node set is bounded (25 brands) but the operator's join discipline is
-    the general one."""
+def _brand_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The brand co-purchase graph: ``(src, dst, n)`` for every brand pair
+    src < dst that co-occurs in ``n >= 5`` orders (the basket self-join of
+    q119, thresholded). Shared by q137, q150 and q193."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     baskets = (
@@ -3012,14 +3019,22 @@ def q137_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = baskets.select(
         F.col("l_orderkey").alias("ok2"), F.col("brand").alias("brand2")
     )
-    edges = (
-        baskets.join(b2, (baskets.l_orderkey == b2.ok2))
+    return (
+        baskets.join(b2, baskets.l_orderkey == b2.ok2)
         .filter(F.col("brand") < F.col("brand2"))
-        .groupBy("brand", "brand2")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= 5)
-        .select(F.col("brand").alias("src"), F.col("brand2").alias("dst"))
+        .groupBy(F.col("brand").alias("src"), F.col("brand2").alias("dst"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 5)
     )
+
+
+def q137_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Triangle count (graph.triangle_count) on the brand co-purchase graph:
+    brands are linked when they co-occur in >= 5 orders (the q119 basket
+    self-join, thresholded); ordered two-join finds each triangle once.
+    Node set is bounded (25 brands) but the operator's join discipline is
+    the general one."""
+    edges = _brand_edges(spark, sf_dir).select("src", "dst")
     return triangle_count(edges).orderBy("node")
 
 
@@ -3254,20 +3269,27 @@ def q144_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _event_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events as ``(user_id, event_type, _t, _cents)``: epoch seconds for
+    the RANGE-framed touch windows and the value in exact integer cents
+    (q145, q312)."""
+    from hubverse_transform_spark.operators.sessions import _epoch_seconds
+
+    return _t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_type",
+        _epoch_seconds(F.col("ts")).alias("_t"),
+        F.round(F.col("value") * 100, 0).cast("long").alias("_cents"),
+    )
+
+
 def q145_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: every purchase credits the latest
     non-purchase event by the same user within the preceding hour (else
     'direct'). A RANGE-framed window over epoch seconds carries the latest
     qualifying (ts, type) struct — no self-join, one user-keyed shuffle;
     credited value sums exactly via integer cents."""
-    from hubverse_transform_spark.operators.sessions import _epoch_seconds
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        _epoch_seconds(F.col("ts")).alias("_t"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("_cents"),
-    )
+    ev = _event_cents(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("_t")
@@ -3434,24 +3456,7 @@ def q150_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest hop count. UNION ALL recursion terminates on the DAG order +
     depth guard identically in both engines; parameterized SQL carries the
     seed/threshold (no string splicing)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    baskets = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .select("l_orderkey", F.col("p_brand").alias("brand"))
-        .distinct()
-    )
-    b2 = baskets.select(
-        F.col("l_orderkey").alias("ok2"), F.col("brand").alias("brand2")
-    )
-    edges = (
-        baskets.join(b2, baskets.l_orderkey == b2.ok2)
-        .filter(F.col("brand") < F.col("brand2"))
-        .groupBy(F.col("brand").alias("src"), F.col("brand2").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 5)
-        .select("src", "dst")
-    )
+    edges = _brand_edges(spark, sf_dir).select("src", "dst")
     # materialize the (tiny) edge list before recursing: a WITH-RECURSIVE
     # body re-evaluates every CTE it references per iteration, so leaving
     # the basket self-join inline multiplies the expensive build by the
@@ -4573,22 +4578,26 @@ def q187_struct_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q188_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch calibration audit: for every LSH-surfaced near-dup pair,
-    compare the MinHash ESTIMATE of Jaccard (fraction of equal signature
-    components) against the exact value, and roll up the mean absolute
-    error and bias. The check that tells you whether 8 hashes are enough
-    before you trust banding at 100 TB; both the estimate and the truth
-    are engine-reproducible (md5 permutation family)."""
+def _minhash_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every LSH-surfaced document pair (8 hashes, 4 bands, word 3-grams)
+    with its exact ``jaccard`` and its MinHash ESTIMATE ``_est`` (fraction
+    of equal signature components) — the scored pair set q188 calibrates
+    and q330 sweeps thresholds over."""
     d = _t(spark, sf_dir, "documents")
-    # materialize=False: the eager thin-banding shape measured 1.42x here
-    # (evidence/ab_r13b_exp4.jsonl) - the signature re-join below already
-    # overlaps the duplicated shingling across idle cores (see the
-    # rejected-persist note), and the checkpoint serializes that
+    # materialize=False: the eager thin-banding shape measured 1.42x (q188)
+    # and 1.59x (q330) (evidence/ab_r13b_exp4.jsonl) - the signature
+    # re-join below already overlaps the duplicated shingling across idle
+    # cores (see the rejected-persist note), and the checkpoint serializes
+    # that
     pairs = minhash_lsh_pairs(
         d, "doc_id", "text", ngram=3, num_hashes=8, bands=4, threshold=0.0,
         materialize=False,
     )
+    # r13 measured and REJECTED (guide §5): persisting the signature table
+    # (consumed by both candidate-re-join sides) measured 1.17x SLOWER
+    # min-of-9 interleaved in q330 (evidence/ab_r13_regress_check.jsonl) —
+    # at this scale the duplicated shingling overlaps across idle cores
+    # while the cache fill + checkpoint serialize. Left duplicated.
     sigs = d.select(
         F.col("doc_id").alias("_id"),
         minhash_signature(
@@ -4606,10 +4615,22 @@ def q188_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / F.lit(8.0)
     )
-    scored = (
+    return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
-        .select((est - F.col("jaccard")).alias("_err"))
+        .select(est.alias("_est"), "jaccard")
+    )
+
+
+def q188_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch calibration audit: for every LSH-surfaced near-dup pair,
+    compare the MinHash ESTIMATE of Jaccard (fraction of equal signature
+    components) against the exact value, and roll up the mean absolute
+    error and bias. The check that tells you whether 8 hashes are enough
+    before you trust banding at 100 TB; both the estimate and the truth
+    are engine-reproducible (md5 permutation family)."""
+    scored = _minhash_estimates(spark, sf_dir).select(
+        (F.col("_est") - F.col("jaccard")).alias("_err")
     )
     return scored.agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -4758,23 +4779,7 @@ def q193_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q150's canonical edge set) — how many brands have degree d. The
     first-look health check before running PageRank/components on any
     graph; two bounded aggregations after the edge build."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    baskets = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .select("l_orderkey", F.col("p_brand").alias("brand"))
-        .distinct()
-    )
-    b2 = baskets.select(
-        F.col("l_orderkey").alias("ok2"), F.col("brand").alias("brand2")
-    )
-    edges = (
-        baskets.join(b2, baskets.l_orderkey == b2.ok2)
-        .filter(F.col("brand") < F.col("brand2"))
-        .groupBy(F.col("brand").alias("src"), F.col("brand2").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 5)
-    )
+    edges = _brand_edges(spark, sf_dir)
     # r13 s3 (zero-branch-reuse finding): the two-branch union re-derived
     # the whole basket self-join once per side; ONE map-side explode emits
     # both endpoints from a single derivation. Same multiset.
@@ -8824,6 +8829,25 @@ def q280_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _melt(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``(col_name, v)`` rows, one per input row and column of ``cols``,
+    values cast to double: the melt-via-array-of-structs pattern, so ONE
+    scan feeds every column's statistics (q281, q315)."""
+    return df.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("col_name"),
+                        F.col(c).cast("double").alias("v"),
+                    )
+                    for c in cols
+                ]
+            )
+        ).alias("_s")
+    ).select("_s.col_name", "_s.v")
+
+
 def q281_column_stats_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style column statistics [EXT]: per numeric lineitem column
     — row/null counts, exact NDV, min/max, quartiles — the statistics a
@@ -8840,19 +8864,7 @@ def q281_column_stats_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     with approx_count_distinct as the documented lake-scale swap."""
     li = _t(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    melted = li.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col_name"),
-                        F.col(c).cast("double").alias("v"),
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("_s")
-    ).select("_s.col_name", "_s.v")
+    melted = _melt(li, cols)
     cnts = melted.groupBy("col_name", "v").agg(F.count(F.lit(1)).alias("cnt"))
     return (
         cnts.groupBy("col_name")
@@ -10346,14 +10358,7 @@ def q312_attribution_model_compare(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape: one RANGE-framed window per user collects the touch
     structs (no self-join); linear explodes only purchase rows × their
     bounded touch lists; final rollup is channel-keyed."""
-    from hubverse_transform_spark.operators.sessions import _epoch_seconds
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        _epoch_seconds(F.col("ts")).alias("_t"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("_cents"),
-    )
+    ev = _event_cents(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("_t").rangeBetween(-3600, 0)
     touches = F.array_sort(
         F.collect_list(
@@ -10596,19 +10601,7 @@ def q315_ecod_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-10."""
     li = _t(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_discount", "l_tax"]
-    melted = li.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col_name"),
-                        F.col(c).cast("double").alias("v"),
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("_s")
-    ).select("_s.col_name", "_s.v")
+    melted = _melt(li, cols)
     cnts = melted.groupBy("col_name", "v").agg(F.count(F.lit(1)).alias("_c"))
     wcdf = (
         Window.partitionBy("col_name")
@@ -10873,6 +10866,21 @@ def q320_equi_depth_histogram_audit(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+def _transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order event transitions ``(cur, nxt)``: each event's type and
+    the type of the same user's next event (by ts, then event_id), last
+    events dropped — a user-partitioned lead window (q321, q339)."""
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.select(
+            F.col("event_type").alias("cur"),
+            F.lead("event_type").over(w).alias("nxt"),
+        )
+        .filter(F.col("nxt").isNotNull())
+    )
+
+
 def q321_markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov next-event prediction accuracy [EXT]: train the first-order
     transition table (q226's matrix), predict each transition's next type
@@ -10883,15 +10891,7 @@ def q321_markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFra
     Scale shape: transitions are a user-partitioned lead window; the
     argmax is a 25-row window over the aggregated matrix; scoring joins
     the broadcast 5-row prediction map."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.select(
-            F.col("event_type").alias("cur"),
-            F.lead("event_type").over(w).alias("nxt"),
-        )
-        .filter(F.col("nxt").isNotNull())
-    )
+    trans = _transitions(spark, sf_dir)
     counts = trans.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("_n"))
     wr = Window.partitionBy("cur").orderBy(F.col("_n").desc(), "nxt")
     pred = (
@@ -11385,43 +11385,8 @@ def q330_dedup_threshold_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: candidates come from banding (never all-pairs); the
     sweep explodes the scored pair set ×4 thresholds."""
-    d = _t(spark, sf_dir, "documents")
-    # materialize=False: the eager thin-banding shape measured 1.59x here
-    # (evidence/ab_r13b_exp4.jsonl) - same class as the rejected persist
-    # below: this query's duplicated work hides in idle cores while a
-    # checkpoint serializes
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", ngram=3, num_hashes=8, bands=4, threshold=0.0,
-        materialize=False,
-    )
-    # r13 measured and REJECTED (guide §5): persisting the signature table
-    # (consumed by both candidate-re-join sides) measured 1.17x SLOWER
-    # min-of-9 interleaved (evidence/ab_r13_regress_check.jsonl) — at this
-    # scale the duplicated shingling overlaps across idle cores while the
-    # cache fill + checkpoint serialize. Left duplicated.
-    sigs = d.select(
-        F.col("doc_id").alias("_id"),
-        minhash_signature(shingle_ngrams(F.col("text"), 3), num_hashes=8).alias(
-            "_sig"
-        ),
-    )
-    sa = sigs.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_siga"))
-    sb = sigs.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sigb"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("_siga"), F.col("_sigb"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(8.0)
-    )
-    scored = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            est.alias("_est"), (F.col("jaccard") >= 0.7).alias("_truth")
-        )
+    scored = _minhash_estimates(spark, sf_dir).select(
+        "_est", (F.col("jaccard") >= 0.7).alias("_truth")
     )
     swept = scored.select(
         "_est",
@@ -11462,6 +11427,50 @@ def q330_dedup_threshold_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _head_cooccurrence(li: DataFrame, k: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Order co-occurrence counts of the ``k`` most-ordered parts, the
+    shared front half of the item-item CF queries (q331, q353, q365, q370).
+    ``li`` holds distinct (l_orderkey, l_partkey) rows. Returns
+    ``(n_i, top_items, co)``: per-part order counts ``(l_partkey, _n)``,
+    the head ``(item_a, _na)`` ordered by count then id, and
+    ``(item_a, item_b, _co)`` shared orders per head pair. ``n_i`` and
+    ``top_items`` are persisted (each feeds two plan branches); the caller
+    releases them with its output."""
+    n_i = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n")).persist()
+    b = li.select(
+        F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
+    )
+    top_items = (
+        n_i.orderBy(F.col("_n").desc(), "l_partkey")
+        .limit(k)
+        .select(F.col("l_partkey").alias("item_a"), F.col("_n").alias("_na"))
+    ).persist()
+    # r13 (guide §3.2/§2.3): the head restriction is pushed BELOW the
+    # co-occurrence self-join — co(i,j) counts shared orders per pair, so
+    # restricting the LEFT side to the k head items before the join
+    # yields bit-identical counts for every surviving (item_a, item_b)
+    # while never materializing the full item×item table. The k-row head
+    # list is a constant-k broadcast (scale-safe); the order join is
+    # UNHINTED so AQE broadcasts the head order slice while it is small
+    # and falls back to a shuffle join when it is not (q334's deg-join
+    # convention) — Catalyst has no rule to push an inner join below an
+    # aggregate, so the rewrite must be spelled here.
+    co = (
+        li.join(
+            F.broadcast(top_items.select(F.col("item_a").alias("l_partkey"))),
+            "l_partkey",
+        )
+        .join(
+            b,
+            (F.col("l_orderkey") == F.col("_ok"))
+            & (F.col("l_partkey") != F.col("_pb")),
+        )
+        .groupBy(F.col("l_partkey").alias("item_a"), F.col("_pb").alias("item_b"))
+        .agg(F.count(F.lit(1)).alias("_co"))
+    )
+    return n_i, top_items, co
+
+
 def q331_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering [EXT]: part-part cosine
     similarity over order-interaction vectors (binary "ordered together"
@@ -11485,38 +11494,7 @@ def q331_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     ).distinct().persist()
-    n_i = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n")).persist()
-    b = li.select(
-        F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
-    )
-    top_items = (
-        n_i.orderBy(F.col("_n").desc(), "l_partkey")
-        .limit(20)
-        .select(F.col("l_partkey").alias("item_a"), F.col("_n").alias("_na"))
-    ).persist()
-    # r13 (guide §3.2/§2.3): the head restriction is pushed BELOW the
-    # co-occurrence self-join — co(i,j) counts shared orders per pair, so
-    # restricting the LEFT side to the k=20 head items before the join
-    # yields bit-identical counts for every surviving (item_a, item_b)
-    # while never materializing the full item×item table. The 20-row head
-    # list is a constant-k broadcast (scale-safe); the order join is
-    # UNHINTED so AQE broadcasts the head order slice while it is small
-    # and falls back to a shuffle join when it is not (q334's deg-join
-    # convention) — Catalyst has no rule to push an inner join below an
-    # aggregate, so the rewrite must be spelled here.
-    co = (
-        li.join(
-            F.broadcast(top_items.select(F.col("item_a").alias("l_partkey"))),
-            "l_partkey",
-        )
-        .join(
-            b,
-            (F.col("l_orderkey") == F.col("_ok"))
-            & (F.col("l_partkey") != F.col("_pb")),
-        )
-        .groupBy(F.col("l_partkey").alias("item_a"), F.col("_pb").alias("item_b"))
-        .agg(F.count(F.lit(1)).alias("_co"))
-    )
+    n_i, top_items, co = _head_cooccurrence(li, 20)
     scored = (
         co.join(F.broadcast(top_items), "item_a")
         .join(
@@ -11682,26 +11660,18 @@ def q334_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles; this normalizes them into the standard small-world
     statistic, Watts & Strogatz 1998).
 
-    Scale shape: edges come from the order-blocked self-join (bounded by
-    order width); triangles enumerate via the DEGREE-ORIENTED two-path
-    join — orienting every edge from its lower-(degree, id) endpoint
-    bounds per-node out-degree by ~√(2m), so hub wedges never explode
-    (the standard arboricity argument; id orientation measured 4×
-    slower on this graph); each triangle is found exactly once."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    b = li.select(
-        F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
-    )
-    edges = (
-        li.join(
-            b.hint("shuffle_hash"),
-            (F.col("l_orderkey") == F.col("_ok"))
-            & (F.col("l_partkey") < F.col("_pb")),
-        )
-        .select(F.col("l_partkey").alias("src"), F.col("_pb").alias("dst"))
-        .distinct()
-        .persist()
-    )
+    Scale shape: edges are ``_part_pairs``, the oriented src < dst pairs
+    of q72's basket build (one lineitem exchange, pairs emitted map-side
+    per order, bounded by order width); triangles enumerate via the
+    DEGREE-ORIENTED two-path join — orienting every edge from its
+    lower-(degree, id) endpoint bounds per-node out-degree by ~√(2m), so
+    hub wedges never explode (the standard arboricity argument; id
+    orientation measured 4× slower on this graph); each triangle is found
+    exactly once."""
+    # basket build over the lineitem self-join, by measurement: sf0.1,
+    # 10 order-balanced pairs, median-of-3 11.65 s vs 12.57 s, minima
+    # 9.89 s vs 9.86 s (evidence/ab_q334_part_pairs.jsonl)
+    edges = _part_pairs(spark, sf_dir).persist()
     # r13 s3: both endpoints from ONE map-side explode (the two-branch
     # union re-derived the edge build per side — zero branch reuse), and
     # edges/deg persisted across the intersection pipeline: the stage
@@ -12017,15 +11987,7 @@ def q339_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one lead-window pass, one (cur, next) aggregation, then
     entropy from the cascaded per-cur rollup (ln(tot) − Σ n·ln(n)/tot —
     no window needed)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.select(
-            F.col("event_type").alias("cur"),
-            F.lead("event_type").over(w).alias("nxt"),
-        )
-        .filter(F.col("nxt").isNotNull())
-    )
+    trans = _transitions(spark, sf_dir)
     counts = trans.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("_n"))
     return counts.groupBy("cur").agg(
         F.sum("_n").alias("n_transitions"),
@@ -12939,33 +12901,7 @@ def q353_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     train = keyed.filter(F.col("_train")).select("l_orderkey", "l_partkey")
     test = keyed.filter(~F.col("_train")).select("l_orderkey", "l_partkey")
-    n_i = train.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("_n")
-    ).persist()
-    b = train.select(
-        F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
-    )
-    top_items = (
-        n_i.orderBy(F.col("_n").desc(), "l_partkey")
-        .limit(20)
-        .select(F.col("l_partkey").alias("item_a"), F.col("_n").alias("_na"))
-    ).persist()
-    # r13 (guide §3.2/§2.3): head restriction pushed below the co-occurrence
-    # self-join — counts are per-pair, so restricting the LEFT side to the
-    # k=20 head items is exact (q331's rewrite, same rationale/comment).
-    co = (
-        train.join(
-            F.broadcast(top_items.select(F.col("item_a").alias("l_partkey"))),
-            "l_partkey",
-        )
-        .join(
-            b,
-            (F.col("l_orderkey") == F.col("_ok"))
-            & (F.col("l_partkey") != F.col("_pb")),
-        )
-        .groupBy(F.col("l_partkey").alias("item_a"), F.col("_pb").alias("item_b"))
-        .agg(F.count(F.lit(1)).alias("_co"))
-    )
+    n_i, top_items, co = _head_cooccurrence(train, 20)
     wr = Window.partitionBy("item_a").orderBy(
         F.col("_sim").desc(), "item_b"
     )
@@ -13733,31 +13669,7 @@ def q365_rec_novelty_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct().persist()
     n_orders = li.select("l_orderkey").distinct().count()
     n_catalog = _t(spark, sf_dir, "part").count()
-    n_i = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n")).persist()
-    b = li.select(
-        F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
-    )
-    top_items = (
-        n_i.orderBy(F.col("_n").desc(), "l_partkey")
-        .limit(20)
-        .select(F.col("l_partkey").alias("item_a"), F.col("_n").alias("_na"))
-    ).persist()
-    # r13 (guide §3.2/§2.3): head restriction pushed below the co-occurrence
-    # self-join — counts are per-pair, so restricting the LEFT side to the
-    # k=20 head items is exact (q331's rewrite, same rationale/comment).
-    co = (
-        li.join(
-            F.broadcast(top_items.select(F.col("item_a").alias("l_partkey"))),
-            "l_partkey",
-        )
-        .join(
-            b,
-            (F.col("l_orderkey") == F.col("_ok"))
-            & (F.col("l_partkey") != F.col("_pb")),
-        )
-        .groupBy(F.col("l_partkey").alias("item_a"), F.col("_pb").alias("item_b"))
-        .agg(F.count(F.lit(1)).alias("_co"))
-    )
+    n_i, top_items, co = _head_cooccurrence(li, 20)
     wr = Window.partitionBy("item_a").orderBy(F.col("_sim").desc(), "item_b")
     recs = (
         co.join(F.broadcast(top_items), "item_a")
@@ -14057,31 +13969,7 @@ def q370_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     ).distinct().persist()
-    n_i = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n")).persist()
-    b = li.select(
-        F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
-    )
-    top_items = (
-        n_i.orderBy(F.col("_n").desc(), "l_partkey")
-        .limit(10)
-        .select(F.col("l_partkey").alias("item_a"), F.col("_n").alias("_na"))
-    ).persist()
-    # r13 (guide §3.2/§2.3): head restriction pushed below the co-occurrence
-    # self-join — counts are per-pair, so restricting the LEFT side to the
-    # k=10 head items is exact (q331's rewrite, same rationale/comment).
-    co = (
-        li.join(
-            F.broadcast(top_items.select(F.col("item_a").alias("l_partkey"))),
-            "l_partkey",
-        )
-        .join(
-            b,
-            (F.col("l_orderkey") == F.col("_ok"))
-            & (F.col("l_partkey") != F.col("_pb")),
-        )
-        .groupBy(F.col("l_partkey").alias("item_a"), F.col("_pb").alias("item_b"))
-        .agg(F.count(F.lit(1)).alias("_co"))
-    )
+    n_i, top_items, co = _head_cooccurrence(li, 10)
     cand = (
         co.join(F.broadcast(top_items), "item_a")
         .join(

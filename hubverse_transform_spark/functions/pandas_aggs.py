@@ -14,9 +14,12 @@ from __future__ import annotations
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 
-@pandas_udf("double")
+# DoubleType(), not "double": a type string is parsed through the JVM, so
+# the module could not be imported without an active session
+@pandas_udf(DoubleType())
 def trimmed_mean_10(v: pd.Series) -> float:
     """10% symmetric trimmed mean: drop floor(0.1*n) values from each end
     (by value order) and average the rest — the outlier-robust location

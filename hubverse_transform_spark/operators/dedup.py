@@ -315,6 +315,35 @@ def ngram_jaccard_pairs(
     )
 
 
+def _prefix_postings(
+    df: DataFrame, id_col: str, text_col: str, ngram: int, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The prefix-filter postings both prefix joins probe with. Returns
+    ``(docs, dfreq, prefix)``: the persisted per-document shingle arrays
+    ``(_id, _sh, _sz)``, the shingle document frequencies ``(_s, _df)``, and
+    each document's rarest-first prefix postings ``(_id, _sz, _s, _df,
+    _rn)`` — its ``_sz - ceil(_sz * threshold) + 1`` lowest-``(_df, _s)``
+    shingles, ``_rn`` their 1-based rank. The caller releases ``docs``."""
+    docs = (
+        df.select(
+            F.col(id_col).alias("_id"),
+            shingle_ngrams(F.col(text_col), ngram).alias("_sh"),
+        )
+        .withColumn("_sz", F.size("_sh"))
+        .persist()
+    )
+    post = docs.select("_id", "_sz", F.explode("_sh").alias("_s"))
+    dfreq = post.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
+    w = Window.partitionBy("_id").orderBy("_df", "_s")
+    prefix_len = F.col("_sz") - F.ceil(F.col("_sz") * F.lit(threshold)) + 1
+    prefix = (
+        post.join(dfreq, "_s")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= prefix_len)
+    )
+    return docs, dfreq, prefix
+
+
 @_spread_input
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
@@ -361,27 +390,8 @@ def prefix_filter_jaccard_pairs(
     cached" re-registration.
     Never broadcasts; never caps.
     """
-    from pyspark.sql import Window
-
-    docs = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            shingle_ngrams(F.col(text_col), ngram).alias("_sh"),
-        )
-        .withColumn("_sz", F.size("_sh"))
-        .persist()
-    )
-    post = docs.select("_id", "_sz", F.explode("_sh").alias("_s"))
-    dfreq = post.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy("_df", "_s")
-    prefix_len = F.col("_sz") - F.ceil(F.col("_sz") * F.lit(threshold)) + 1
-    prefix = (
-        post.join(dfreq, "_s")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select("_id", "_sz", "_s", "_rn")
-        .persist()
-    )
+    docs, _, prefix = _prefix_postings(df, id_col, text_col, ngram, threshold)
+    prefix = prefix.select("_id", "_sz", "_s", "_rn").persist()
     a, b = prefix.alias("a"), prefix.hint("shuffle_hash").alias("b")
     min_overlap = F.ceil(
         F.lit(threshold) / (1.0 + threshold) * (F.col("a._sz") + F.col("b._sz"))
@@ -792,27 +802,10 @@ def containment_prefix_pairs(
     only for true boilerplate tails (Zipf corpora), and degrades to the
     plain cold path when no outliers exist.
     """
-    docs = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            shingle_ngrams(F.col(text_col), ngram).alias("_sh"),
-        )
-        .withColumn("_sz", F.size("_sh"))
-        .persist()
-    )
-    post = docs.select("_id", "_sz", F.explode("_sh").alias("_s"))
-    dfreq = post.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy("_df", "_s")
-    prefix_len = F.col("_sz") - F.ceil(F.col("_sz") * F.lit(threshold)) + 1
-    probe = (
-        post.join(dfreq, "_s")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select(
-            F.col("_id").alias("_ida"), F.col("_sz").alias("_sza"), "_s", "_df"
-        )
-        .persist()
-    )
+    docs, dfreq, prefix = _prefix_postings(df, id_col, text_col, ngram, threshold)
+    probe = prefix.select(
+        F.col("_id").alias("_ida"), F.col("_sz").alias("_sza"), "_s", "_df"
+    ).persist()
     idx = docs.select(
         F.col("_id").alias("_idb"), F.col("_sz").alias("_szb"),
         F.explode("_sh").alias("_s"),

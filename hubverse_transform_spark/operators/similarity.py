@@ -26,6 +26,7 @@ from hubverse_transform_spark.functions.vectors import (
     dot_product,
     l2_norm,
 )
+from hubverse_transform_spark.operators.topk import top_k_per_group
 
 
 def cosine_brute_force_topk(
@@ -71,12 +72,9 @@ def cosine_brute_force_topk(
             F.when(denom > 0, dot_product(F.col("_qvec"), F.col("_cvec")) / denom),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -184,12 +182,9 @@ def cosine_lsh_topk(
     scored = cand.withColumn(
         "cosine_sim", cosine_similarity(F.col("_qvec"), F.col("_cvec"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def _nearest_cid(vec: Column, cents: list) -> Column:
@@ -279,6 +274,23 @@ def spherical_kmeans_centroids(
     return cents
 
 
+def _ivf_centroids(
+    corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int, centroids: list | None
+) -> list[tuple[int, list[float]]]:
+    """The IVF quantizer as ``[(cid, vector), ...]`` on the driver: the
+    caller's ``centroids``, or else the ``n_centroids`` lowest-id corpus
+    vectors (a bounded collect of at most ``n_centroids`` rows)."""
+    if centroids is not None:
+        return [(int(cid), [float(x) for x in cv]) for cid, cv in centroids]
+    cent_rows = (
+        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
+        .orderBy("cid")
+        .limit(n_centroids)
+        .collect()
+    )
+    return [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows]
+
+
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -313,16 +325,7 @@ def ivf_cosine_topk(
     Ties break on neighbor id; same output shape as the brute-force baseline
     so recall is directly measurable.
     """
-    if centroids is None:
-        cent_rows = (
-            corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            .orderBy("cid")
-            .limit(n_centroids)
-            .collect()
-        )
-        cents = [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows]
-    else:
-        cents = [(int(cid), [float(x) for x in cv]) for cid, cv in centroids]
+    cents = _ivf_centroids(corpus, id_col, vec_col, n_centroids, centroids)
     spark = corpus.sparkSession
     cent_df = spark.createDataFrame(cents, "cid bigint, cv array<double>")
 
@@ -332,14 +335,15 @@ def ivf_cosine_topk(
     assigned = c.withColumn("cid", _nearest_cid(F.col("_cvec"), cents))
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
-    pw = Window.partitionBy("query_id").orderBy(F.col("_psim").desc(), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("_psim", cosine_similarity(F.col("_qvec"), F.col("cv")))
-        .withColumn("_prn", F.row_number().over(pw))
-        .filter(F.col("_prn") <= n_probe)
-        .select("query_id", "_qvec", "cid")
-    )
+    probes = top_k_per_group(
+        q.crossJoin(F.broadcast(cent_df)).withColumn(
+            "_psim", cosine_similarity(F.col("_qvec"), F.col("cv"))
+        ),
+        ["query_id"],
+        [F.col("_psim").desc(), F.col("cid")],
+        n_probe,
+        "_prn",
+    ).select("query_id", "_qvec", "cid")
 
     # keep the single cosine_similarity expression: hand-hoisting the norms
     # into their own projected columns measured ~25% SLOWER at sf0.1 —
@@ -350,14 +354,9 @@ def ivf_cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine_sim", cosine_similarity(F.col("_qvec"), F.col("_cvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def embedding_near_dup_pairs(
@@ -463,6 +462,48 @@ def semantic_dedup_reps(
     )
 
 
+def _pq_codebook(
+    corpus: DataFrame, id_col: str, vec_col: str, n_sub: int, n_codes: int
+):
+    """The product quantizer both PQ operators share. Returns
+    ``(subvectors, codebook, sq_dist)``: ``subvectors(df, keep,
+    keep_names)`` explodes each ``vec_col`` vector of ``df`` into its
+    ``n_sub`` contiguous subvectors ``(*keep_names, sub_id, _sv)``; the
+    codebook ``(sub_id, _code, _cv)`` is the subvectors of the ``n_codes``
+    lowest-id corpus vectors; ``sq_dist`` is the squared L2 between
+    ``_sv`` and ``_cv``."""
+    dim_row = corpus.select(F.size(vec_col).alias("d")).first()
+    sub_dim = int(dim_row["d"]) // n_sub
+
+    def subvectors(df: DataFrame, keep: list, keep_names: list) -> DataFrame:
+        step = df.select(
+            *keep,
+            F.col(vec_col).alias("_v"),
+            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id"),
+        )
+        return step.select(
+            *keep_names,
+            "sub_id",
+            # double-cast so both engines (and the SQL oracle) subtract and
+            # square in double precision, not float
+            F.slice(F.col("_v"), F.col("sub_id") * sub_dim + 1, F.lit(sub_dim))
+            .cast("array<double>")
+            .alias("_sv"),
+        )
+
+    codebook = subvectors(
+        corpus.orderBy(id_col).limit(n_codes),
+        [F.col(id_col).alias("_code")],
+        ["_code"],
+    ).select("sub_id", "_code", F.col("_sv").alias("_cv"))
+    sq_dist = F.aggregate(
+        F.zip_with(F.col("_sv"), F.col("_cv"), lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return subvectors, codebook, sq_dist
+
+
 def pq_reconstruction(
     corpus: DataFrame,
     *,
@@ -494,35 +535,8 @@ def pq_reconstruction(
     sum over subspaces of squared distance to the chosen code, i.e. the
     squared L2 between the vector and its PQ reconstruction.
     """
-    dim_row = corpus.select(F.size(vec_col).alias("d")).first()
-    sub_dim = int(dim_row["d"]) // n_sub
-
-    def subvectors(df: DataFrame, keep: list, keep_names: list) -> DataFrame:
-        step = df.select(
-            *keep,
-            F.col(vec_col).alias("_v"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id"),
-        )
-        return step.select(
-            *keep_names,
-            "sub_id",
-            # double-cast so both engines (and the SQL oracle) subtract and
-            # square in double precision, not float
-            F.slice(F.col("_v"), F.col("sub_id") * sub_dim + 1, F.lit(sub_dim))
-            .cast("array<double>")
-            .alias("_sv"),
-        )
-
-    codebook = subvectors(
-        corpus.orderBy(id_col).limit(n_codes),
-        [F.col(id_col).alias("_code")],
-        ["_code"],
-    ).select("sub_id", "_code", F.col("_sv").alias("_cv"))
-
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("_sv"), F.col("_cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    subvectors, codebook, sq_dist = _pq_codebook(
+        corpus, id_col, vec_col, n_sub, n_codes
     )
     # Quantize each subspace distance ONCE to exact integer micro-units
     # (floor(d·1e6 + 0.5) of a deterministic double — identical on both
@@ -611,38 +625,13 @@ def pq_adc_topk(
     ranking with neighbor-id tiebreaks, so a SQL oracle replays the scan
     bit-for-bit. Returns (query_id, neighbor_id, adc_dist, rank).
     """
-    dim_row = corpus.select(F.size(vec_col).alias("d")).first()
-    sub_dim = int(dim_row["d"]) // n_sub
-
-    def explode_subs(df: DataFrame, keep: list, keep_names: list) -> DataFrame:
-        step = df.select(
-            *keep,
-            F.col(vec_col).alias("_v"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id"),
-        )
-        return step.select(
-            *keep_names,
-            "sub_id",
-            F.slice(F.col("_v"), F.col("sub_id") * sub_dim + 1, F.lit(sub_dim))
-            .cast("array<double>")
-            .alias("_sv"),
-        )
-
-    codebook = explode_subs(
-        corpus.orderBy(id_col).limit(n_codes),
-        [F.col(id_col).alias("_code")],
-        ["_code"],
-    ).select("sub_id", "_code", F.col("_sv").alias("_cv"))
-
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("_sv"), F.col("_cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    subvectors, codebook, sq_dist = _pq_codebook(
+        corpus, id_col, vec_col, n_sub, n_codes
     )
 
     # corpus -> PQ codes (one window shuffle; at rest this table IS the index)
     corpus_codes = (
-        explode_subs(corpus, [F.col(id_col).alias("_cid")], ["_cid"])
+        subvectors(corpus, [F.col(id_col).alias("_cid")], ["_cid"])
         .join(F.broadcast(codebook), "sub_id")
         .select("_cid", "sub_id", "_code", F.round(sq_dist, 6).alias("_d"))
         .withColumn(
@@ -663,7 +652,7 @@ def pq_adc_topk(
     # re-snaps identically on both engines; top-k tiebreaks on _cid
     # (VERIFY_r12 §10's audited second-order site).
     lut = (
-        explode_subs(queries, [F.col(id_col).alias("_qid")], ["_qid"])
+        subvectors(queries, [F.col(id_col).alias("_qid")], ["_qid"])
         .join(F.broadcast(codebook), "sub_id")
         .select("_qid", "sub_id", "_code", F.round(sq_dist, 6).alias("_ld"))
     )
@@ -674,16 +663,13 @@ def pq_adc_topk(
         .agg(F.round(F.sum("_ld"), 6).alias("adc_dist"))
         .filter(F.col("_qid") != F.col("_cid"))
     )
-    w = Window.partitionBy("_qid").orderBy("adc_dist", "_cid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias("query_id"),
-            F.col("_cid").alias("neighbor_id"),
-            "adc_dist",
-            "rank",
-        )
+    return top_k_per_group(
+        scored, ["_qid"], [F.col("adc_dist"), F.col("_cid")], k
+    ).select(
+        F.col("_qid").alias("query_id"),
+        F.col("_cid").alias("neighbor_id"),
+        "adc_dist",
+        "rank",
     )
 
 
@@ -710,16 +696,7 @@ def ivf_list_stats(
     ``skew_vs_uniform`` uses the CONFIGURED list count as the uniform
     denominator, not just the non-empty ones.
     """
-    if centroids is None:
-        cent_rows = (
-            corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            .orderBy("cid")
-            .limit(n_centroids)
-            .collect()
-        )
-        cents = [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows]
-    else:
-        cents = [(int(cid), [float(x) for x in cv]) for cid, cv in centroids]
+    cents = _ivf_centroids(corpus, id_col, vec_col, n_centroids, centroids)
     assigned = corpus.select(
         _nearest_cid(F.col(vec_col).cast("array<double>"), cents).alias("cid")
     )
@@ -806,11 +783,6 @@ def hard_negative_topk(
         "cosine_sim",
         F.when(denom > 0, dot_product(F.col("_qvec"), F.col("_cvec")) / denom),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "neighbor_label", "cosine_sim", "rank")

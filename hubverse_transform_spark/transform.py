@@ -174,7 +174,7 @@ class ModelOutputPipeline:
             msg = f"file to delete {output_uri} does not exist"
             logger.warning({"message": msg, "file": output_uri})
             raise UserWarning(msg)
-        fs.delete(target, False)
+        _check(fs.delete(target, False), f"delete {output_uri}")
         logger.info(f"Deleted {output_uri}")
 
     # --- filesystem plumbing --------------------------------------------
@@ -197,7 +197,16 @@ class ModelOutputPipeline:
         if part is None:
             raise RuntimeError(f"no part file produced under {tmp_dir}")
         dest_path = path_cls(dest)
+        # a FileSystem reports some failures (S3A's rename among them) as a
+        # false result rather than an exception; the temp dir holds the only
+        # copy of the output until the rename has succeeded
         if fs.exists(dest_path):
-            fs.delete(dest_path, False)
-        fs.rename(part, dest_path)
-        fs.delete(path_cls(tmp_dir), True)
+            _check(fs.delete(dest_path, False), f"delete {dest}")
+        _check(fs.rename(part, dest_path), f"rename the part file of {tmp_dir} to {dest}")
+        _check(fs.delete(path_cls(tmp_dir), True), f"delete {tmp_dir}")
+
+
+def _check(ok: bool, what: str) -> None:
+    """Raise when a Hadoop FileSystem call returned false."""
+    if not ok:
+        raise OSError(f"Hadoop FileSystem could not {what}")

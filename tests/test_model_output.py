@@ -126,6 +126,56 @@ def test_delete_model_output(spark, hub_dir, csv_numeric_file):
         mo.delete_model_output()
 
 
+class _FailingFS:
+    """A Hadoop FileSystem proxy whose ``method`` reports failure the way
+    S3A does: a false result, no exception."""
+
+    def __init__(self, fs, method: str):
+        self._fs, self._method = fs, method
+
+    def __getattr__(self, name):
+        if name == self._method:
+            return lambda *args: False
+        return getattr(self._fs, name)
+
+
+def _fail_fs(monkeypatch, mo: ModelOutputPipeline, method: str) -> None:
+    real = mo._hadoop_fs
+
+    def proxied(uri):
+        fs, jvm = real(uri)
+        return _FailingFS(fs, method), jvm
+
+    monkeypatch.setattr(mo, "_hadoop_fs", proxied)
+
+
+def _tmp_parts(mo: ModelOutputPipeline) -> list[Path]:
+    return list(Path(mo.output_path, f"_tmp_{mo.file_name}").glob("part-*.parquet"))
+
+
+def test_false_rename_raises_and_keeps_the_temp_copy(spark, hub_dir, csv_numeric_file, monkeypatch):
+    mo = make_pipeline(spark, hub_dir, csv_numeric_file)
+    _fail_fs(monkeypatch, mo, "rename")
+    with pytest.raises(OSError, match="rename"):
+        mo.add_model_output()
+    assert not Path(mo.output_path, f"{mo.file_name}.parquet").exists()
+    assert len(_tmp_parts(mo)) == 1
+
+
+def test_false_delete_raises(spark, hub_dir, csv_numeric_file, monkeypatch):
+    mo = make_pipeline(spark, hub_dir, csv_numeric_file)
+    out_uri = mo.add_model_output()
+    _fail_fs(monkeypatch, mo, "delete")
+    with pytest.raises(OSError, match="delete"):
+        mo.delete_model_output()
+    # a re-upload must replace the existing object: a false delete of it
+    # stops the write before the rename, with the new copy still in temp
+    with pytest.raises(OSError, match="delete"):
+        mo.add_model_output()
+    assert Path(out_uri).is_file()
+    assert len(_tmp_parts(mo)) == 1
+
+
 def test_missing_tasks_json_is_fatal(spark, tmp_path):
     """ref model_output.py:105-106."""
     (tmp_path / "raw").mkdir()

@@ -14,11 +14,10 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "hubverse_transform_spark
 #: (file, function) -> why collecting there is bounded and correct
 ALLOWED = {
     ("streaming/ingest.py", "stream_model_outputs"): "file-name list per micro-batch",
-    ("operators/similarity.py", "ivf_cosine_topk"): "n_centroids rows (<=16)",
+    ("operators/similarity.py", "_ivf_centroids"):
+        "n_centroids seed rows (<=16): the IVF quantizer of ivf_cosine_topk and ivf_list_stats",
     ("operators/similarity.py", "spherical_kmeans_centroids"):
         "k seed rows + k*dim aggregated component sums per Lloyd step",
-    ("operators/similarity.py", "ivf_list_stats"):
-        "n_centroids seed rows only (same bounded quantizer load as ivf_cosine_topk)",
     ("operators/scd.py", "apply_changeset"):
         "limit(5) sample of duplicate keys for the MERGE-precondition error",
 }

@@ -8,6 +8,8 @@ codegen.
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entry
 from plan_inspect import (
     has_broadcast_join,
@@ -78,6 +80,30 @@ def test_q72_edges_basket_build_no_join(spark):
     plan = explain_str(entry._q72_edges(spark, SF))
     assert "Join" not in plan and "BroadcastExchange" not in plan
     assert "collect_set" in plan and "explode" in plan
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_part_pairs_equal_the_self_join(spark, sf):
+    """The basket build is an exact fast path: ``_part_pairs`` is the
+    distinct src < dst pair set of a lineitem self-join on the order key,
+    and ``_q72_edges`` is that set plus every pair reversed."""
+    from pyspark.sql import functions as F
+
+    sf_dir = SF.replace("sf0.001", sf)
+    li = entry._t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    r = li.select(F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb"))
+    joined = (
+        li.join(r, (F.col("l_orderkey") == F.col("_ok")) & (F.col("l_partkey") < F.col("_pb")))
+        .select(F.col("l_partkey").alias("src"), F.col("_pb").alias("dst"))
+        .distinct()
+    )
+    half = entry._part_pairs(spark, sf_dir)
+    assert half.count() == joined.count() > 0
+    assert half.exceptAll(joined).count() == 0 and joined.exceptAll(half).count() == 0
+    both = joined.unionByName(joined.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = entry._q72_edges(spark, sf_dir)
+    assert edges.count() == both.count()
+    assert edges.exceptAll(both).count() == 0 and both.exceptAll(edges).count() == 0
 
 
 def test_q73_subquery_is_decorrelated(spark):

@@ -73,9 +73,10 @@ def backfill_hub_dataset(
 ) -> DataFrame:
     """Reprocess every raw submission file in one distributed pass.
 
-    One schema-enforced glob read (files must share a header layout per
-    format; checked for CSV), provenance as the per-file pipeline names each
-    file (a mis-named file is skipped with a warning), one partitioned write.
+    One schema-enforced glob read under the first file's schema, read on
+    the driver (files must share a header layout per format; checked for
+    CSV), provenance as the per-file pipeline names each file (a mis-named
+    file is skipped with a warning), one partitioned write.
     Returns the transformed DataFrame (written).
     """
     tasks = read_tasks(spark, hub_path)

@@ -13,7 +13,10 @@ Spark mapping, both under that one failure policy (``_lambda_failure_policy``):
   ``raw/`` directory + ``foreachBatch`` running the per-file transform; new
   files are picked up incrementally with checkpointed progress.
 
-Bulk backfill (A14) is one glob read instead: ``sinks.backfill_hub_dataset``.
+Both reach ``sources.model_output``, which reads each file's schema on the
+driver (a CSV header line, a Parquet footer), so a file's read launches no
+Spark job and landing it runs one: the write. Bulk backfill (A14) is one
+glob read instead: ``sinks.backfill_hub_dataset``.
 """
 
 from __future__ import annotations

@@ -7,8 +7,10 @@ one Parquet object with a deterministic name (idempotent overwrite), or delete
 it on a removal event.
 
 The whole pipeline is lazy — read, normalize, cast, and the provenance
-``withColumn`` collapse into a single FileScan + Project stage; the only
-action is the sink write.
+``withColumn`` collapse into a single FileScan + Project stage. The read's
+schema comes from the file itself on the driver (a CSV header line, a
+Parquet footer; ``sources.model_output``), so building it launches no job
+and the sink write is an event's one Spark job.
 
 For BULK backfill (ref faas/lambda_retrigger_model_output_add.py re-fires one
 Lambda per object), the Spark-native form is one glob read over thousands of
@@ -22,6 +24,7 @@ import logging
 import posixpath
 from urllib.parse import unquote
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,10 +51,10 @@ def with_provenance_from_filename(df: DataFrame) -> DataFrame:
     """Provenance for a read spanning many submission files (A9 batch form, A14).
 
     ``submission_name`` names each file of ``df.inputFiles()`` (metadata, no
-    job) as the per-file pipeline would; the per-file table is built on the
-    JVM side and broadcast-joined on ``input_file_name()``. A file the rule
-    rejects is logged and lands no rows, as its Lambda would; ValueError if
-    none passes.
+    job) as the per-file pipeline would; the per-file table goes to the JVM
+    in one call, as an Arrow table (a local relation; no Python worker), and
+    is broadcast-joined on ``input_file_name()``. A file the rule rejects is
+    logged and lands no rows, as its Lambda would; ValueError if none passes.
     """
     uris, files = df.inputFiles(), []
     for uri in uris:
@@ -61,10 +64,13 @@ def with_provenance_from_filename(df: DataFrame) -> DataFrame:
         except (UserWarning, ValueError) as exc:
             logger.warning(f"Skipping mis-named file {name}: {exc}")
             continue
-        files.append(F.struct(F.lit(uri), F.lit(round_id), F.lit(model_id)))
+        files.append((uri, round_id, model_id))
     if not files:
         raise ValueError(f"no submission file among {uris}")
-    names = df.sparkSession.range(1).select(F.inline(F.array(*files))).toDF("_file", "_round_id", "_model_id")
+    names = df.sparkSession.createDataFrame(
+        pa.table(list(zip(*files)), names=["_file", "_round_id", "_model_id"]),
+        "_file string, _round_id string, _model_id string",
+    )
     return (
         df.withColumn("_file", F.input_file_name())
         .join(F.broadcast(names), "_file")

@@ -10,6 +10,8 @@ from __future__ import annotations
 import json
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pyarrow as pa
@@ -23,6 +25,23 @@ from hubverse_transform_spark.session import get_spark
 def spark():
     s = get_spark("hubverse-tests", cpus=8)
     yield s
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Yield a list that holds, once the block ends, the ids of the Spark
+    jobs the block launched: one status-tracker job group, as
+    ``perfbench/trace.py`` counts a span's jobs."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    jobs: list[int] = []
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker asynchronously
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # --- one compile pass for the whole-surface plan gates -----------------------

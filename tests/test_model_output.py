@@ -8,9 +8,11 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
+from hubverse_transform_spark.schema import hub_schema
 from hubverse_transform_spark.transform import ModelOutputPipeline
+from tests.conftest import CSV_MIXED, CSV_NUMERIC, TASKS_JSON, spark_jobs
 
 
 def make_pipeline(spark, hub_dir: Path, file_path: Path) -> ModelOutputPipeline:
@@ -234,3 +236,134 @@ def test_write_observation_metrics(spark, hub_dir, csv_numeric_file):
     # rows 2 (empty), 3 (NA), 5 (null) -> 3 null output_type_ids
     assert m["n_null_output_type_id"] == 3
     assert m["n_null_value"] == 0
+
+
+# --- driver-side schemas: a read launches no Spark job ------------------------
+
+#: a CSV header Spark's inference reads one way, beside the F1-F3 files
+CSV_HEADER_CASES = {
+    "f1_numeric": CSV_NUMERIC.encode(),
+    "f2_mixed": CSV_MIXED.encode(),
+    "f3_provenance": (
+        "origin_date,target,horizon,location,output_type,output_type_id,value,round_id,model_id\n"
+        "2022-10-08,wk inc flu hosp,1,02,quantile,0.5,1.5,2022-10-08,oldteam\n"
+    ).encode(),
+    "utf8_bom": b"\xef\xbb\xbf" + CSV_NUMERIC.encode(),
+    "quoted_comma": b'"location","a,b",value\n02,x,1.5\n',
+    "crlf": CSV_NUMERIC.replace("\n", "\r\n").encode(),
+    "leading_blank_lines": b"\n   \n\n" + CSV_NUMERIC.encode(),
+    "header_only": CSV_NUMERIC.splitlines()[0].encode() + b"\n",
+    "zero_bytes": b"",
+    "dot_and_backtick": b"location,a.b,c`d\n02,x,y\n",
+}
+
+
+def _inferred_csv(spark, path: Path):
+    return spark.read.option("header", "true").option("enforceSchema", "false").csv(str(path))
+
+
+@pytest.mark.parametrize("case", sorted(CSV_HEADER_CASES))
+def test_csv_header_matches_spark_inference(spark, tmp_path, case):
+    """The driver reads the header Spark's inference job would, and the
+    scan under those names returns the rows the inferred read returns."""
+    from hubverse_transform_spark.sources.model_output import csv_header
+
+    path = tmp_path / f"{case}.csv"
+    path.write_bytes(CSV_HEADER_CASES[case])
+    names = csv_header(spark, str(path))
+    inferred = _inferred_csv(spark, path)
+    assert names == inferred.columns
+    explicit = (
+        spark.read.schema(StructType([StructField(n, StringType()) for n in names]))
+        .option("header", "true")
+        .option("enforceSchema", "false")
+        .csv(str(path))
+    )
+    assert explicit.collect() == inferred.collect()
+
+
+def test_csv_duplicate_names_raise_on_both_sides(spark, tmp_path):
+    """Spark renames repeated names (``a0``, ``a1``) and then finds the
+    header unlike them; the driver-side header does the same."""
+    from hubverse_transform_spark.sources.model_output import csv_header, read_model_output_csv
+
+    path = tmp_path / "dup.csv"
+    path.write_text("a,a,b\n1,2,3\n")
+    assert csv_header(spark, str(path)) == _inferred_csv(spark, path).columns == ["a0", "a1", "b"]
+    for df in (_inferred_csv(spark, path), read_model_output_csv(spark, str(path), hub_schema(TASKS_JSON))):
+        with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+            df.collect()
+
+
+def test_zero_byte_csv_lands_provenance_only(spark, hub_dir):
+    """An empty submission lands a 0-row file holding only the provenance
+    columns."""
+    csv = hub_dir / "raw" / "2024-07-07-teamabc.csv"
+    csv.write_bytes(b"")
+    back = spark.read.parquet(make_pipeline(spark, hub_dir, csv).add_model_output())
+    assert back.columns == ["round_id", "model_id"]
+    assert back.count() == 0
+
+
+def test_parquet_footer_schema_matches_spark_inference(
+    spark, hub_dir, parquet_numeric_file, parquet_empty_string_file
+):
+    """F4's numeric, strings and no-location files, and a Spark-written
+    file (non-nullable fields, nested types, Spark's own schema metadata)."""
+    import pyarrow.parquet as pq
+
+    from hubverse_transform_spark.sources.model_output import parquet_schema
+
+    noloc = hub_dir / "raw" / "2024-07-07-teamabc-noloc.parquet"
+    pq.write_table(pq.read_table(parquet_numeric_file).drop(["location"]), noloc)
+    spark.range(3).selectExpr(
+        "id", "cast(id AS string) AS s", "date'2024-01-01' AS d", "array(1, 2) AS arr",
+        "named_struct('x', id) AS st", "cast(1.5 AS decimal(10, 2)) AS dec",
+    ).coalesce(1).write.parquet(str(hub_dir / "sw"))
+    (written,) = (hub_dir / "sw").glob("part-*.parquet")
+    for path in (parquet_numeric_file, parquet_empty_string_file, noloc, written):
+        assert parquet_schema(spark, str(path)) == spark.read.parquet(str(path)).schema, path.name
+
+
+def test_read_model_output_launches_no_job(spark, hub_dir, csv_numeric_file, parquet_numeric_file):
+    from hubverse_transform_spark.sources.model_output import read_model_output
+
+    schema = hub_schema(TASKS_JSON)
+    for path in (csv_numeric_file, parquet_numeric_file):
+        with spark_jobs(spark) as jobs:
+            read_model_output(spark, str(path), schema)
+        assert jobs == [], path.name
+
+
+def test_add_model_output_runs_one_job(spark, hub_dir, csv_numeric_file, parquet_numeric_file):
+    for path in (csv_numeric_file, parquet_numeric_file):
+        mo = make_pipeline(spark, hub_dir, path)
+        with spark_jobs(spark) as jobs:
+            mo.add_model_output()
+        assert len(jobs) == 1, path.name
+
+
+# --- column names that are not plain identifiers -----------------------------
+# a bare ``a.b`` parses as a struct-field access and a bare backtick as a
+# quoting error; both readers quote every name
+
+
+@pytest.mark.parametrize("name", ["a.b", "c`d"])
+def test_csv_reads_a_name_with_a_dot_or_backtick(spark, hub_dir, name):
+    csv = hub_dir / "raw" / "2024-07-07-teamabc.csv"
+    csv.write_text(f"location,{name},value\n02,NA,1.5\n")
+    df = make_pipeline(spark, hub_dir, csv).read_file()
+    assert df.columns == ["location", name, "value"]
+    assert [tuple(r) for r in df.collect()] == [("02", None, 1.5)]
+
+
+@pytest.mark.parametrize("name", ["a.b", "c`d"])
+def test_parquet_reads_a_name_with_a_dot_or_backtick(spark, hub_dir, name):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = hub_dir / "raw" / "2024-07-07-teamabc.parquet"
+    pq.write_table(pa.table({"location": [2], name: ["x"], "value": [0.0]}), path)
+    df = make_pipeline(spark, hub_dir, path).read_file()
+    assert df.columns == ["location", name, "value"]
+    assert [tuple(r) for r in df.collect()] == [("2", "x", 0.0)]

@@ -168,3 +168,34 @@ def test_write_hub_dataset_appends(spark, tmp_path: Path):
     write_hub_dataset(df, lake)
     write_hub_dataset(df, lake)  # append mode: second write adds rows
     assert spark.read.parquet(lake).count() == 2
+
+
+@pytest.mark.parametrize("file_format", ["csv", "parquet"])
+def test_backfill_read_launches_no_job(spark, hub_dir: Path, file_format, request, monkeypatch):
+    """The glob read takes its schema from the first file on the driver:
+    no schema-inference job runs before the write."""
+    from hubverse_transform_spark import sinks
+    from tests.conftest import spark_jobs
+
+    request.getfixturevalue(f"{file_format}_numeric_file")
+    reader = f"read_model_output_{file_format}"
+    read, reads = getattr(sinks, reader), []
+
+    def counted(*args):
+        with spark_jobs(spark) as jobs:
+            df = read(*args)
+        reads.append(jobs)
+        return df
+
+    monkeypatch.setattr(sinks, reader, counted)
+    backfill_hub_dataset(spark, str(hub_dir), str(hub_dir / "lake"), file_format=file_format)
+    assert reads == [[]]
+
+
+def test_backfill_names_table_is_a_local_relation(spark, hub_dir: Path, csv_numeric_file: Path):
+    """The per-file names go to the JVM as one Arrow table: a LocalRelation,
+    not an RDD of pickled rows that needs a Python worker to read."""
+    df = backfill_hub_dataset(spark, str(hub_dir), str(hub_dir / "lake"))
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in optimized
+    assert "LogicalRDD" not in optimized

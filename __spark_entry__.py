@@ -2681,12 +2681,8 @@ def q124_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     in after the candidate join, so the audit costs one extra broadcast-free
     map stage over q23."""
     d = _t(spark, sf_dir, "documents")
-    # materialize=False: the eager thin-banding shape measured 1.07x here
-    # (evidence/ab_r13b_exp4.jsonl) - this composition consumes the lazy
-    # pair frame inside a larger single-job plan
     pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", ngram=3, num_hashes=8, bands=4, threshold=0.1,
-        materialize=False,
+        d, "doc_id", "text", ngram=3, num_hashes=8, bands=4, threshold=0.1
     )
     splits = hash_split(d.select("doc_id"), "doc_id").select("doc_id", "split")
     sa = splits.select(
@@ -4584,14 +4580,8 @@ def _minhash_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     of equal signature components) — the scored pair set q188 calibrates
     and q330 sweeps thresholds over."""
     d = _t(spark, sf_dir, "documents")
-    # materialize=False: the eager thin-banding shape measured 1.42x (q188)
-    # and 1.59x (q330) (evidence/ab_r13b_exp4.jsonl) - the signature
-    # re-join below already overlaps the duplicated shingling across idle
-    # cores (see the rejected-persist note), and the checkpoint serializes
-    # that
     pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", ngram=3, num_hashes=8, bands=4, threshold=0.0,
-        materialize=False,
+        d, "doc_id", "text", ngram=3, num_hashes=8, bands=4, threshold=0.0
     )
     # r13 measured and REJECTED (guide §5): persisting the signature table
     # (consumed by both candidate-re-join sides) measured 1.17x SLOWER
@@ -5066,11 +5056,8 @@ def q203_banding_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     out = None
     for bands in (2, 4):
-        # materialize=False: one eager checkpoint per banding config
-        # measured 1.48x on this loop (evidence/ab_r13b_exp4.jsonl)
         p = minhash_lsh_pairs(
-            d, "doc_id", "text", ngram=3, num_hashes=8, bands=bands,
-            threshold=0.0, materialize=False,
+            d, "doc_id", "text", ngram=3, num_hashes=8, bands=bands, threshold=0.0
         )
         row = p.agg(F.count(F.lit(1)).alias("n_pairs")).select(
             F.lit(bands).alias("bands"), "n_pairs"
@@ -5492,8 +5479,8 @@ def q212_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication signal Jaccard dilutes (q158) and the corpus-vs-corpus
     sibling of q102's benchmark containment. Prefix-filtered
     (probe-side-only prefix, lossless), exact verification on candidates.
-    Stop-shingle skew is capped adaptively (``max_df="auto"`` = 4× the
-    p99.9 document frequency): outlier shingles route through the salted
+    Stop-shingle skew is capped adaptively (4× the p99.9 document
+    frequency): outlier shingles route through the salted
     exact residual join instead of piling f index postings + f·hits
     candidate rows onto one reducer key — output identical to the
     uncapped join (the oracle below is the uncapped brute join); see
@@ -5501,7 +5488,7 @@ def q212_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and why the cap chases outliers rather than a fixed constant."""
     d = _t(spark, sf_dir, "documents")
     return containment_prefix_pairs(
-        d, "doc_id", "text", ngram=3, threshold=0.6, max_df="auto"
+        d, "doc_id", "text", ngram=3, threshold=0.6
     )
 
 

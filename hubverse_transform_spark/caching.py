@@ -28,7 +28,7 @@ data-sized output, eager materialization would double-buffer the result —
 keep plain persist and document the trade instead.
 
 Fault tolerance. ``localCheckpoint`` (here, and the per-round state of
-``operators.clusters``, ``operators.graph`` and ``operators.profiling``)
+``operators.clusters`` and ``operators.profiling``)
 keeps its blocks in executor block managers with the lineage cut, so
 losing an executor that holds one fails the query instead of recomputing.
 That is acceptable for a small frame that lives no longer than the query

@@ -157,106 +157,56 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verification.
 
     Pipeline: shingle -> signature (map-side) -> explode bands -> self-join on
     band key (shuffle on band hash) -> distinct candidate pair -> verify true
     Jaccard >= threshold. Returns (id_a, id_b, jaccard), id_a < id_b.
-    """
-    from hubverse_transform_spark.caching import compute_release
 
+    The banded rows carry each document's shingle array, and the result is
+    a lazy frame. The band self-join's two sides are one plan, so they share
+    one runtime exchange and the arrays move once; callers keep whole-plan
+    AQE across the operator boundary. An eager shape that banded ids only,
+    re-attached the arrays from a persisted shingle table and checkpointed
+    the pairs measured 1.3-1.6x slower on q124/q188/q203/q330 and no faster
+    on q23/q199/q303; on q149 it read 4.11 s against this shape's 4.50 s,
+    inside the eager runs' 0.53 s IQR (per-pass median-of-3, 10
+    order-balanced pairs at sf0.1, evidence/ab_shape_switches.jsonl).
+    """
     rows_per_band = num_hashes // bands
-    if not materialize:
-        # lazy carry-arrays shape for call sites where the eager
-        # checkpoint measured SLOWER (evidence/ab_r13b_exp4.jsonl,
-        # min-of-12: q330 1.59, q203 1.48 - one eager job per banding
-        # config in its loop - q188 1.42, q124 1.07): the banded
-        # self-join's identical sides share one runtime exchange (the q21
-        # finding), so the arrays move once and the downstream consumers
-        # keep whole-plan AQE across the operator boundary. Static
-        # per-call-site switch, never data-dependent.
-        sh_l = df.select(
-            F.col(id_col).alias("_id"),
-            shingle_ngrams(F.col(text_col), ngram).alias("_shingles"),
-        ).withColumn("_sig", minhash_signature(F.col("_shingles"), num_hashes))
-        banded_l = sh_l.select(
-            "_id",
-            "_shingles",
-            F.explode(
-                F.array(*[_band_key(F.col("_sig"), b, rows_per_band) for b in range(bands)])
-            ).alias("_band"),
-        )
-        a_l, b_l = banded_l.alias("a"), banded_l.hint("shuffle_hash").alias("b")
-        cand_l = (
-            a_l.join(b_l, on="_band")
-            .filter(F.col("a._id") < F.col("b._id"))
-            .select(
-                F.col("a._id").alias("id_a"),
-                F.col("b._id").alias("id_b"),
-                F.col("a._shingles").alias("_sa"),
-                F.col("b._shingles").alias("_sb"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        return (
-            cand_l.withColumn("jaccard", jaccard_expr(F.col("_sa"), F.col("_sb")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    # r13 (guide 2.3/8, shuffle keys not payloads — the
-    # prefix_filter_jaccard_pairs shape): the banded self-join and the
-    # candidate distinct used to carry BOTH documents' shingle arrays;
-    # the band exchange and the dedup exchange now move (id, band) /
-    # (id_a, id_b) only, and the exact-jaccard verify re-attaches the two
-    # arrays from the persisted shingle table (shingle regex runs once,
-    # in the cache fill; the candidate side is the small one after the
-    # distinct, so AQE broadcasts it and the attach joins never shuffle
-    # the arrays). compute_release materializes the (small) pair output
-    # once and releases the cache - no registration outlives the call.
-    docs = df.select(
+    sh = df.select(
         F.col(id_col).alias("_id"),
         shingle_ngrams(F.col(text_col), ngram).alias("_shingles"),
-    ).persist()
-    sh = docs.withColumn("_sig", minhash_signature(F.col("_shingles"), num_hashes))
-
+    ).withColumn("_sig", minhash_signature(F.col("_shingles"), num_hashes))
     banded = sh.select(
         "_id",
+        "_shingles",
         F.explode(
             F.array(*[_band_key(F.col("_sig"), b, rows_per_band) for b in range(bands)])
         ).alias("_band"),
     )
-
     # shuffle-hash, not broadcast: the banded table is the whole corpus, so a
     # broadcast build side is wrong at scale (and measurably slower even at
     # bench SF — every task pays the full build); hash-shuffling both sides on
     # the band key co-partitions candidates with bounded per-task state
-    left = banded.alias("a")
-    right = banded.hint("shuffle_hash").alias("b")
+    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
     candidates = (
-        left.join(right, on="_band")
+        a.join(b, on="_band")
         .filter(F.col("a._id") < F.col("b._id"))
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
+            F.col("a._shingles").alias("_sa"),
+            F.col("b._shingles").alias("_sb"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    result = (
-        candidates.join(
-            docs.select(F.col("_id").alias("id_a"), F.col("_shingles").alias("_sa")),
-            "id_a",
-        )
-        .join(
-            docs.select(F.col("_id").alias("id_b"), F.col("_shingles").alias("_sb")),
-            "id_b",
-        )
-        .withColumn("jaccard", jaccard_expr(F.col("_sa"), F.col("_sb")))
+    return (
+        candidates.withColumn("jaccard", jaccard_expr(F.col("_sa"), F.col("_sb")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return compute_release(result, docs)
 
 
 @_spread_input
@@ -562,7 +512,7 @@ def winnow_overlap_pairs(
     k: int = 8,
     window: int = 4,
     min_shared: int = 2,
-    max_df: int | None = None,
+    max_df: int,
 ) -> DataFrame:
     """Partial-overlap candidate pairs: documents sharing >= ``min_shared``
     winnowing fingerprints. Detects copied PASSAGES (any shared run of length
@@ -587,21 +537,19 @@ def winnow_overlap_pairs(
     # distinct'd (doc, fp) table — O(docs x fps/doc), far smaller than the
     # gram stream — measured 2-4x faster at sf0.1 than recomputing, and is
     # RELEASED on exit by compute_release (the r3 verdict's persist leak).
-    # fps_cached is the PERSISTED frame; fps may be rebound to the df-capped
-    # semi-join below, so release must name fps_cached (unpersisting the
-    # derived frame would be a no-op and leak the original registration).
+    # fps_cached is the PERSISTED frame, fps the df-capped semi-join over it,
+    # so release must name fps_cached (unpersisting the derived frame would
+    # be a no-op and leak the original registration).
     fps_cached = winnow_fingerprints(df, id_col, text_col, k=k, window=window).select(
         F.col(id_col).alias("_id"), "fp"
     ).persist()
-    fps = fps_cached
-    if max_df is not None:
-        rare = (
-            fps_cached.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_df)
-            .select("fp")
-        )
-        fps = fps_cached.join(rare, on="fp", how="left_semi")
+    rare = (
+        fps_cached.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") <= max_df)
+        .select("fp")
+    )
+    fps = fps_cached.join(rare, on="fp", how="left_semi")
     a, b = fps.alias("a"), fps.hint("shuffle_hash").alias("b")
     result = (
         a.join(b, on="fp")
@@ -742,7 +690,6 @@ def containment_prefix_pairs(
     *,
     ngram: int = 3,
     threshold: float = 0.8,
-    max_df: int | str | None = None,
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Exact asymmetric containment self-join with prefix filtering [EXT]:
@@ -773,34 +720,34 @@ def containment_prefix_pairs(
     materializes the (small) pair output, then both unpersist.
 
     Skew mitigation, EXACTNESS-PRESERVING (unlike ``winnow_overlap_pairs``
-    whose ``max_df`` simply drops boilerplate keys): with ``max_df`` set,
-    shingles with document frequency > ``max_df`` ("hot": a stop-shingle
-    with df=f would put f index postings on ONE reducer key and fan out
-    f·probe_hits candidate rows there) are routed to a SALTED residual
-    join instead of being dropped. Probe postings on hot shingles get a
-    deterministic salt ``xxhash64(probe_id) % salt_buckets``; index
-    postings on hot shingles are replicated across all ``salt_buckets``
-    salts; the residual joins on (shingle, salt), spreading each hot key
-    over ``salt_buckets`` reducers. Every (probe, index) posting pair on
-    an equal shingle lands in exactly one branch (cold xor hot), so the
-    candidate set — and hence the verified output — is IDENTICAL to the
-    uncapped join (property-tested against a brute-force all-pairs scan
-    in tests/test_sessions_sampling.py). Cost bound: replication touches
+    whose ``max_df`` simply drops boilerplate keys): shingles with document
+    frequency above a cap ("hot": a stop-shingle with df=f would put f
+    index postings on ONE reducer key and fan out f·probe_hits candidate
+    rows there) are routed to a SALTED residual join instead of being
+    dropped. Probe postings on hot shingles get a deterministic salt
+    ``xxhash64(probe_id) % salt_buckets``; index postings on hot shingles
+    are replicated across all ``salt_buckets`` salts; the residual joins
+    on (shingle, salt), spreading each hot key over ``salt_buckets``
+    reducers. Every (probe, index) posting pair on an equal shingle lands
+    in exactly one branch (cold xor hot), so the candidate set — and hence
+    the verified output — is IDENTICAL to the uncapped join
+    (property-tested against a brute-force all-pairs scan in
+    tests/test_sessions_sampling.py). Cost bound: replication touches
     only hot postings, and rarest-first prefix ordering means hot
     shingles almost never survive into probe prefixes — the residual
     probe side is near-empty by construction, so the residual is cheap
     insurance, not a second full join.
 
-    ``max_df="auto"`` sets the cap from the data — 4× the p99.9 of the
-    df distribution (floor 16), one tiny aggregation over the (already
-    cached) postings. The cap must chase OUTLIERS, not a quantile of the
-    bulk: a fixed absolute cap tuned on one corpus routes the ENTIRE
-    index through the replicated residual when a smaller-vocabulary (or
-    simply larger) corpus shifts the whole df distribution past it —
-    measured 98 s vs 57 s on a 50k-doc uniform-df corpus where a fixed
-    cap of 18 marked every shingle hot. Auto keeps the residual engaged
-    only for true boilerplate tails (Zipf corpora), and degrades to the
-    plain cold path when no outliers exist.
+    The cap comes from the data: 4× the p99.9 of the df distribution
+    (floor 16), one tiny aggregation over the (already cached) postings.
+    It must chase OUTLIERS, not a quantile of the bulk: a fixed absolute
+    cap tuned on one corpus routes the ENTIRE index through the replicated
+    residual when a smaller-vocabulary (or simply larger) corpus shifts
+    the whole df distribution past it — measured 98 s vs 57 s on a
+    50k-doc uniform-df corpus where a fixed cap of 18 marked every shingle
+    hot. The derived cap engages the residual only for true boilerplate
+    tails (Zipf corpora); with no outliers the hot set is empty and the
+    residual branch joins nothing.
     """
     docs, dfreq, prefix = _prefix_postings(df, id_col, text_col, ngram, threshold)
     probe = prefix.select(
@@ -810,37 +757,31 @@ def containment_prefix_pairs(
         F.col("_id").alias("_idb"), F.col("_sz").alias("_szb"),
         F.explode("_sh").alias("_s"),
     )
-    to_release = [docs, probe]
-    if max_df == "auto":
-        p999 = dfreq.agg(
-            F.expr("approx_percentile(_df, 0.999, 10000)").alias("_q")
-        ).first()["_q"]
-        max_df = max(16, int(p999) * 4)
-    if max_df is None:
-        cand_rows = probe.drop("_df").join(idx.hint("shuffle_hash"), on="_s")
-    else:
-        # hot-shingle set is small by construction (<= |postings| / max_df
-        # distinct values) -> broadcast to both index branches; persisted so
-        # the dfreq aggregation behind it runs once, not per consumer
-        hot = dfreq.filter(F.col("_df") > max_df).select("_s").persist()
-        to_release.append(hot)
-        probe_cold = probe.filter(F.col("_df") <= max_df).drop("_df")
-        probe_hot = probe.filter(F.col("_df") > max_df).drop("_df")
-        idx_cold = idx.join(F.broadcast(hot), "_s", "left_anti")
-        idx_hot = idx.join(F.broadcast(hot), "_s", "left_semi")
-        salts = F.array(*[F.lit(i) for i in range(salt_buckets)])
-        cand_cold = probe_cold.join(idx_cold.hint("shuffle_hash"), on="_s")
-        cand_hot = (
-            probe_hot.withColumn(
-                "_salt", F.pmod(F.xxhash64("_ida"), F.lit(salt_buckets)).cast("int")
-            )
-            .join(
-                idx_hot.withColumn("_salt", F.explode(salts)).hint("shuffle_hash"),
-                on=["_s", "_salt"],
-            )
-            .drop("_salt")
+    p999 = dfreq.agg(
+        F.expr("approx_percentile(_df, 0.999, 10000)").alias("_q")
+    ).first()["_q"]
+    max_df = max(16, int(p999) * 4)
+    # hot-shingle set is small by construction (<= |postings| / max_df
+    # distinct values) -> broadcast to both index branches; persisted so
+    # the dfreq aggregation behind it runs once, not per consumer
+    hot = dfreq.filter(F.col("_df") > max_df).select("_s").persist()
+    probe_cold = probe.filter(F.col("_df") <= max_df).drop("_df")
+    probe_hot = probe.filter(F.col("_df") > max_df).drop("_df")
+    idx_cold = idx.join(F.broadcast(hot), "_s", "left_anti")
+    idx_hot = idx.join(F.broadcast(hot), "_s", "left_semi")
+    salts = F.array(*[F.lit(i) for i in range(salt_buckets)])
+    cand_cold = probe_cold.join(idx_cold.hint("shuffle_hash"), on="_s")
+    cand_hot = (
+        probe_hot.withColumn(
+            "_salt", F.pmod(F.xxhash64("_ida"), F.lit(salt_buckets)).cast("int")
         )
-        cand_rows = cand_cold.unionByName(cand_hot)
+        .join(
+            idx_hot.withColumn("_salt", F.explode(salts)).hint("shuffle_hash"),
+            on=["_s", "_salt"],
+        )
+        .drop("_salt")
+    )
+    cand_rows = cand_cold.unionByName(cand_hot)
     cand = (
         cand_rows
         .filter(F.col("_ida") != F.col("_idb"))
@@ -860,7 +801,7 @@ def containment_prefix_pairs(
             "id_a", "id_b", half_up(containment, 6).alias("containment")
         )
     )
-    return compute_release(result, *to_release)
+    return compute_release(result, docs, probe, hot)
 
 
 @_spread_input
@@ -993,64 +934,36 @@ def edit_distance_pairs(
         ).otherwise(F.array().cast("array<string>"))
         variants = F.array_union(variants, F.array_distinct(del2))
     keys = ["_v"] + (["_blk"] if block_col else [])
-    # r13 (guide 2.3/8, shuffle keys not payloads): at max_dist=2 the
-    # variant explode is the dominant shuffle (|corpus| x ~L^2/2 rows);
-    # carrying the original string through it and through the candidate
-    # distinct roughly doubles those rows' bytes. Explode (id, variant)
-    # only, dedup the id pairs, and re-attach the two texts afterwards -
-    # two joins against the (1/closure smaller) base table that AQE
-    # broadcasts at any realistic dimension size. Pair set, texts, and
-    # distances are unchanged. At max_dist=1 the closure is only L+1 and
-    # the attach joins' fixed cost outweighs the thin shuffle (measured:
-    # q223 0.61->0.73 s with attach, q245 2.89->2.69 without the inline
-    # payload - evidence/ab_r13b_exp2.jsonl), so the k=1 path keeps the
-    # text inline. Static parameter switch, never data-dependent.
-    carry_inline = max_dist == 1
+    # shuffle keys, not payloads: the variant explode is the dominant shuffle
+    # (|corpus| x closure rows), so it and the candidate distinct move
+    # (id, variant) / (id_a, id_b) only, and the two texts are re-attached
+    # afterwards - two joins against the (1/closure smaller) base table
+    # that AQE broadcasts at any realistic dimension size. Carrying the text
+    # inline instead (inline vs re-attach, per-pass median-of-3 over 10
+    # order-balanced pairs at sf0.1, evidence/ab_shape_switches.jsonl)
+    # measured 9.77 vs 7.33 s on q245 (max_dist=2) and 0.63 vs 0.68 s on
+    # q223 (max_dist=1, inside the inline shape's 0.09 s IQR), so every
+    # distance re-attaches.
     v = df.select(
         F.col(id_col).alias("_id"),
         *([F.col(block_col).alias("_blk")] if block_col else []),
-        *([text.alias("_txt")] if carry_inline else []),
         F.explode(variants).alias("_v"),
     )
     a, b = v.alias("a"), v.alias("b")
     cond = F.col("a._id") < F.col("b._id")
     for k in keys:
         cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
-    if carry_inline:
-        cand = (
-            a.join(b, cond)
-            .select(
-                F.col("a._id").alias("id_a"),
-                F.col("b._id").alias("id_b"),
-                F.col("a._txt").alias("_ta"),
-                F.col("b._txt").alias("_tb"),
-            )
-            .distinct()
-        )
-    else:
-        cand = (
-            a.join(b, cond)
-            .select(
-                F.col("a._id").alias("id_a"),
-                F.col("b._id").alias("id_b"),
-            )
-            .distinct()
-        )
-        texts = df.select(F.col(id_col).alias("_tid"), text.alias("_txt"))
-        cand = (
-            cand.join(
-                texts.select(
-                    F.col("_tid").alias("id_a"), F.col("_txt").alias("_ta")
-                ),
-                "id_a",
-            )
-            .join(
-                texts.select(
-                    F.col("_tid").alias("id_b"), F.col("_txt").alias("_tb")
-                ),
-                "id_b",
-            )
-        )
+    cand = (
+        a.join(b, cond)
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+    )
+    texts = df.select(F.col(id_col).alias("_tid"), text.alias("_txt"))
+    cand = cand.join(
+        texts.select(F.col("_tid").alias("id_a"), F.col("_txt").alias("_ta")), "id_a"
+    ).join(
+        texts.select(F.col("_tid").alias("id_b"), F.col("_txt").alias("_tb")), "id_b"
+    )
     return (
         cand.withColumn("dist", F.levenshtein("_ta", "_tb", max_dist))
         .filter(F.col("dist") >= 0)

@@ -16,10 +16,6 @@ from pyspark.sql import functions as F
 from hubverse_transform_spark.caching import compute_release
 
 
-#: rounds between lineage cuts of the rank vector (see :func:`pagerank`)
-_TRUNCATE_EVERY = 8
-
-
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -55,14 +51,12 @@ def pagerank(
     (node, pr) output runs the job, and every intermediate is unpersisted
     before returning.
 
-    Every ``_TRUNCATE_EVERY`` rounds the rank vector is eagerly
-    ``localCheckpoint``ed (exact values, lineage cut) and the chunk's
-    persisted rounds are released. Without this, a 30-round chain of
-    unmaterialized persists makes the CacheManager's per-action
-    ``sameResult`` scan quadratic in plan depth — a 30-round run on a
-    7-node graph spent >7 min of JVM CPU planning, never executing. Short
-    runs (the 3-round q72 path) never reach a truncation point. The
-    checkpoints are not fault tolerant; ``caching`` records where that holds.
+    Round limit: the rounds unroll into one plan, and each round's
+    unmaterialized persist makes the CacheManager's per-action
+    ``sameResult`` scan grow with plan depth, so planning blows up past
+    about 12 rounds. On a 7-node graph (``local[2]``, 8 GB driver) a run
+    took 9.0 s at 12 rounds, 24.5 s at 15, and ran the driver out of heap
+    at 18. q72 runs 3; a longer run needs a lineage cut between rounds.
     """
     # adjacency build: ONE exchange on src with partial collect_list
     # combining; keys are the complete node set (the input contract). The
@@ -86,7 +80,7 @@ def pagerank(
     ranks = adj.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("pr"))
     base = (1.0 - damping) / n
     cached_rounds: list[DataFrame] = []
-    for it in range(iterations):
+    for _ in range(iterations):
         ranks = (
             e_frac.join(ranks, e_frac.src == ranks.node)
             .select(
@@ -99,11 +93,6 @@ def pagerank(
             )
         ).persist()
         cached_rounds.append(ranks)
-        if (it + 1) % _TRUNCATE_EVERY == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-            for c in cached_rounds:
-                c.unpersist()
-            cached_rounds.clear()
     return compute_release(ranks, adj, *cached_rounds)
 
 

@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Profile ``cols`` (default: all columns).
+def profile_columns(df: DataFrame) -> DataFrame:
+    """Profile every column of ``df``.
 
     Returns (column, n_rows, n_null, n_distinct, min_value, max_value) with
     min/max rendered as strings so heterogeneous column types coexist in one
@@ -33,7 +33,7 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     afterwards, so numeric columns keep numeric ordering.
     """
     parts = []
-    for c in cols or df.columns:
+    for c in df.columns:
         per_val = (
             df.select(F.col(c).alias("_v"))
             .groupBy("_v")

@@ -10,7 +10,7 @@ dimension's history from an event stream or CDC feed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -19,7 +19,7 @@ def build_scd2(
     key_col: str,
     attr_col: str,
     ts_col: str,
-    tiebreak_col: str | None = None,
+    tiebreak_col: str,
 ) -> DataFrame:
     """Collapse (key, ts, attr) observations into SCD2 version intervals.
 
@@ -33,11 +33,10 @@ def build_scd2(
     all reuse the same (key, ts) sort order, so Spark plans a single
     Exchange + Sort for the whole chain. Null-safe comparison keeps a run
     of null attributes as its own version rather than splitting per row.
+    ``tiebreak_col`` orders observations that share a timestamp, so the
+    version chain is deterministic.
     """
-    order: list[Column] = [F.col(ts_col)] + (
-        [F.col(tiebreak_col)] if tiebreak_col else []
-    )
-    w = Window.partitionBy(key_col).orderBy(*order)
+    w = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
     prev = F.lag(F.col(attr_col)).over(w)
     prev_seen = F.lag(F.lit(1)).over(w)
     changed = F.when(

@@ -68,10 +68,8 @@ def get_spark(app_name: str = "hubverse-transform-spark", cpus: int | None = Non
         # timestamps in testdata are timestamp[ms]/[ns] without TZ; keep them stable
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # UI off for bench/test runs (jetty startup + event-log overhead);
-        # diagnostic tools flip it on to read per-stage metrics through the
-        # REST API (guide §7.1) — tools/stage_profile.py
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off: jetty startup + event-log overhead on every session
+        .config("spark.ui.enabled", "false")
         # hive partition values stay strings: round_id is date-shaped but the
         # output schema policy types it string (ref integration goldens), and
         # silent str->date flips on lake read-back would break that parity

@@ -155,14 +155,9 @@ def test_wait_quiet_start_records_and_bounds(monkeypatch):
 
 def test_committed_bench_json_carries_compact_keys():
     """The artifact of record must carry the emitted compact-line key set
-    (the next run's stable prefix). Skips until the first r14-emitter
-    full-surface refresh lands."""
+    (the next run's stable prefix)."""
     data = json.loads((REPO / "BENCH.json").read_text())
     keys = data.get("compact_keys")
-    if keys is None:
-        import pytest
-
-        pytest.skip("BENCH.json predates compact_keys — refresh pending")
     assert isinstance(keys, list) and len(keys) >= 10
     assert all(k in data["queries"] for k in keys)
     load = data["load"]

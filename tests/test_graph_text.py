@@ -189,8 +189,8 @@ def test_bfs_hops_seed_dedup_and_multi_seed(spark):
 def test_pagerank_symmetric_fast_path_equals_general_path(spark):
     """On a symmetrized, NULL-free edge list, ``pagerank``'s cut-down plan
     (adjacency keys as the node set, no nodes join, literal node count)
-    matches a plain power iteration over every node and edge: at 3 rounds,
-    and at 30 rounds, which crosses the every-8-rounds lineage cuts."""
+    matches a plain power iteration over every node and edge at 3 rounds,
+    the rounds q72 runs."""
     import random
 
     rng = random.Random(20261017)
@@ -214,9 +214,8 @@ def test_pagerank_symmetric_fast_path_equals_general_path(spark):
             pr = nxt
         return pr
 
-    for iterations in (3, 30):
-        got = {r.node: r.pr for r in pagerank(df, iterations=iterations).collect()}
-        want = power_iteration(iterations)
-        assert set(got) == nodes
-        for n in nodes:
-            assert math.isclose(got[n], want[n], rel_tol=1e-12), (iterations, n)
+    got = {r.node: r.pr for r in pagerank(df, iterations=3).collect()}
+    want = power_iteration(3)
+    assert set(got) == nodes
+    for n in nodes:
+        assert math.isclose(got[n], want[n], rel_tol=1e-12), n

@@ -244,7 +244,8 @@ def test_triangle_count_releases_cache(spark):
 
 def test_winnow_overlap_pairs_finds_shared_passage(spark):
     # docs 1 and 2 share a long passage; doc 3 shares nothing. With
-    # min_shared=2 only the (1, 2) pair should survive.
+    # min_shared=2 and a cap above the corpus size only the (1, 2) pair
+    # should survive.
     common = "the quick brown fox jumps over lazy dogs again and again today"
     df = spark.createDataFrame(
         [(1, f"PREFIX ONE {common} SUFFIX ALPHA"),
@@ -253,7 +254,7 @@ def test_winnow_overlap_pairs_finds_shared_passage(spark):
         ["doc_id", "text"],
     )
     pairs = winnow_overlap_pairs(
-        df, "doc_id", "text", k=8, window=4, min_shared=2
+        df, "doc_id", "text", k=8, window=4, min_shared=2, max_df=100
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
     assert pairs[0]["shared_fps"] >= 2
@@ -265,9 +266,10 @@ def test_winnow_overlap_pairs_finds_shared_passage(spark):
 
 
 def test_winnow_overlap_pairs_releases_cache_in_max_df_path(spark):
-    """The df-cap path rebinds ``fps`` to the semi-join result; release must
-    still target the ORIGINAL persisted fingerprint table (r4 ADVICE):
-    nothing may stay registered in the CacheManager after the call."""
+    """``fps`` is the df-capped semi-join over the persisted fingerprint
+    table; release must target the persisted table (r4 ADVICE): nothing may
+    stay registered in the CacheManager after the call, whether the cap
+    drops fingerprints (3) or none (100)."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     assert cm.isEmpty()
@@ -276,7 +278,7 @@ def test_winnow_overlap_pairs_releases_cache_in_max_df_path(spark):
          for i in range(6)],
         ["doc_id", "text"],
     )
-    for max_df in (None, 3):
+    for max_df in (100, 3):
         winnow_overlap_pairs(
             df, "doc_id", "text", k=8, window=4, min_shared=1, max_df=max_df
         ).count()

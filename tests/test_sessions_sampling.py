@@ -189,11 +189,11 @@ def test_build_scd2_intervals(spark):
         (2, None, 1), (2, None, 2), (2, "C", 3),
     ]
     df = spark.createDataFrame(
-        [(k, a, dt.datetime(2024, 1, t)) for k, a, t in rows],
-        "k long, attr string, ts timestamp",
+        [(k, a, dt.datetime(2024, 1, t), i) for i, (k, a, t) in enumerate(rows)],
+        "k long, attr string, ts timestamp, tb long",
     )
     out = sorted(
-        build_scd2(df, "k", "attr", "ts").collect(), key=lambda r: (r.k, r.version)
+        build_scd2(df, "k", "attr", "ts", "tb").collect(), key=lambda r: (r.k, r.version)
     )
     k1 = [(r.attr, r.version, r.valid_from.day, r.valid_to.day if r.valid_to else None, r.n_obs)
           for r in out if r.k == 1]
@@ -366,6 +366,26 @@ def test_prefix_filter_random_mutation_corpus(spark):
         assert pref == base, f"t={t}: sym diff {set(pref) ^ set(base)}"
 
 
+def _shingle_sets(df):
+    from hubverse_transform_spark.operators.dedup import shingle_ngrams
+
+    return {
+        r.doc_id: frozenset(r.sh)
+        for r in df.select("doc_id", shingle_ngrams(F.col("text"), 3).alias("sh")).collect()
+    }
+
+
+def _brute_containment(sets, t):
+    """All ordered pairs (a, b) with |a ∩ b| / |a| >= t, rounded as the
+    operator rounds."""
+    want = {}
+    for a, sa in sets.items():
+        for b, sb in sets.items():
+            if a != b and len(sa & sb) / len(sa) >= t:
+                want[(a, b)] = round(len(sa & sb) / len(sa), 6)
+    return want
+
+
 def test_containment_pairs_equal_bruteforce(spark):
     """Prefix-filtered containment join is lossless: on the same seeded
     mutation corpus, the probe-prefix path returns exactly the ordered
@@ -374,11 +394,7 @@ def test_containment_pairs_equal_bruteforce(spark):
     in the A->B direction but below threshold in B->A."""
     import random
 
-    from hubverse_transform_spark.operators.dedup import (
-        containment_prefix_pairs,
-        shingle_ngrams,
-    )
-    from pyspark.sql import functions as F
+    from hubverse_transform_spark.operators.dedup import containment_prefix_pairs
 
     rng = random.Random(77)
     vocab = [f"w{i}" for i in range(30)]
@@ -393,33 +409,16 @@ def test_containment_pairs_equal_bruteforce(spark):
     docs.append((200, " ".join(docs[0][1].split()[:6])))
     docs.append((201, " ".join(docs[1][1].split()[:6])))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    sets = {
-        r.doc_id: frozenset(r.sh)
-        for r in df.select(
-            "doc_id", shingle_ngrams(F.col("text"), 3).alias("sh")
-        ).collect()
-    }
-    # max_df=None is the plain prefix join; max_df=3 forces a large hot set
-    # through the salted exact residual (vocab is tiny, so many shingles
-    # exceed df 3); "auto" derives the cap from the df distribution —
-    # all must equal the brute-force scan exactly
-    for t, mdf in ((0.5, None), (0.8, None), (0.5, 3), (0.8, 3), (0.5, "auto")):
-        want = {}
-        for a, sa in sets.items():
-            for b, sb in sets.items():
-                if a == b:
-                    continue
-                c = len(sa & sb) / len(sa)
-                if c >= t:
-                    want[(a, b)] = round(c, 6)
+    sets = _shingle_sets(df)
+    for t in (0.5, 0.8):
         got = {
             (r.id_a, r.id_b): r.containment
             for r in containment_prefix_pairs(
-                df, "doc_id", "text", ngram=3, threshold=t,
-                max_df=mdf, salt_buckets=4,
+                df, "doc_id", "text", ngram=3, threshold=t, salt_buckets=4
             ).collect()
         }
-        assert got == want, f"t={t} max_df={mdf}: sym diff {set(got) ^ set(want)}"
+        want = _brute_containment(sets, t)
+        assert got == want, f"t={t}: sym diff {set(got) ^ set(want)}"
     # the embedded short docs must be contained at 1.0 somewhere
     full = {
         (r.id_a, r.id_b): r.containment
@@ -429,6 +428,47 @@ def test_containment_pairs_equal_bruteforce(spark):
     }
     assert any(a == 200 and c == 1.0 for (a, _b), c in full.items())
     assert not any(b == 200 and a != 201 for (a, b) in full)
+
+
+def test_containment_hot_shingle_residual_equals_bruteforce(spark):
+    """The salted residual join for hot shingles keeps the result exact.
+    One boilerplate shingle sits in 40 of 70 docs, over a long tail of
+    shingles that each occur in one doc, so the cap derived from the data
+    (4x the p99.9 document frequency, floor 16) marks exactly that shingle
+    hot. Two docs consist of the boilerplate alone: their only probe
+    posting is hot, so every pair they head comes from the residual."""
+    from collections import Counter
+
+    from hubverse_transform_spark.operators.dedup import containment_prefix_pairs
+
+    boiler = "lorem ipsum dolor"
+    docs = []
+    for i in range(70):
+        tail = " ".join(f"t{i}x{j}" for j in range(30))
+        docs.append((i, f"{tail} {boiler} end{i}" if i < 40 else tail))
+    docs += [(100, boiler), (101, boiler)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    sets = _shingle_sets(df)
+
+    dfs = Counter(s for sh in sets.values() for s in sh)
+    p999 = (
+        spark.createDataFrame([(n,) for n in dfs.values()], "_df long")
+        .agg(F.expr("approx_percentile(_df, 0.999, 10000)"))
+        .first()[0]
+    )
+    cap = max(16, int(p999) * 4)
+    assert {s for s, n in dfs.items() if n > cap} == {boiler}
+
+    for t in (0.5, 0.9):
+        got = {
+            (r.id_a, r.id_b): r.containment
+            for r in containment_prefix_pairs(
+                df, "doc_id", "text", ngram=3, threshold=t, salt_buckets=4
+            ).collect()
+        }
+        want = _brute_containment(sets, t)
+        assert got == want, f"t={t}: sym diff {set(got) ^ set(want)}"
+        assert sum(1 for a, _ in got if a in (100, 101)) == 2 * 41
 
 
 def test_apply_changeset_duplicate_keys_raise(spark):

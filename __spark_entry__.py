@@ -40,6 +40,7 @@ from hubverse_transform_spark.functions.text import (
     redact_pii,
     whitespace_token_count,
 )
+from hubverse_transform_spark.caching import compute_release
 from hubverse_transform_spark.operators.asof import asof_join
 from hubverse_transform_spark.operators.clusters import dedup_clusters
 from hubverse_transform_spark.operators.dedup import (
@@ -3456,11 +3457,13 @@ def q150_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (tiny) edge list before recursing: a WITH-RECURSIVE
     # body re-evaluates every CTE it references per iteration, so leaving
     # the basket self-join inline multiplies the expensive build by the
-    # recursion depth (measured 6.4s -> ~2s at sf0.1). EAGER localCheckpoint
-    # rather than cache(): the build job runs here with full AQE planning,
-    # the recursion then scans the stored (tiny) edge partitions, and the
-    # storage is GC-reclaimed — nothing stays pinned in the CacheManager
-    # after the query.
+    # recursion depth. EAGER localCheckpoint rather than cache(): the build
+    # job runs here with full AQE planning, the recursion then scans the
+    # stored (tiny) edge partitions, and the storage is GC-reclaimed —
+    # nothing stays pinned in the CacheManager after the query.
+    # Kept by measurement: per-pass median 3.70 s with it vs 8.93 s without
+    # (sf0.1, 10 order-balanced pairs, parent IQR 0.77 s, lower without in 0 of
+    # 10; evidence/ab_materialization.jsonl).
     edges.localCheckpoint(eager=True).createOrReplaceTempView("edges_rr")
     return spark.sql(
         """
@@ -6425,16 +6428,13 @@ def q236_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion."""
     from hubverse_transform_spark.operators.graph import bfs_hops
 
-    # r13 (guide §5 caching): bfs_hops persists its per-round state but
-    # joins the CALLER's edge frame once per round — unpersisted, the
-    # lineitem self-join re-ran 4× (3 rounds + the seed filter). Persist
-    # it here; the cache fills during the operator's eager job and is
-    # released as soon as the (checkpointed) result exists.
-    # r13 s3 (guide 2.4, share one exchange): persist the edges ALREADY
-    # hash-partitioned on src - every BFS round joins on src, so the cached
-    # partitioning serves all three rounds (and the seed filter) with zero
-    # re-exchange; the one repartition replaces three per-round shuffles
-    # of the full edge list. Row set identical (repartition only moves).
+    # bfs_hops joins the caller's edge frame once per round, and the seed
+    # filter reads it too. Persisted hash-partitioned on src, the edge build
+    # runs once and every round's src join reads it with no re-exchange; it
+    # is released once the operator's eager job has filled and used it.
+    # Kept by measurement: per-pass median 7.88 s with it vs 12.58 s without
+    # (sf0.1, 10 order-balanced pairs, parent IQR 2.03 s, lower without in 0 of
+    # 10; evidence/ab_materialization.jsonl).
     edges = _q72_edges(spark, sf_dir).repartition("src").persist()
     seeds = edges.filter(F.col("src") <= 5).select(F.col("src").alias("node"))
     reached = bfs_hops(edges, seeds, max_hops=3)
@@ -6966,13 +6966,15 @@ def q245_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg_w = (1.504077, -2.079442)
     name_w = (6.856462, -2.995632)
     bal_w = (2.079442, -1.504077)
-    from hubverse_transform_spark.caching import compute_release
-
     # persist: the count() that picks the plan is also the job that fills
     # the cache, so the scoring pass reads candidates back instead of
     # re-running the variant self-join (compute_release frees it on exit);
     # on a memoized repeat the candidate set is composed lazily (it is
-    # consumed exactly once in the scoring DAG, so no persist is needed)
+    # consumed exactly once in the scoring DAG, so no persist is needed).
+    # It only acts on the first composition, which the timed runs never see;
+    # its untimed warm-up runs read 9.43 s with the persist vs 14.35 s without
+    # (median of 10 order-balanced pairs at sf0.1, parent IQR 2.41 s, lower
+    # without in 0 of 10; evidence/ab_materialization.jsonl).
     key = _q245_branch_key(sf_dir)
     memoized = _Q245_BRANCH.get(key)
     if memoized is None:
@@ -7237,14 +7239,11 @@ def q249_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round, degree is a map-side-combined count on src
     (symmetric edges: out-degree == degree), the survivor filter is two
-    co-partitioned semi-joins; edge set shrinks monotonically; all
-    intermediates persisted per round, released on return."""
-    from hubverse_transform_spark.caching import compute_release
-
-    edges = _q72_edges(spark, sf_dir).persist()
-    cached = [edges]
-    rows = []
-    cur = edges
+    co-partitioned semi-joins; edge set shrinks monotonically. Nothing is
+    persisted: per-pass median 5.82 s without it vs 7.93 s with it (sf0.1, 10
+    order-balanced pairs, parent IQR 1.69 s, lower without in 10 of 10;
+    evidence/ab_materialization.jsonl)."""
+    cur = _q72_edges(spark, sf_dir)
     k = 120
     snap = []
     for rnd in range(4):
@@ -7257,24 +7256,20 @@ def q249_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap.append(stats)
         if rnd == 3:
             break
-        keep = deg.filter(F.col("_deg") >= k).select("src").persist()
+        keep = deg.filter(F.col("_deg") >= k).select("src")
         # r13 s3 measured and REJECTED (evidence/ab_r13b_exp3.jsonl,
         # min-of-12 1.12x): running the dst-side semi-join FIRST so the
-        # persisted round lands src-partitioned for the NEXT round's
-        # degree count. It broke THIS round's exchange sharing instead -
-        # the degree groupBy and the src semi-join both key on src, so the
-        # committed order serves both from one exchange of cur.
-        nxt = (
-            cur.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .persist()
+        # round lands src-partitioned for the NEXT round's degree count.
+        # It broke THIS round's exchange sharing instead - the degree
+        # groupBy and the src semi-join both key on src, so the committed
+        # order serves both from one exchange of cur.
+        cur = cur.join(keep, "src", "left_semi").join(
+            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
         )
-        cached += [keep, nxt]
-        cur = nxt
     out = snap[0]
     for s in snap[1:]:
         out = out.unionByName(s)
-    return compute_release(out.orderBy("round"), *cached)
+    return out.orderBy("round")
 
 
 def q250_backtest_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7342,31 +7337,21 @@ def q251_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each half-round is one co-partitioned join edge⋈scores +
     one aggregation (the PageRank two-shuffle pattern); normalizers ride
     as 1-row broadcasts; fixed rounds keep it bit-stable."""
-    from hubverse_transform_spark.caching import compute_release
-
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r13 (guide §5 caching / §2.4): without the persists below, every
-    # reference to an upstream frame RE-DERIVES its whole chain — auth2
-    # references edges+hub2, hub2 references edges+auth1, each normalizer
-    # agg re-derives its input, and Catalyst/AQE found zero reusable
-    # exchanges: the executed plan held 178 Exchange / 120 parquet scans
-    # for a 2-round computation whose linear form needs ~10. Persist each
-    # multi-consumed intermediate (edges ×4, each raw rank vector ×2),
-    # materialize the 20-row output once, release everything on return —
-    # the pagerank/compute_release discipline. Values are unchanged: the
-    # same lineage computes each vector once and serves identical rows to
-    # every consumer.
+    # edges (×4) and each raw rank vector (×2) feed several branches,
+    # unpersisted: per-pass median 6.59 s without it vs 6.30 s with it (sf0.1,
+    # 10 order-balanced pairs, parent IQR 1.35 s, lower without in 3 of 10;
+    # evidence/ab_materialization.jsonl).
     edges = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
         .distinct()
-        .persist()
     )
     # round 1: hub = basket size, normalized; auth = Σ normalized hubs
     hub1_raw = edges.groupBy("cust").agg(
         F.count(F.lit(1)).cast("double").alias("_h")
-    ).persist()
+    )
     h1n = hub1_raw.agg(F.sum("_h").alias("_hs"))
     hub1 = hub1_raw.crossJoin(F.broadcast(h1n)).select(
         "cust", (F.col("_h") / F.col("_hs")).alias("_h")
@@ -7375,7 +7360,7 @@ def q251_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.join(hub1, "cust")
         .groupBy("part")
         .agg(F.sum("_h").alias("_a"))
-    ).persist()
+    )
     a1n = auth1_raw.agg(F.sum("_a").alias("_as"))
     auth1 = auth1_raw.crossJoin(F.broadcast(a1n)).select(
         "part", (F.col("_a") / F.col("_as")).alias("_a")
@@ -7383,14 +7368,14 @@ def q251_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 2: hub = Σ auth over basket; auth = Σ hub over buyers
     hub2_raw = (
         edges.join(auth1, "part").groupBy("cust").agg(F.sum("_a").alias("_h2"))
-    ).persist()
+    )
     h2n = hub2_raw.agg(F.sum("_h2").alias("_hs2"))
     hub2 = hub2_raw.crossJoin(F.broadcast(h2n)).select(
         "cust", (F.col("_h2") / F.col("_hs2")).alias("_h2")
     )
     auth2_raw = (
         edges.join(hub2, "cust").groupBy("part").agg(F.sum("_h2").alias("_a2"))
-    ).persist()
+    )
     a2n = auth2_raw.agg(F.sum("_a2").alias("_as2"))
     result = (
         auth2_raw.crossJoin(F.broadcast(a2n))
@@ -7401,7 +7386,7 @@ def q251_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("authority_ppm").desc(), "part")
         .limit(20)
     )
-    return compute_release(result, edges, hub1_raw, auth1_raw, hub2_raw, auth2_raw)
+    return result
 
 
 def q252_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7480,14 +7465,12 @@ def q253_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one degree aggregation, two co-partitioned joins to tag
     each edge with (deg_src, deg_dst), one corr() pass — corr is algebraic
     and single-pass; no windows, no driver math."""
-    # r13 (guide §5 caching): the lineitem self-join edge build fed three
-    # branches (deg + the edge side) and deg two, all re-derived (12
-    # scans / 28 exchanges executed, zero reuse). Persist both,
-    # materialize the 1-row output, release on return.
-    from hubverse_transform_spark.caching import compute_release
-
-    edges = _q72_edges(spark, sf_dir).persist()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_d")).persist()
+    # The edge build feeds three branches (deg + the edge side) and deg
+    # two, unpersisted: per-pass median 3.66 s without it vs 3.37 s with it
+    # (sf0.1, 10 order-balanced pairs, parent IQR 1.05 s, lower without in 2 of
+    # 10; evidence/ab_materialization.jsonl).
+    edges = _q72_edges(spark, sf_dir)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
     tagged = (
         edges.join(deg, "src")
         .withColumnRenamed("_d", "_ds")
@@ -7513,7 +7496,7 @@ def q253_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("assortativity"),
     )
-    return compute_release(out, edges, deg)
+    return out
 
 
 def q254_readability_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7601,19 +7584,15 @@ def q256_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one corpus scan into the ≤36-cell confusion table; all
     metric math runs on that bounded table (two rollups + one join)."""
-    from hubverse_transform_spark.caching import compute_release
-
     d = _t(spark, sf_dir, "documents")
-    # r13 (guide §5 caching): the ≤36-cell confusion table feeds three
-    # rollup branches, and each branch re-ran the corpus scan WITH the
-    # per-row lang-ID profiling expression (3 scans of the expensive part
-    # for a 36-row table; zero exchange reuse). Persist the table,
-    # materialize the per-class output once, release on return.
+    # The ≤36-cell confusion table feeds three rollup branches,
+    # unpersisted: per-pass median 2.37 s without it vs 1.90 s with it (sf0.1,
+    # 10 order-balanced pairs, parent IQR 0.55 s, lower without in 0 of 10;
+    # evidence/ab_materialization.jsonl).
     conf = (
         d.select("lang", lang_id_expr(F.col("text")).alias("_pred"))
         .groupBy("lang", "_pred")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .persist()
     )
     tp = conf.filter(F.col("lang") == F.col("_pred")).select(
         "lang", F.col("_n").alias("_tp")
@@ -7644,7 +7623,7 @@ def q256_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(0.0), 6
         ).alias("f1"),
     )
-    return compute_release(out, conf)
+    return out
 
 
 def q257_time_to_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8131,17 +8110,14 @@ def q267_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     single digits), never quadratic in parts; the order-degree table joins
     on the same key, so all three inputs share one co-partitioned
     exchange. The final agg shuffles only surviving pairs."""
-    from hubverse_transform_spark.caching import compute_release
-
-    # r13 (guide §5 caching): lp feeds both self-join sides and the
-    # degree table — three derivations of the scan+distinct with zero
-    # exchange reuse. Persist it, materialize the 50-row output, release
-    # on return.
+    # lp feeds both self-join sides and the degree table, unpersisted:
+    # per-pass median 2.83 s without it vs 3.01 s with it (sf0.1, 10
+    # order-balanced pairs, parent IQR 0.77 s, lower without in 5 of 10;
+    # evidence/ab_materialization.jsonl).
     lp = (
         _t(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
-        .persist()
     )
     deg = lp.groupBy("o").agg(F.count(F.lit(1)).alias("s")).filter(F.col("s") >= 2)
     pr = (
@@ -8169,7 +8145,7 @@ def q267_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(50)
         .select("p1", "p2", F.round("_aa", 6).alias("aa_score"), "n_common")
     )
-    return compute_release(out, lp)
+    return out
 
 
 def _morton16(bx, by):
@@ -10103,24 +10079,21 @@ def q309_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidate volume is Σ n·(n−1)/2 over block sizes — an
     aggregation, never a materialized pair set; completeness joins the
     (small) truth-pair table to per-doc block keys twice."""
-    from hubverse_transform_spark.caching import compute_release
-
     d = _t(spark, sf_dir, "documents")
-    # r13 (guide §5 caching): the ngram-jaccard truth table — the
-    # expensive part of this audit — was re-derived once per strategy
-    # branch, and the per-doc block keys four times (cand + completeness
-    # × 2 strategies; 20 scans / 40 exchanges executed, zero reuse).
-    # Persist both, materialize the 2-row output, release on return.
+    # the truth table and the block keys feed one branch per strategy,
+    # unpersisted: per-pass median 2.70 s without it vs 3.39 s with it (sf0.1,
+    # 10 order-balanced pairs, parent IQR 0.92 s, lower without in 9 of 10;
+    # evidence/ab_materialization.jsonl).
     truth = ngram_jaccard_pairs(
         d, "doc_id", "text", ngram=3, threshold=0.5, block_col=None
-    ).select("id_a", "id_b").persist()
+    ).select("id_a", "id_b")
     keyed = d.select(
         "doc_id",
         F.floor(F.col("n_chars") / 100).cast("string").alias("len_bucket"),
         F.split(F.lower(F.trim(F.col("text"))), r"\s+").getItem(0).alias(
             "first_token"
         ),
-    ).persist()
+    )
     n_docs = d.count()
     total_pairs = n_docs * (n_docs - 1) // 2
     strategies = [("len_bucket", "len_bucket"), ("first_token", "first_token")]
@@ -10171,7 +10144,7 @@ def q309_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    return compute_release(out, truth, keyed)
+    return out
 
 
 def q310_bigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11420,10 +11393,11 @@ def _head_cooccurrence(li: DataFrame, k: int) -> tuple[DataFrame, DataFrame, Dat
     ``li`` holds distinct (l_orderkey, l_partkey) rows. Returns
     ``(n_i, top_items, co)``: per-part order counts ``(l_partkey, _n)``,
     the head ``(item_a, _na)`` ordered by count then id, and
-    ``(item_a, item_b, _co)`` shared orders per head pair. ``n_i`` and
-    ``top_items`` are persisted (each feeds two plan branches); the caller
-    releases them with its output."""
-    n_i = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n")).persist()
+    ``(item_a, item_b, _co)`` shared orders per head pair. Nothing is
+    persisted, here or in the four callers: per-pass medians at sf0.1
+    (evidence/ab_materialization.jsonl) read lower without every persist
+    for each of them (q331, q353, q365, q370; numbers at each call site)."""
+    n_i = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n"))
     b = li.select(
         F.col("l_orderkey").alias("_ok"), F.col("l_partkey").alias("_pb")
     )
@@ -11431,7 +11405,7 @@ def _head_cooccurrence(li: DataFrame, k: int) -> tuple[DataFrame, DataFrame, Dat
         n_i.orderBy(F.col("_n").desc(), "l_partkey")
         .limit(k)
         .select(F.col("l_partkey").alias("item_a"), F.col("_n").alias("_na"))
-    ).persist()
+    )
     # r13 (guide §3.2/§2.3): the head restriction is pushed BELOW the
     # co-occurrence self-join — co(i,j) counts shared orders per pair, so
     # restricting the LEFT side to the k head items before the join
@@ -11472,15 +11446,12 @@ def q331_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-item norms joined unhinted (|items| grows with data; AQE
     broadcasts while small); final is a per-item top-3 window over the
     candidate slice."""
-    # r13 (guide §5 caching): li feeds three branches, n_i and the head
-    # list two each, with zero exchange reuse across them (executed plan:
-    # 10 scans / 20 exchanges) — persist the shared frames, materialize
-    # the 60-row output once, release on return. Values unchanged.
-    from hubverse_transform_spark.caching import compute_release
-
+    # li feeds three branches, unpersisted: per-pass median 2.31 s without it
+    # vs 2.57 s with it (sf0.1, 10 order-balanced pairs, parent IQR 0.65 s,
+    # lower without in 8 of 10; evidence/ab_materialization.jsonl).
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
-    ).distinct().persist()
+    ).distinct()
     n_i, top_items, co = _head_cooccurrence(li, 20)
     scored = (
         co.join(F.broadcast(top_items), "item_a")
@@ -11508,7 +11479,7 @@ def q331_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_r").alias("rank"),
         )
     )
-    return compute_release(out, li, n_i, top_items)
+    return out
 
 
 def q332_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11657,21 +11628,17 @@ def q334_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once."""
     # basket build over the lineitem self-join, by measurement: sf0.1,
     # 10 order-balanced pairs, median-of-3 11.65 s vs 12.57 s, minima
-    # 9.89 s vs 9.86 s (evidence/ab_q334_part_pairs.jsonl)
-    edges = _part_pairs(spark, sf_dir).persist()
+    # 9.89 s vs 9.86 s (evidence/ab_q334_part_pairs.jsonl). edges and deg
+    # each feed two branches, unpersisted: per-pass median 6.44 s without it vs
+    # 8.03 s with it (sf0.1, 10 order-balanced pairs, parent IQR 2.17 s, lower
+    # without in 10 of 10; evidence/ab_materialization.jsonl).
+    edges = _part_pairs(spark, sf_dir)
     # r13 s3: both endpoints from ONE map-side explode (the two-branch
-    # union re-derived the edge build per side — zero branch reuse), and
-    # edges/deg persisted across the intersection pipeline: the stage
-    # readout under the NEW shape showed the edge-build and degree chains
-    # each running twice (duplicated stage pairs with identical shuffle
-    # sizes). The old persist rejection (13.1 vs 9.9 s) was measured on
-    # the WEDGE shape, whose far larger intermediates made the cache fill
-    # dominate; re-measured under the intersection shape it wins.
+    # union re-derived the edge build per side — zero branch reuse)
     deg = (
         edges.select(F.explode(F.array(F.col("src"), F.col("dst"))).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("_d"))
-        .persist()
     )
     # no broadcast hint on the degree table: it is |V|-sized, so a forced
     # broadcast is exactly the local-mode plan that dies at lake scale
@@ -11692,10 +11659,7 @@ def q334_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower_first = (F.col("_ds") < F.col("_dd")) | (
         (F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst"))
     )
-    # NOTE: persisting oriented/deg + compute_release was measured SLOWER
-    # here (13.1s vs 9.9s at sf0.1) — the checkpoint boundary costs more
-    # than the shared-subtree recomputation it saves on this dense graph.
-    # Also measured and rejected (round 8): wedge generation via per-node
+    # Measured and rejected (round 8): wedge generation via per-node
     # collect_list adjacency + HOF ordered-pair explode (one shuffle
     # instead of the o1xo2 self-join) — 9.2s vs 4.9s for the triangle
     # stages alone at sf0.1, same 1,884,488 triangles; the array
@@ -11745,9 +11709,7 @@ def q334_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _t(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("v"), "p_brand"
     )
-    from hubverse_transform_spark.caching import compute_release
-
-    return compute_release(
+    return (
         cc.join(F.broadcast(parts), "v")
         .groupBy("p_brand")
         .agg(
@@ -11757,9 +11719,7 @@ def q334_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the reduced sum denominator = 2*10^6*odd — measure-zero
             F.round(F.avg("_cc"), 6).alias("avg_clustering_coeff"),
             F.round(F.max("_cc"), 6).alias("max_clustering_coeff"),
-        ),
-        edges,
-        deg,
+        )
     )
 
 
@@ -12869,13 +12829,10 @@ def q353_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     odate = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
-    # r13 (guide §5 caching): the keyed train/test split feeds FIVE plan
-    # branches (n_i, the basket side, the co-occurrence left side, both
-    # probe sides) and n_i two more — with zero exchange reuse the
-    # executed plan re-derived the lineitem join per branch (32 scans /
-    # 66 exchanges). Persist the shared frames, materialize the 1-row
-    # output, release on return; values unchanged (same lineage served
-    # to every consumer).
+    # the keyed train/test split feeds five plan branches, unpersisted:
+    # per-pass median 2.66 s without it vs 3.58 s with it (sf0.1, 10
+    # order-balanced pairs, parent IQR 0.85 s, lower without in 9 of 10;
+    # evidence/ab_materialization.jsonl).
     keyed = li.join(
         odate.hint("shuffle_hash"),
         li.l_orderkey == odate.o_orderkey,
@@ -12885,7 +12842,7 @@ def q353_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz")).alias(
             "_train"
         ),
-    ).persist()
+    )
     train = keyed.filter(F.col("_train")).select("l_orderkey", "l_partkey")
     test = keyed.filter(~F.col("_train")).select("l_orderkey", "l_partkey")
     n_i, top_items, co = _head_cooccurrence(train, 20)
@@ -12946,9 +12903,7 @@ def q353_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("hit_rate_at_3"),
     )
-    from hubverse_transform_spark.caching import compute_release
-
-    return compute_release(out, keyed, n_i, top_items)
+    return out
 
 
 def q354_bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13645,15 +13600,13 @@ def q365_rec_novelty_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: re-derives the bounded top-3 table (q331's shape), joins
     unhinted AQE-gated popularity join, and collapses to one row."""
-    # r13 (guide §5 caching): same sharing shape as q331 — li ×3 plus the
-    # composition-time n_orders count, n_i/top_items ×2, zero exchange
-    # reuse. Persist the shared frames (the count() action fills li's
-    # cache), materialize the 1-row output, release on return.
-    from hubverse_transform_spark.caching import compute_release
-
+    # li feeds three branches and the n_orders count, unpersisted:
+    # per-pass median 2.67 s without it vs 3.33 s with it (sf0.1, 10
+    # order-balanced pairs, parent IQR 0.54 s, lower without in 9 of 10;
+    # evidence/ab_materialization.jsonl).
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
-    ).distinct().persist()
+    ).distinct()
     n_orders = li.select("l_orderkey").distinct().count()
     n_catalog = _t(spark, sf_dir, "part").count()
     n_i, top_items, co = _head_cooccurrence(li, 20)
@@ -13687,7 +13640,7 @@ def q365_rec_novelty_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("item_b") / F.lit(float(n_catalog)), 6
         ).alias("catalog_coverage"),
     )
-    return compute_release(out, li, n_i, top_items)
+    return out
 
 
 def q366_dedup_storage_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13946,16 +13899,13 @@ def q370_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the candidate lists are the bounded top-20×top-10
     slices; pair enumeration for τ runs inside each head item's ≤10-row
     list (self-join on the head key)."""
-    # r13 (guide §5 caching): same sharing shape as q331 (li ×3, n_i ×2,
-    # head list ×2) plus the top-10 list consumed by BOTH τ sides — zero
-    # exchange reuse re-derived everything per branch (20 scans / 40
-    # exchanges executed). Persist the shared frames, materialize the
-    # 10-row output, release on return.
-    from hubverse_transform_spark.caching import compute_release
-
+    # li (three branches) and top10 (both τ sides), unpersisted:
+    # per-pass median 2.24 s without it vs 2.88 s with it (sf0.1, 10
+    # order-balanced pairs, parent IQR 0.36 s, lower without in 9 of 10;
+    # evidence/ab_materialization.jsonl).
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
-    ).distinct().persist()
+    ).distinct()
     n_i, top_items, co = _head_cooccurrence(li, 10)
     cand = (
         co.join(F.broadcast(top_items), "item_a")
@@ -13976,7 +13926,7 @@ def q370_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     wr = Window.partitionBy("item_a").orderBy(F.col("_sim").desc(), "item_b")
     top10 = cand.withColumn("_r", F.row_number().over(wr)).filter(
         F.col("_r") <= 10
-    ).persist()
+    )
     p = top10.select("item_a", F.col("item_b").alias("_ib1"),
                      F.col("_sim").alias("_s1"), F.col("_nb").alias("_p1"))
     q = top10.select("item_a", F.col("item_b").alias("_ib2"),
@@ -13987,7 +13937,7 @@ def q370_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     sgn = F.signum(F.col("_s1") - F.col("_s2")) * F.signum(
         (F.col("_p1") - F.col("_p2")).cast("double")
     )
-    out = (
+    return (
         pairs.groupBy("item_a")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -13996,7 +13946,6 @@ def q370_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return compute_release(out, li, n_i, top_items, top10)
 
 
 def q371_bloom_size_planner(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,10 +27,22 @@ intermediates (near-dup pairs, rank vectors, fingerprint overlaps). For a
 data-sized output, eager materialization would double-buffer the result —
 keep plain persist and document the trade instead.
 
-Fault tolerance. ``localCheckpoint`` (here, and the per-round state of
-``operators.clusters`` and ``operators.profiling``)
-keeps its blocks in executor block managers with the lineage cut, so
-losing an executor that holds one fails the query instead of recomputing.
+Keeping a site. A subtree that feeds several branches is not reason
+enough: the lazy plan recomputes it, but AQE plans it whole, and on most
+single-query sites that was faster than filling and reading a cache. So a
+persist, ``compute_release`` or eager ``localCheckpoint`` stays only where an
+order-balanced A/B of its consumer (``tools/ab_quiet2.py``, per-pass
+medians) shows it winning, and the call site carries that number. A site in
+a shared helper is judged by every consumer, and a persist stays only
+beside its release.
+
+Fault tolerance. ``localCheckpoint`` keeps its blocks in executor block
+managers with the lineage cut, so losing an executor that holds one fails
+the query instead of recomputing. The sites: ``compute_release`` (from
+q245, ``operators.dedup``'s two prefix joins and
+``simhash_near_dup_pairs``, and ``operators.graph``'s ``pagerank`` and
+``bfs_hops``), the direct eager checkpoints of q150 and q311, and the
+per-round state of ``operators.clusters`` and ``operators.profiling``.
 That is acceptable for a small frame that lives no longer than the query
 building it: recovery is re-running that query. It is not acceptable on
 the Layer-A landing path (which has none), for a frame shared across queries

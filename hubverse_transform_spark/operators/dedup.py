@@ -337,7 +337,9 @@ def prefix_filter_jaccard_pairs(
     then both intermediates unpersist. Nothing stays registered after the
     call (the round-3 leak), and composed callers that run several dedup
     pipelines over the same input cannot trip CacheManager "already
-    cached" re-registration.
+    cached" re-registration. On q158, kept by measurement: per-pass median
+    4.43 s with it vs 5.62 s without (sf0.1, 10 order-balanced pairs, parent
+    IQR 0.90 s, lower without in 1 of 10; evidence/ab_materialization.jsonl).
     Never broadcasts; never caps.
     """
     docs, _, prefix = _prefix_postings(df, id_col, text_col, ngram, threshold)
@@ -529,36 +531,29 @@ def winnow_overlap_pairs(
     shared fingerprints are also the real clone signal — boilerplate overlap
     is exactly what the cap is meant to ignore.
     """
-    # The fingerprint table feeds THREE consumers (the df-cap aggregation and
-    # both self-join sides); without a cache the whole winnowing pipeline
-    # (regex grams -> posexplode -> window-min -> distinct) re-executes per
-    # consumer — AQE's runtime stage reuse does not cover it because the
-    # consumers shuffle on different keys. The cache costs one write of the
-    # distinct'd (doc, fp) table — O(docs x fps/doc), far smaller than the
-    # gram stream — measured 2-4x faster at sf0.1 than recomputing, and is
-    # RELEASED on exit by compute_release (the r3 verdict's persist leak).
-    # fps_cached is the PERSISTED frame, fps the df-capped semi-join over it,
-    # so release must name fps_cached (unpersisting the derived frame would
-    # be a no-op and leak the original registration).
-    fps_cached = winnow_fingerprints(df, id_col, text_col, k=k, window=window).select(
+    # The fingerprint table feeds three consumers (the df-cap aggregation and
+    # both self-join sides) and is not persisted: on q47,
+    # per-pass median 4.43 s without it vs 4.67 s with it (sf0.1, 10
+    # order-balanced pairs, parent IQR 0.98 s, lower without in 9 of 10;
+    # evidence/ab_materialization.jsonl).
+    fps_all = winnow_fingerprints(df, id_col, text_col, k=k, window=window).select(
         F.col(id_col).alias("_id"), "fp"
-    ).persist()
+    )
     rare = (
-        fps_cached.groupBy("fp")
+        fps_all.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))
         .filter(F.col("_df") <= max_df)
         .select("fp")
     )
-    fps = fps_cached.join(rare, on="fp", how="left_semi")
+    fps = fps_all.join(rare, on="fp", how="left_semi")
     a, b = fps.alias("a"), fps.hint("shuffle_hash").alias("b")
-    result = (
+    return (
         a.join(b, on="fp")
         .filter(F.col("a._id") < F.col("b._id"))
         .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-    return compute_release(result, fps_cached)
 
 
 def hamming_distance(a: Column, b: Column) -> Column:
@@ -717,7 +712,10 @@ def containment_prefix_pairs(
     exact verification runs only on surviving candidates. Same
     cache-compute-release discipline as the Jaccard form: shingle arrays
     and probe prefixes persist across the join branches, one eager job
-    materializes the (small) pair output, then both unpersist.
+    materializes the (small) pair output, then both unpersist. On q212,
+    kept by measurement: per-pass median 6.97 s with it vs 10.23 s without
+    (sf0.1, 10 order-balanced pairs, parent IQR 1.07 s, lower without in 0 of
+    10; evidence/ab_materialization.jsonl).
 
     Skew mitigation, EXACTNESS-PRESERVING (unlike ``winnow_overlap_pairs``
     whose ``max_df`` simply drops boilerplate keys): shingles with document

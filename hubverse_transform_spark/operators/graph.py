@@ -108,13 +108,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
 
     Returns (node, triangles) for nodes in at least one triangle.
 
-    The canonical edge list feeds THREE join branches (e1/e2/e3) and the
-    engine reuses nothing across plan branches (the r13 zero-ReusedExchange
-    census), so an expensive caller-side edge build — q137's basket
-    self-join — would run three times; ``canon`` is persisted and the
-    (per-node, bounded-by-|V|) output materialized once through
-    ``compute_release`` [r13 s8, guide §2.4/§5: order-balanced quiet A/B
-    min-of-18 ratio 0.89 on q137 at sf0.1, evidence/ab_r13c_exp4.jsonl].
+    The canonical edge list feeds three join branches (e1/e2/e3) and is
+    not persisted: on q137, per-pass median 2.55 s without it vs 3.09 s with it
+    (sf0.1, 10 order-balanced pairs, parent IQR 0.56 s, lower without in 10 of
+    10; evidence/ab_materialization.jsonl).
     """
     canon = (
         edges.select(
@@ -123,18 +120,16 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
     e1 = canon.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = canon.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = canon.select(F.col("a").alias("x"), F.col("b").alias("z"))
     tri = e1.join(e2, "y").join(e3, ["x", "z"])
-    per_node = (
+    return (
         tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    return compute_release(per_node, canon)
 
 
 def bfs_hops(

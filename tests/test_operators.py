@@ -226,8 +226,9 @@ def test_winnow_fingerprint_arrays_matches_exploded_form(spark):
 
 
 def test_triangle_count_releases_cache(spark):
-    """triangle_count persists the canonical edge list across its three
-    join branches (r13); nothing may stay registered after the call."""
+    """triangle_count reads its canonical edge list lazily in all three
+    join branches; nothing may be registered in the CacheManager after the
+    call."""
     from hubverse_transform_spark.operators.graph import triangle_count
 
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -266,10 +267,9 @@ def test_winnow_overlap_pairs_finds_shared_passage(spark):
 
 
 def test_winnow_overlap_pairs_releases_cache_in_max_df_path(spark):
-    """``fps`` is the df-capped semi-join over the persisted fingerprint
-    table; release must target the persisted table (r4 ADVICE): nothing may
-    stay registered in the CacheManager after the call, whether the cap
-    drops fingerprints (3) or none (100)."""
+    """``fps`` is the df-capped semi-join over the lazy fingerprint table:
+    nothing may be registered in the CacheManager after the call, whether
+    the cap drops fingerprints (3) or none (100)."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     assert cm.isEmpty()

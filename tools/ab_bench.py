@@ -10,8 +10,16 @@ a number, not a guess.
 Usage:
     python tools/ab_bench.py <tree_root> <label> <q1,q2,...> <out.jsonl>
 
+Each query runs once untimed (the warm-up: JIT, file listing and
+first-touch caches) before its three timed runs, so a pass's spread is not
+one cold run against two warm ones. The warm-up's wall time is recorded
+separately under "warm" and never enters "queries"; it is the only timing
+of work a query does on its first composition alone (q245's memoized plan
+choice).
+
 Appends one JSON line per pass: {"label", "tree", "pass_ts", "load_pre",
-"load_post", "cpu_busy_frac", "queries": {name: [run1, run2, run3]}}.
+"load_post", "cpu_busy_frac", "warm": {name: run0},
+"queries": {name: [run1, run2, run3]}}.
 """
 
 from __future__ import annotations
@@ -49,14 +57,16 @@ def main() -> None:
     load_pre = os.getloadavg()
     tot0, idle0 = _proc_stat()
     t_pass0 = time.time()
+    warm: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     for name in names:
         fn = fns[name]
-        runs[name] = []
-        for _ in range(3):
+        times = []
+        for _ in range(4):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            runs[name].append(round(time.perf_counter() - t0, 3))
+            times.append(round(time.perf_counter() - t0, 3))
+        warm[name], runs[name] = times[0], times[1:]
     tot1, idle1 = _proc_stat()
     rec = {
         "label": label,
@@ -65,6 +75,7 @@ def main() -> None:
         "load_pre": [round(x, 2) for x in load_pre],
         "load_post": [round(x, 2) for x in os.getloadavg()],
         "cpu_busy_frac": round(1.0 - (idle1 - idle0) / max(1, tot1 - tot0), 4),
+        "warm": warm,
         "queries": runs,
     }
     with open(out, "a") as f:

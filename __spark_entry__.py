@@ -3457,14 +3457,14 @@ def q150_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (tiny) edge list before recursing: a WITH-RECURSIVE
     # body re-evaluates every CTE it references per iteration, so leaving
     # the basket self-join inline multiplies the expensive build by the
-    # recursion depth. EAGER localCheckpoint rather than cache(): the build
-    # job runs here with full AQE planning, the recursion then scans the
-    # stored (tiny) edge partitions, and the storage is GC-reclaimed —
-    # nothing stays pinned in the CacheManager after the query.
+    # recursion depth. compute_release (an eager checkpoint) rather than
+    # cache(): the build job runs here with full AQE planning, the recursion
+    # then scans the stored (tiny) edge partitions, and the storage is
+    # GC-reclaimed — nothing stays pinned in the CacheManager after the query.
     # Kept by measurement: per-pass median 3.70 s with it vs 8.93 s without
     # (sf0.1, 10 order-balanced pairs, parent IQR 0.77 s, lower without in 0 of
     # 10; evidence/ab_materialization.jsonl).
-    edges.localCheckpoint(eager=True).createOrReplaceTempView("edges_rr")
+    compute_release(edges).createOrReplaceTempView("edges_rr")
     return spark.sql(
         """
         WITH RECURSIVE reach(brand, depth) AS (
@@ -4793,11 +4793,7 @@ def q194_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star variant (Kiveris et al.); that variant is retired,
     since pointer jumping already converges in O(log diameter) rounds. The
     oracle is the recursive-CTE reachability labeling."""
-    d = _t(spark, sf_dir, "documents")
-    pairs = simhash_near_dup_pairs(
-        d, "doc_id", "text", bits=32, ngram=2, max_hamming=3
-    )
-    return dedup_clusters(pairs)
+    return q45_dedup_clusters(spark, sf_dir)
 
 
 def q195_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6422,8 +6418,8 @@ def q236_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round one shuffled-hash join (frontier side is the
     small one — AQE would broadcast it in early rounds on a cluster), one
-    distinct, one co-partitioned anti-join; fixed 3 rounds, everything
-    persisted per round and released on return. The oracle mirrors the
+    distinct, one co-partitioned anti-join; fixed 3 rounds, each cut from
+    its lineage by ``caching.iterate``. The oracle mirrors the
     rounds as unrolled hop CTEs (h1/h2/h3 with NOT IN visited), not path
     recursion."""
     from hubverse_transform_spark.operators.graph import bfs_hops
@@ -7466,11 +7462,12 @@ def q253_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     each edge with (deg_src, deg_dst), one corr() pass — corr is algebraic
     and single-pass; no windows, no driver math."""
     # The edge build feeds three branches (deg + the edge side) and deg
-    # two, unpersisted: per-pass median 3.66 s without it vs 3.37 s with it
-    # (sf0.1, 10 order-balanced pairs, parent IQR 1.05 s, lower without in 2 of
-    # 10; evidence/ab_materialization.jsonl).
-    edges = _q72_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
+    # two: persist both, materialize the 1-row output, release on return.
+    # Kept by measurement: per-pass median 2.88 s with it vs 2.98 s without
+    # (sf0.1, 10 order-balanced pairs, parent IQR 0.41 s, lower with in 6 of
+    # 10; evidence/ab_iterate.jsonl).
+    edges = _q72_edges(spark, sf_dir).persist()
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_d")).persist()
     tagged = (
         edges.join(deg, "src")
         .withColumnRenamed("_d", "_ds")
@@ -7496,7 +7493,7 @@ def q253_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("assortativity"),
     )
-    return out
+    return compute_release(out, edges, deg)
 
 
 def q254_readability_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7585,14 +7582,17 @@ def q256_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus scan into the ≤36-cell confusion table; all
     metric math runs on that bounded table (two rollups + one join)."""
     d = _t(spark, sf_dir, "documents")
-    # The ≤36-cell confusion table feeds three rollup branches,
-    # unpersisted: per-pass median 2.37 s without it vs 1.90 s with it (sf0.1,
-    # 10 order-balanced pairs, parent IQR 0.55 s, lower without in 0 of 10;
-    # evidence/ab_materialization.jsonl).
+    # The ≤36-cell confusion table feeds three rollup branches, each of which
+    # would re-run the corpus scan with the lang-ID expression: persist it,
+    # materialize the per-class output once, release on return.
+    # Kept by measurement: per-pass median 1.50 s with it vs 1.91 s without
+    # (sf0.1, 10 order-balanced pairs, parent IQR 0.23 s, lower with in 10 of
+    # 10; evidence/ab_iterate.jsonl).
     conf = (
         d.select("lang", lang_id_expr(F.col("text")).alias("_pred"))
         .groupBy("lang", "_pred")
         .agg(F.count(F.lit(1)).alias("_n"))
+        .persist()
     )
     tp = conf.filter(F.col("lang") == F.col("_pred")).select(
         "lang", F.col("_n").alias("_tp")
@@ -7623,7 +7623,7 @@ def q256_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(0.0), 6
         ).alias("f1"),
     )
-    return out
+    return compute_release(out, conf)
 
 
 def q257_time_to_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10301,7 +10301,7 @@ def q311_ann_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eagerly, then DESTROY the three probe broadcasts — otherwise repeated
     # invocations in a long session (bench loops, test suites) accumulate
     # ~1 MB of driver+executor broadcast blocks per call
-    out = out.localCheckpoint(eager=True)
+    out = compute_release(out)
     for b in (b_ids, b_q, b_qn):
         b.destroy()
     return out

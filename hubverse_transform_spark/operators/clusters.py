@@ -10,8 +10,8 @@ edges x labels + one groupBy min, both shuffled on node id), then the label
 of its label (one more join), so a path of length L converges in
 O(log L) rounds. No driver-side graph state; the fixpoint check is a count
 of changed labels per round, and running out of rounds raises. Lineage is
-cut each round with ``localCheckpoint`` (iterative plans otherwise grow
-exponentially in Catalyst); ``caching`` records where that trade holds.
+cut each round with ``caching.compute_release`` (iterative plans otherwise
+grow exponentially in Catalyst); ``caching`` records where that trade holds.
 
 Deterministic: the fixpoint labels every node with its component's minimum id
 regardless of execution order.
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hubverse_transform_spark.caching import compute_release
 
 
 def connected_components(
@@ -35,19 +37,19 @@ def connected_components(
     Returns ``(node, component)``; isolated documents (no edges) are by
     definition their own singleton clusters and are not enumerated here.
     """
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+    sym = compute_release(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).unionByName(
+            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        )
     )
-    sym = sym.localCheckpoint()
-
-    labels = (
-        sym.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
+    labels = compute_release(
+        sym.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-
+    # Its own loop rather than caching.iterate: a version on iterate (uncut
+    # start labels, an isEmpty fixpoint test) lost on q45, per-pass median
+    # 3.01 s here vs 3.06 s, and on q366, 2.58 vs 2.66 s (sf0.1, 10
+    # order-balanced pairs, parent IQR 0.40 / 0.56 s, iterate lower in 4 of
+    # 10 for both; evidence/ab_iterate.jsonl).
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels, sym.dst == labels.node)
@@ -71,7 +73,7 @@ def connected_components(
         lookup = propagated.select(
             F.col("node").alias("_lnode"), F.col("label").alias("_llabel")
         )
-        new_labels = (
+        new_labels = compute_release(
             propagated.join(lookup, propagated.label == lookup._lnode, "left")
             .select(
                 "node",
@@ -80,7 +82,6 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("_llabel"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("label") != F.col("_old")).count()
         labels = new_labels.drop("_old")

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hubverse_transform_spark.caching import compute_release
+from hubverse_transform_spark.caching import compute_release, iterate
 
 
 def pagerank(
@@ -39,61 +39,48 @@ def pagerank(
 
     Scale shape: out-degrees fold via ONE ``collect_list`` aggregation on
     ``src`` whose keys double as the node list; the node count, taken once
-    from that cached table, enters each round's projection as a LITERAL
-    (Python and JVM doubles are both IEEE-754 binary64, so
+    from that materialized table, enters each round's projection as a
+    LITERAL (Python and JVM doubles are both IEEE-754 binary64, so
     ``lit((1-d)/n)`` is bit-identical to a broadcast division), so no round
     runs a broadcast job. Each round is one join of the fraction-folded
-    edges with the rank vector on ``src`` (co-partitioned with the cached
-    adjacency, no re-exchange) and one aggregation on ``dst``; no nodes or
-    ranks are collected to the driver. Cache discipline
-    (``caching.compute_release``): the adjacency and each round's rank
-    vector are ``persist()``ed, ONE eager materialization of the final
-    (node, pr) output runs the job, and every intermediate is unpersisted
-    before returning.
-
-    Round limit: the rounds unroll into one plan, and each round's
-    unmaterialized persist makes the CacheManager's per-action
-    ``sameResult`` scan grow with plan depth, so planning blows up past
-    about 12 rounds. On a 7-node graph (``local[2]``, 8 GB driver) a run
-    took 9.0 s at 12 rounds, 24.5 s at 15, and ran the driver out of heap
-    at 18. q72 runs 3; a longer run needs a lineage cut between rounds.
+    edges with the rank vector on ``src`` and one aggregation on ``dst``,
+    cut from its lineage by ``caching.iterate``; no nodes or ranks are
+    collected to the driver.
     """
     # adjacency build: ONE exchange on src with partial collect_list
     # combining; keys are the complete node set (the input contract). The
-    # count() fills the cache eagerly — the one scalar this operator pulls
-    # to the driver, replacing 1-row broadcast jobs in every iteration.
-    adj = (
+    # count() is the one scalar this operator pulls to the driver, replacing
+    # 1-row broadcast jobs in every round.
+    adj = compute_release(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .groupBy("src")
         .agg(F.collect_list("dst").alias("_adj"))
-        .persist()
     )
     n = adj.count()
-    # frac = 1/out_degree, exploded map-side from the cached adjacency —
-    # partitioning on src survives the explode, so every iteration's join
-    # reads co-partitioned cache with zero re-exchange
+    # frac = 1/out_degree, exploded map-side from the materialized adjacency
     e_frac = adj.select(
         "src",
         F.explode("_adj").alias("dst"),
         (F.lit(1.0) / F.size("_adj")).alias("frac"),
     )
-    ranks = adj.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("pr"))
     base = (1.0 - damping) / n
-    cached_rounds: list[DataFrame] = []
-    for _ in range(iterations):
-        ranks = (
+
+    def _round(ranks: DataFrame, _: int) -> DataFrame:
+        return (
             e_frac.join(ranks, e_frac.src == ranks.node)
             .select(
                 F.col("dst").alias("node"), (F.col("pr") * F.col("frac")).alias("m")
             )
             .groupBy("node")
             .agg(F.sum("m").alias("m"))
-            .select(
-                "node", (F.lit(base) + damping * F.col("m")).alias("pr")
-            )
-        ).persist()
-        cached_rounds.append(ranks)
-    return compute_release(ranks, adj, *cached_rounds)
+            .select("node", (F.lit(base) + damping * F.col("m")).alias("pr"))
+        )
+
+    return iterate(
+        adj.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("pr")),
+        _round,
+        iterations,
+    )
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -157,26 +144,23 @@ def bfs_hops(
     frontier side is broadcast-eligible in early rounds and AQE picks that
     up at runtime), one distinct on the frontier, one anti-join against
     visited (both hash-partitioned on ``node``, exchange reuse applies).
-    ``visited`` and each frontier are persisted per round and ALL released
-    before return (cache-compute-release); fixed ``max_hops`` keeps the
-    loop bit-stable for differential oracles — no data-dependent early
-    exit, no driver-side collection of nodes.
+    The state carried between rounds is ``visited`` itself: the frontier of
+    round k is its rows at hop k-1. Fixed ``max_hops`` keeps the loop
+    bit-stable for differential oracles — no data-dependent early exit, no
+    driver-side collection of nodes.
     """
-    seed_nodes = seeds.select("node").distinct()
-    visited = seed_nodes.withColumn("hop", F.lit(0)).persist()
-    frontier = visited.select("node").persist()
-    cached = [visited, frontier]
-    for h in range(1, max_hops + 1):
+
+    def _round(visited: DataFrame, h: int) -> DataFrame:
+        frontier = visited.filter(F.col("hop") == h - 1).select(
+            F.col("node").alias(src)
+        )
         nxt = (
-            edges.join(
-                frontier.withColumnRenamed("node", src).hint("shuffle_hash"), src
-            )
+            edges.join(frontier.hint("shuffle_hash"), src)
             .select(F.col(dst).alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .persist()
         )
-        visited = visited.unionByName(nxt.withColumn("hop", F.lit(h))).persist()
-        frontier = nxt
-        cached += [nxt, visited]
-    return compute_release(visited, *cached)
+        return visited.unionByName(nxt.withColumn("hop", F.lit(h)))
+
+    seed_nodes = seeds.select("node").distinct()
+    return iterate(seed_nodes.withColumn("hop", F.lit(0)), _round, max_hops)

@@ -22,6 +22,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hubverse_transform_spark.caching import compute_release, iterate
+
 
 def profile_columns(df: DataFrame) -> DataFrame:
     """Profile every column of ``df``.
@@ -167,39 +169,34 @@ def power_iteration_top_eigen(
     output mirrored to a full matrix (dim^2 rows — tiny), each iteration
     is one join + one 64-key aggregation, and the norm is a 1-row
     broadcast. Deterministic up to float addition order (callers round);
-    the uniform start vector fixes the sign. C and each round's vector are
-    ``localCheckpoint``ed (lineage cut; ``caching`` records where losing
-    fault tolerance that way holds).
+    the uniform start vector fixes the sign. C is materialized once
+    (``caching.compute_release``) and the rounds run on ``caching.iterate``.
     """
     cov = embedding_covariance(df, vec_col)
-    covf = cov.unionByName(
-        cov.filter(F.col("i") != F.col("j")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "cov"
+    covf = compute_release(
+        cov.unionByName(
+            cov.filter(F.col("i") != F.col("j")).select(
+                F.col("j").alias("i"), F.col("i").alias("j"), "cov"
+            )
         )
-    ).localCheckpoint()
-    dim = covf.agg(F.max("i")).first()[0] + 1
-    spark = df.sparkSession
-    v = spark.createDataFrame(
-        [(j, 1.0 / dim**0.5) for j in range(dim)], "j int, x double"
     )
-    for _ in range(iters):
-        w = (
-            covf.join(v, "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("cov") * F.col("x")).alias("w"))
-        )
+    dim = covf.agg(F.max("i")).first()[0] + 1
+
+    def _cv(v: DataFrame) -> DataFrame:  # w = C v
+        return covf.join(v, "j").groupBy("i").agg(F.sum(F.col("cov") * F.col("x")).alias("w"))
+
+    def _round(v: DataFrame, _: int) -> DataFrame:
+        w = _cv(v)
         n = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("_n"))
-        v = w.crossJoin(F.broadcast(n)).select(
+        return w.crossJoin(F.broadcast(n)).select(
             F.col("i").alias("j"), (F.col("w") / F.col("_n")).alias("x")
         )
-        v = v.localCheckpoint()
-    w = (
-        covf.join(v, "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("cov") * F.col("x")).alias("w"))
-    )
+
+    v0 = [(j, 1.0 / dim**0.5) for j in range(dim)]
+    v = iterate(df.sparkSession.createDataFrame(v0, "j int, x double"), _round, iters)
     lam = (
-        w.join(v.select(F.col("j").alias("i"), "x"), "i")
+        _cv(v)
+        .join(v.select(F.col("j").alias("i"), "x"), "i")
         .agg(F.sum(F.col("w") * F.col("x")).alias("_lam"))
     )
     return v.crossJoin(F.broadcast(lam)).select(

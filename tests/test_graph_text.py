@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from hubverse_transform_spark.operators.graph import pagerank
@@ -186,11 +187,12 @@ def test_bfs_hops_seed_dedup_and_multi_seed(spark):
     assert out.count() == 4
 
 
-def test_pagerank_symmetric_fast_path_equals_general_path(spark):
+@pytest.mark.parametrize("iterations", [3, 20])
+def test_pagerank_symmetric_fast_path_equals_general_path(spark, iterations):
     """On a symmetrized, NULL-free edge list, ``pagerank``'s cut-down plan
     (adjacency keys as the node set, no nodes join, literal node count)
     matches a plain power iteration over every node and edge at 3 rounds,
-    the rounds q72 runs."""
+    the rounds q72 runs, and at 20, past where an unrolled plan failed."""
     import random
 
     rng = random.Random(20261017)
@@ -214,8 +216,8 @@ def test_pagerank_symmetric_fast_path_equals_general_path(spark):
             pr = nxt
         return pr
 
-    got = {r.node: r.pr for r in pagerank(df, iterations=3).collect()}
-    want = power_iteration(3)
+    got = {r.node: r.pr for r in pagerank(df, iterations=iterations).collect()}
+    want = power_iteration(iterations)
     assert set(got) == nodes
     for n in nodes:
         assert math.isclose(got[n], want[n], rel_tol=1e-12), n

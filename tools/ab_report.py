@@ -1,6 +1,7 @@
 """Summarize an interleaved A/B bench log (tools/ab_quiet2.py output) into a
-per-query attribution table. B is the tree whose passes are labelled
-``head``; every other label counts as A (the parent).
+per-query attribution table. Side A (the parent) is the first label in
+the log and side B the other one; two label arguments name them instead
+(a log with more than two labels needs them).
 
 Per query it prints:
 
@@ -10,14 +11,14 @@ Per query it prints:
   parent's interquartile range of per-pass medians (``A Q1-Q3``), and the
   pairs B won (its per-pass median lower than A's in the same pair) out of
   the complete pairs. These are the numbers the decision rules read: "B wins
-  >= 9 of 10 pairs", "the gap between the pmeds exceeds A's IQR", or "B is
-  higher by less than A's IQR".
+  >= 9 of 10 pairs", "the gap between the pmeds exceeds A's IQR", or
+  ``caching.py``'s keep rule (B's pmed lower, or higher by less than A's
+  IQR with B winning at least half the pairs).
 
-Pairs are consecutive passes with different labels, as ab_quiet2 writes
-them (A,B or B,A); an unmatched trailing pass counts only in the run
-columns.
+Pairs are consecutive passes, one of each side, as ab_quiet2 writes them
+(A,B or B,A); an unmatched trailing pass counts only in the run columns.
 
-Usage: python tools/ab_report.py evidence/ab_r9_r10.jsonl
+Usage: python tools/ab_report.py <log.jsonl> [<label A> <label B>]
 """
 
 from __future__ import annotations
@@ -37,29 +38,36 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
 def main() -> None:
     path = sys.argv[1]
     recs = [json.loads(line) for line in open(path) if line.strip()]
-    a_runs: dict[str, list[float]] = {}
-    b_runs: dict[str, list[float]] = {}
+    labels = list(dict.fromkeys(rec["label"] for rec in recs))
+    if len(sys.argv) > 3:
+        label_a, label_b = sys.argv[2:4]
+    elif len(labels) == 2:
+        label_a, label_b = labels
+    else:
+        sys.exit(f"{path}: labels {labels}; name side A and side B")
+    recs = [rec for rec in recs if rec["label"] in (label_a, label_b)]
+    runs: dict[str, dict[str, list[float]]] = {label_a: {}, label_b: {}}
     print("passes (interleaved):")
     for rec in recs:
         print(
             f"  {rec['label']:6s} pass={rec['pass_ts']:7.1f}s "
             f"load_pre={rec['load_pre'][0]:5.2f} busy={rec['cpu_busy_frac']:.2f}"
         )
-        tgt = a_runs if rec["label"] != "head" else b_runs
-        for q, runs in rec["queries"].items():
-            tgt.setdefault(q, []).extend(runs)
+        for q, qruns in rec["queries"].items():
+            runs[rec["label"]].setdefault(q, []).extend(qruns)
+    a_runs, b_runs = runs[label_a], runs[label_b]
     pairs = []
     i = 0
     while i + 1 < len(recs):
         x, y = recs[i], recs[i + 1]
-        if (x["label"] == "head") != (y["label"] == "head"):
-            pairs.append((y, x) if x["label"] == "head" else (x, y))
+        if x["label"] != y["label"]:
+            pairs.append((y, x) if x["label"] == label_b else (x, y))
             i += 2
         else:
             i += 1
     print()
     print(
-        f"{'query':36s} {'A min/med':>13s} {'B=head min/med':>15s} {'B/A min':>7s}"
+        f"{'query':36s} {'A min/med':>13s} {'B min/med':>15s} {'B/A min':>7s}"
         f" {'A pmed':>7s} {'B pmed':>7s} {'A Q1-Q3':>13s} {'B won':>6s}"
     )
     tot_a = tot_b = 0.0
@@ -77,7 +85,8 @@ def main() -> None:
             f" {statistics.median(pa):7.2f} {statistics.median(pb):7.2f}"
             f" {q1:6.2f}-{q3:6.2f} {won:3d}/{len(pairs):<2d}"
         )
-    print(f"\nsum of minima: A {tot_a:.2f}s  B(head) {tot_b:.2f}s  ratio {tot_b / tot_a:.3f}")
+    print(f"\nA = {label_a}, B = {label_b}")
+    print(f"sum of minima: A {tot_a:.2f}s  B {tot_b:.2f}s  ratio {tot_b / tot_a:.3f}")
 
 
 if __name__ == "__main__":

@@ -15,7 +15,8 @@ Spark mapping, both under that one failure policy (``_lambda_failure_policy``):
 
 Both reach ``sources.model_output``, which reads each file's schema on the
 driver (a CSV header line, a Parquet footer), so a file's read launches no
-Spark job and landing it runs one: the write. Bulk backfill (A14) is one
+Spark job and landing it runs one: the sink's ``toArrow`` collect, which the
+driver encodes and writes as one Parquet object. Bulk backfill (A14) is one
 glob read instead: ``sinks.backfill_hub_dataset``.
 """
 

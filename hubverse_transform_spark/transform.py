@@ -10,7 +10,7 @@ The whole pipeline is lazy — read, normalize, cast, and the provenance
 ``withColumn`` collapse into a single FileScan + Project stage. The read's
 schema comes from the file itself on the driver (a CSV header line, a
 Parquet footer; ``sources.model_output``), so building it launches no job
-and the sink write is an event's one Spark job.
+and the sink's collect (``toArrow``) is an event's one Spark job.
 
 For BULK backfill (ref faas/lambda_retrigger_model_output_add.py re-fires one
 Lambda per object), the Spark-native form is one glob read over thousands of
@@ -25,6 +25,7 @@ import posixpath
 from urllib.parse import unquote
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +35,9 @@ from hubverse_transform_spark.sources.config import read_tasks
 from hubverse_transform_spark.sources.model_output import read_model_output
 
 logger = logging.getLogger(__name__)
+
+#: bytes per py4j call when streaming an encoded object to the FileSystem
+_WRITE_CHUNK = 1 << 20
 
 
 def add_provenance_columns(df: DataFrame, round_id: str, model_id: str) -> DataFrame:
@@ -137,33 +141,46 @@ class ModelOutputPipeline:
         """Write exactly one Parquet object ``{output_path}/{file_name}.parquet``
         and return its path (A6).
 
-        Spark sinks write directories, so: ``coalesce(1)`` (a per-submission
-        file is small by construction — the hub's scale lives in the *count*
-        of files, parallelized across events) into a temp dir, then rename the
-        single part file to the deterministic name via the Hadoop FileSystem
-        API. Same-name overwrite keeps re-uploads idempotent
-        (ref model_output.py:312-322).
+        As in the reference (ref model_output.py:312-322), the submission is
+        one in-memory Arrow table written as one object: ``toArrow`` is the
+        event's one Spark job; the driver encodes the table, streams it
+        through the session's Hadoop FileSystem to ``_tmp_<file_name>.parquet``
+        and renames that over the target (idempotent re-uploads). Bound: the
+        driver holds one submission's rows, as the reference does; the hub's
+        scale is the count of files, and ``sinks.backfill_hub_dataset`` keeps
+        bulk loads on the executors. The object is what Spark's writer stores:
+        ``toArrow`` keeps the DataFrame's nullability (the provenance literals
+        are required, the file's columns optional), and floating columns get
+        no dictionary (Spark's writer falls back to PLAIN there).
         """
-        output_uri = posixpath.join(self.output_path, f"{self.file_name}.parquet")
-        tmp_dir = posixpath.join(self.output_path, f"_tmp_{self.file_name}")
-        # Observation API: collect write-side health metrics (row count, null
-        # densities) during the SAME action as the sink — no second scan of
-        # the input, which matters when the source is a remote object store
-        from pyspark.sql import Observation
+        table = df.toArrow()
+        self.last_write_metrics = {"n_rows": table.num_rows} | {
+            f"n_null_{c}": table.column(c).null_count
+            for c in ("output_type_id", "value")
+            if c in table.column_names
+        }
+        buf = pa.BufferOutputStream()
+        dictionary = [f.name for f in table.schema if not pa.types.is_floating(f.type)]
+        pq.write_table(table, buf, use_dictionary=dictionary)
+        data = buf.getvalue().to_pybytes()
 
-        metrics = [F.count(F.lit(1)).alias("n_rows")]
-        for c in ("output_type_id", "value"):
-            if c in df.columns:
-                metrics.append(
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"n_null_{c}")
-                )
-        obs = Observation(f"write_{self.file_name}")
-        df.observe(obs, *metrics).coalesce(1).write.mode("overwrite").parquet(tmp_dir)
-        self.last_write_metrics = dict(obs.get)
-        self._hadoop_rename_single_part(tmp_dir, output_uri)
-        logger.info(
-            f"Transformed data written to {output_uri} ({self.last_write_metrics})"
-        )
+        output_uri = posixpath.join(self.output_path, f"{self.file_name}.parquet")
+        tmp_uri = posixpath.join(self.output_path, f"_tmp_{self.file_name}.parquet")
+        fs, jvm = self._hadoop_fs(output_uri)
+        tmp, dest = (jvm.org.apache.hadoop.fs.Path(u) for u in (tmp_uri, output_uri))
+        out = fs.create(tmp, True)
+        try:
+            for i in range(0, len(data), _WRITE_CHUNK):
+                out.write(data[i : i + _WRITE_CHUNK])
+        finally:
+            out.close()
+        # a FileSystem reports some failures (S3A's rename among them) as a
+        # false result rather than an exception; the temp file holds the only
+        # copy of the output until the rename has succeeded
+        if fs.exists(dest):
+            _check(fs.delete(dest, False), f"delete {output_uri}")
+        _check(fs.rename(tmp, dest), f"rename {tmp_uri} to {output_uri}")
+        logger.info(f"Transformed data written to {output_uri} ({self.last_write_metrics})")
         return output_uri
 
     def add_model_output(self) -> str:
@@ -190,26 +207,6 @@ class ModelOutputPipeline:
         conf = self.spark._jsc.hadoopConfiguration()
         fs = jvm.org.apache.hadoop.fs.Path(uri).getFileSystem(conf)
         return fs, jvm
-
-    def _hadoop_rename_single_part(self, tmp_dir: str, dest: str) -> None:
-        fs, jvm = self._hadoop_fs(tmp_dir)
-        path_cls = jvm.org.apache.hadoop.fs.Path
-        part = None
-        for status in fs.listStatus(path_cls(tmp_dir)):
-            name = status.getPath().getName()
-            if name.startswith("part-") and name.endswith(".parquet"):
-                part = status.getPath()
-                break
-        if part is None:
-            raise RuntimeError(f"no part file produced under {tmp_dir}")
-        dest_path = path_cls(dest)
-        # a FileSystem reports some failures (S3A's rename among them) as a
-        # false result rather than an exception; the temp dir holds the only
-        # copy of the output until the rename has succeeded
-        if fs.exists(dest_path):
-            _check(fs.delete(dest_path, False), f"delete {dest}")
-        _check(fs.rename(part, dest_path), f"rename the part file of {tmp_dir} to {dest}")
-        _check(fs.delete(path_cls(tmp_dir), True), f"delete {tmp_dir}")
 
 
 def _check(ok: bool, what: str) -> None:

@@ -152,7 +152,7 @@ def _fail_fs(monkeypatch, mo: ModelOutputPipeline, method: str) -> None:
 
 
 def _tmp_parts(mo: ModelOutputPipeline) -> list[Path]:
-    return list(Path(mo.output_path, f"_tmp_{mo.file_name}").glob("part-*.parquet"))
+    return list(Path(mo.output_path).glob(f"_tmp_{mo.file_name}.parquet"))
 
 
 def test_false_rename_raises_and_keeps_the_temp_copy(spark, hub_dir, csv_numeric_file, monkeypatch):
@@ -220,8 +220,8 @@ def test_csv_quarantine_isolates_malformed_rows(spark, tmp_path):
 
 
 def test_write_observation_metrics(spark, hub_dir, csv_numeric_file):
-    """write_parquet surfaces row/null metrics from the Observation attached
-    to the sink action — one scan, no second pass."""
+    """write_parquet surfaces row/null metrics, counted on the collected
+    Arrow table — no second scan of the input."""
     from hubverse_transform_spark.transform import ModelOutputPipeline
 
     mo = ModelOutputPipeline(
@@ -236,6 +236,15 @@ def test_write_observation_metrics(spark, hub_dir, csv_numeric_file):
     # rows 2 (empty), 3 (NA), 5 (null) -> 3 null output_type_ids
     assert m["n_null_output_type_id"] == 3
     assert m["n_null_value"] == 0
+
+
+def test_sink_leaves_only_the_object_and_its_checksum(spark, hub_dir, csv_numeric_file):
+    """A create and then a re-upload leave no temp file and no ``_SUCCESS``."""
+    mo = make_pipeline(spark, hub_dir, csv_numeric_file)
+    for _ in range(2):
+        mo.add_model_output()
+    name = f"{mo.file_name}.parquet"
+    assert sorted(p.name for p in Path(mo.output_path).iterdir()) == [f".{name}.crc", name]
 
 
 # --- driver-side schemas: a read launches no Spark job ------------------------
@@ -367,3 +376,66 @@ def test_parquet_reads_a_name_with_a_dot_or_backtick(spark, hub_dir, name):
     df = make_pipeline(spark, hub_dir, path).read_file()
     assert df.columns == ["location", name, "value"]
     assert [tuple(r) for r in df.collect()] == [("2", "x", 0.0)]
+
+
+# --- the driver-encoded sink against Spark's own Parquet writer -----------------
+
+#: a conftest fixture's submission file, or the bytes of a CSV submission
+WRITER_PARITY_CASES = {
+    "f1_numeric": "csv_numeric_file",
+    "f2_mixed": "csv_mixed_file",
+    "f3_provenance": CSV_HEADER_CASES["f3_provenance"],
+    "f4_numeric": "parquet_numeric_file",
+    "f4_empty_strings": "parquet_empty_string_file",
+    "zero_bytes": CSV_HEADER_CASES["zero_bytes"],
+    "dot_and_backtick": CSV_HEADER_CASES["dot_and_backtick"],
+}
+
+
+def _spark_written(df, out: Path) -> Path:
+    """The general path: Spark's single-file Parquet write of ``df``."""
+    df.coalesce(1).write.parquet(str(out))
+    (part,) = out.glob("part-*.parquet")
+    return part
+
+
+@pytest.mark.parametrize("case", sorted(WRITER_PARITY_CASES))
+def test_sink_writes_what_spark_writes(spark, request, hub_dir, case):
+    """The driver-encoded object reads back as Spark's own single-file write
+    of the same DataFrame: schema, rows and the schema Spark reads."""
+    import pyarrow.parquet as pq
+
+    src = WRITER_PARITY_CASES[case]
+    if isinstance(src, str):
+        path = request.getfixturevalue(src)
+    else:
+        path = hub_dir / "raw" / "2024-07-07-teamabc.csv"
+        path.write_bytes(src)
+    mo = make_pipeline(spark, hub_dir, path)
+    df = mo.add_columns(mo.read_file())
+    general, ours = _spark_written(df, hub_dir / "general"), mo.write_parquet(df)
+    want, got = pq.read_table(general), pq.read_table(ours)
+    # types and nullability: Spark's writer keeps the provenance literals required
+    assert got.schema.equals(want.schema)
+    assert got.to_pylist() == want.to_pylist()
+    assert spark.read.parquet(ours).schema == spark.read.parquet(str(general)).schema
+
+
+def test_sink_size_stays_within_2pct_of_sparks(spark, hub_dir):
+    """6.7k random-valued rows: dictionary pages for the repeating columns,
+    PLAIN for ``value``, as Spark's writer chooses."""
+    import random
+
+    rng = random.Random(6700)
+    lines = ["origin_date,target,horizon,location,output_type,output_type_id,value"]
+    for _ in range(6700):
+        target = rng.choice(["wk inc flu hosp", "wk flu hosp rate change"])
+        q = rng.choice([0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95, 0.975, 0.99])
+        lines.append(f"2022-10-08,{target},{rng.randint(-1, 3)},{rng.randint(1, 56):02d},"
+                     f"quantile,{q},{rng.uniform(0, 5000)}")
+    path = hub_dir / "raw" / "2024-07-07-teamabc.csv"
+    path.write_text("\n".join(lines) + "\n")
+    mo = make_pipeline(spark, hub_dir, path)
+    df = mo.add_columns(mo.read_file())
+    general, ours = _spark_written(df, hub_dir / "general"), Path(mo.write_parquet(df))
+    assert ours.stat().st_size <= 1.02 * general.stat().st_size

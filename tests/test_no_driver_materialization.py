@@ -1,6 +1,7 @@
 """Data-plane discipline guard: the library must not collect datasets to the
-driver. Every ``.collect()`` / ``.toPandas()`` in ``hubverse_transform_spark``
-must be on the explicit allowlist below, each with a bounded-size
+driver. Every ``.collect()`` / ``.toPandas()`` / ``.toArrow()`` /
+``.toLocalIterator()`` in ``hubverse_transform_spark`` must be on the
+explicit allowlist below, each with a bounded-size
 justification — new entries are a design decision, not a convenience.
 """
 
@@ -20,7 +21,13 @@ ALLOWED = {
         "k seed rows + k*dim aggregated component sums per Lloyd step",
     ("operators/scd.py", "apply_changeset"):
         "limit(5) sample of duplicate keys for the MERGE-precondition error",
+    ("transform.py", "write_parquet"):
+        "one submission file's rows, encoded as one Parquet object on the driver as the "
+        "reference holds them in memory; bulk loads go through sinks.backfill_hub_dataset",
 }
+
+#: the DataFrame methods that bring a dataset's rows to the driver
+MATERIALIZING = ("collect", "toPandas", "toArrow", "toLocalIterator")
 
 
 def _offenders():
@@ -36,7 +43,7 @@ def _offenders():
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Attribute)
-                and node.attr in ("collect", "toPandas")
+                and node.attr in MATERIALIZING
                 and isinstance(getattr(node, "ctx", None), ast.Load)
             ):
                 fn = next(
